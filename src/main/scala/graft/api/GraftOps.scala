@@ -97,10 +97,10 @@ object GraftOps {
     * `quality` column (unrounded; gate on round(…, 6) like pipeline_e2e
     * if the threshold must be engine-portable). */
   def qualityScore(text: Column, stopTokens: Seq[String]): Column = {
-    val toks = split(text, " ")
-    val stopRatio = size(filter(toks, t => t.isin(stopTokens: _*))).cast(DoubleType) /
-      size(toks).cast(DoubleType)
-    log(lit(1.0) + size(toks).cast(LongType)) * (lit(1.0) - stopRatio)
+    val n = graft.functions.GraftFunctions.tokCount(text)
+    val stopRatio = graft.functions.GraftFunctions.tokHits(text, stopTokens).cast(DoubleType) /
+      n.cast(DoubleType)
+    log(lit(1.0) + n) * (lit(1.0) - stopRatio)
   }
 
   /** Portable md5 mod-bucket in 0..buckets-1 — sample_hash /
@@ -129,50 +129,27 @@ object GraftOps {
       .agg(min(col("gid")).as("id"), count(lit(1)).as("n_copies"))
       .select(col("id"), col("n_copies"))
 
-  /** MinHash-LSH verified near-dup pairs — dedup_near_minhash: distinct
-    * 3-token shingles → 16 portable minhashes in one partial-aggregating
-    * groupBy → 8 bands of r=2 → equality-bucket candidates →
-    * exact-Jaccard verify ≥ threshold. Returns `(ida, idb, jaccard)`
-    * with ida < idb and unrounded jaccard. Persist `df` (or its shingle
-    * projection) before calling if you evaluate the result repeatedly. */
+  /** MinHash-LSH verified near-dup pairs — dedup_near_minhash's
+    * construction ([[graft.operators.LlmText.minhashPairsOf]]) over
+    * caller docs: one hashed 3-token-gram pass shuffled once into each
+    * doc's distinct gram set, 16 portable minhashes over that set, 8
+    * bands of r=2 → equality-bucket candidates, then an exact-Jaccard
+    * verify that intersects the two per-doc gram sets (array_intersect)
+    * — the verify moves one row per doc, never one per shingle, so the
+    * gram pass runs once and `df` need not be persisted. Returns
+    * `(ida, idb, jaccard)` with ida < idb and unrounded jaccard ≥
+    * threshold. Rows sharing an id are one doc (their gram sets union);
+    * docs under 3 tokens and NULL text have no grams. */
   def minhashNearDupPairs(df: DataFrame, id: Column, text: Column,
-                          threshold: Double = 0.8): DataFrame = {
-    val P = 2147483647L
-    val sh = df
-      .select(id.as("gid"), split(text, " ").as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("gid"), explode(expr(
-        "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"))
-        .as("s"))
-      .distinct()
-    val hashed = sh.withColumn("hm",
-      graft.functions.GraftFunctions.md5Prefix48(col("s")) % P)
-    val mins = (0 until 16).map { i =>
-      min((col("hm") * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
-    }
-    val sig = hashed.groupBy(col("gid")).agg(mins.head, mins.tail: _*)
-    val bands = sig.select(col("gid"), explode(array((0 until 8).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
-      }: _*)).as("b"))
-      .select(col("gid"), col("b.band").as("band"), col("b.s0").as("s0"), col("b.s1").as("s1"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.s0") === col("y.s0") && col("x.s1") === col("y.s1") &&
-        col("x.gid") < col("y.gid"))
-      .select(col("x.gid").as("ida"), col("y.gid").as("idb"))
-      .distinct()
-    val cnt = sh.groupBy(col("gid")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.select(col("gid").as("ida"), col("s")), "ida")
-      .join(sh.select(col("gid").as("idb"), col("s")), Seq("idb", "s"))
-      .groupBy(col("ida"), col("idb")).agg(count(lit(1)).as("ni"))
-    inter
-      .join(cnt.select(col("gid").as("ida"), col("n").as("na")), "ida")
-      .join(cnt.select(col("gid").as("idb"), col("n").as("nb")), "idb")
-      .withColumn("jaccard", col("ni").cast(DoubleType) / (col("na") + col("nb") - col("ni")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("ida"), col("idb"), col("jaccard"))
-  }
+                          threshold: Double = 0.8): DataFrame =
+    graft.operators.LlmText.minhashPairsOf(gramsOf(df, id, text), threshold)
+      .select(col("da").as("ida"), col("db").as("idb"), col("j").as("jaccard"))
+
+  /** (doc_id, gh) hashed word 3-grams of caller docs — the gram pass the
+    * minhash functions share with the declared queries. */
+  private def gramsOf(df: DataFrame, id: Column, text: Column): DataFrame =
+    graft.operators.LlmText.gramsOf(df.select(id.as("doc_id"), text.as("text")))
+      .select(col("doc_id"), col("gh"))
 
   /** Connected components over an undirected pair list — dedup_clusters'
     * clustering step: bounded min-label propagation (single-reference
@@ -567,32 +544,17 @@ object GraftOps {
   }
 
   /** Banded minhash signatures for an arbitrary (id, text) frame —
-    * dedup_incremental's index/probe construction (identical constants
-    * to [[minhashNearDupPairs]]: 16 minhashes, 8 bands of r=2).
-    * Returns `(id, band, s0, s1)`; write it partitioned by `band` as a
-    * persistent dedup index, and probe a new batch by equality-joining
-    * its bands against the index on (band, s0, s1) — the incremental
-    * shape where per-ingest cost scales with the batch, not the corpus. */
-  def minhashBandSignatures(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val P = 2147483647L
-    val sh = df
-      .select(id.as("gid"), split(text, " ").as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("gid"), explode(expr(
-        "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"))
-        .as("s"))
-      .distinct()
-      .withColumn("hm", conv(substring(md5(col("s")), 1, 12), 16, 10).cast(LongType) % P)
-    val mins = (0 until 16).map { i =>
-      min((col("hm") * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
-    }
-    val sig = sh.groupBy(col("gid")).agg(mins.head, mins.tail: _*)
-    sig.select(col("gid").as("id"), explode(array((0 until 8).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
-      }: _*)).as("b"))
-      .select(col("id"), col("b.band").as("band"),
-              col("b.s0").as("s0"), col("b.s1").as("s1"))
-  }
+    * dedup_incremental's index/probe construction
+    * ([[graft.operators.LlmText.minhashBands]]: the
+    * [[minhashNearDupPairs]] signature, 16 minhashes in one groupBy,
+    * 8 bands of r=2). Returns `(id, band, s0, s1)`; write it
+    * partitioned by `band` as a persistent dedup index, and probe a new
+    * batch by equality-joining its bands against the index on
+    * (band, s0, s1) — the incremental shape where per-ingest cost
+    * scales with the batch, not the corpus. */
+  def minhashBandSignatures(df: DataFrame, id: Column, text: Column): DataFrame =
+    graft.operators.LlmText.minhashBands(gramsOf(df, id, text))
+      .select(col("doc_id").as("id"), col("band"), col("s0"), col("s1"))
 
   /** Per-vector int8 affine quantization — embed_quantize's storage
     * shape: `struct(lo, hi, qscale, q: array<bigint>)` with

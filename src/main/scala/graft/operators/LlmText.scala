@@ -755,79 +755,86 @@ object LlmText extends QueryGroup {
       .select(col("doc_id"), col("n_copies"))
       .orderBy(col("doc_id"))
 
-  /** MinHash-LSH near-dup: distinct 3-token shingles → 16 portable
-    * minhashes ((aᵢ·h+bᵢ) mod p over md5-derived h) → 8 bands of r=2 →
-    * equality-bucket candidate pairs → exact-Jaccard verify ≥ 0.8.
+  /** 16-minhash LSH bands over a (doc_id, gh [, keep…]) gram frame:
+    * one partial-aggregating groupBy(doc_id, keep…) computes the 16
+    * portable minhashes ((aᵢ·h+bᵢ) mod p, aᵢ = 2i+3, bᵢ = 7919i+13,
+    * h = gh mod p) — no 16× row blow-up via a params crossJoin — and
+    * 8 bands of r=2 turn them into (doc_id, keep…, band, s0, s1), the
+    * equality-bucket key of the candidate self-join and of the
+    * persisted band index. min is idempotent, so raw gram rows and
+    * their distinct set give the same signature. Over a SUBSET of the
+    * shared gram base this is the incremental path: signature only the
+    * new batch, never the corpus. */
+  private[graft] def minhashBands(grams: DataFrame, keep: String*): DataFrame = {
+    val P = 2147483647L
+    val mins = (0 until 16).map { i =>
+      min((col("gh") % P * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
+    }
+    val ids = col("doc_id") +: keep.map(col)
+    grams.groupBy(ids: _*).agg(mins.head, mins.tail: _*)
+      .select(ids :+ explode(array((0 until 8).map { j =>
+          struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
+        }: _*)).as("b"): _*)
+      .select(ids ++ Seq(col("b.band").as("band"),
+              col("b.s0").as("s0"), col("b.s1").as("s1")): _*)
+  }
+
+  /** MinHash-LSH near-dup pairs over a (doc_id, gh) gram frame
+    * ([[gramsOf]]; repeated rows and repeated doc_ids allowed — a doc's
+    * set is the union of its rows). The one construction behind
+    * dedup_near_minhash, the dedup_clusters* pair graph and
+    * [[graft.api.GraftOps.minhashNearDupPairs]]:
+    *  1. ONE groupBy(doc_id) shuffle of the gram pass collects each
+    *     doc's distinct gram set (collect_set) — the only pass over the
+    *     grams;
+    *  2. the signature is taken over that set exploded in place (the
+    *     sets are already partitioned by doc_id, so no second shuffle)
+    *     → 8 bands of r=2 → equality-bucket candidate pairs (da < db);
+    *  3. a length filter drops candidates whose set sizes alone bound
+    *     j below the threshold (j ≤ min(na, nb)/max(na, nb));
+    *  4. the verify joins each candidate to the two per-doc sets and
+    *     takes ni = |A∩B| (array_intersect), na = |A|, nb = |B| — the
+    *     distinct-gh cardinalities an exploded (doc, gram) join would
+    *     count, moving one row per doc instead of one per gram.
+    * Returns (da, db, j) with unrounded j = ni/(na+nb−ni) ≥ threshold.
     * The oracle MIRRORS the banding construction in SQL (identical
     * md5 minhashes, bands, candidate join), so parity holds by
     * construction — not empirically via banding's 1-(1-J²)⁸ ≈ 0.9997
-    * recall at J≥0.8 (LawsSpec keeps the recall-vs-exact superset law;
-    * a fixture pair banding misses would fail that test, not the
-    * driver gate). */
-  /** One persisted shingle set per (session, sf dir, fixture
-    * fingerprint): repeated invocations of dedup_near_minhash in one
-    * session (Verify → Bench → specs) reuse the same cached DataFrame
-    * instead of registering a fresh never-unpersisted copy each time,
-    * and the fingerprint key means a fixture regenerated mid-session
-    * gets a fresh entry instead of stale shingles (the scratch-cache
-    * policy). Entries live for the JVM — bounded by the handful of
-    * (session, sf) combos a process ever sees. */
-  private val shCache =
-    new FingerprintCache
-
-  /** Verified minhash near-dup pairs (da < db, unrounded jaccard ≥ 0.8)
-    * — the shared pair graph consumed by both the pair-listing query
-    * (dedup_near_minhash) and the connected-components clustering
-    * (dedup_clusters). */
-  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame = {
-    val P = 2147483647L
-    // Distinct HASHED shingle set derived from the shared gram base
-    // (round-15 advice: one tokenize+hash pass for all gram consumers).
-    // Distinct-on-gh equals distinct-on-string modulo 48-bit collisions;
-    // the oracle mirrors the same hash-first construction, so the two
-    // engines share identical (negligible) collision behavior — and the
-    // verify joins below now shuffle 8-byte digests instead of shingle
-    // text, the shape the scaladoc always claimed for 100 TB.
-    val sh = shCache.getOrElseUpdate(s, d, Tables.fingerprint(d, "documents"))(
-      gramsCached(s, d)
-      .select(col("doc_id"), col("gh"))
-      .distinct()
-      // the shingle set feeds signature building AND both verify joins —
-      // persisted, the distinct runs once per evaluation instead of
-      // three times (at 100 TB: checkpoint to the cluster store instead)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val hashed = sh.withColumn("hm", col("gh") % P)
-    // All 16 minhashes in ONE partial-aggregating groupBy (no 16× row
-    // blow-up via a params crossJoin — that shape shuffles 16× the
-    // shingle set and cannot survive 100 TB).
-    val mins = (0 until 16).map { i =>
-      min((col("hm") * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
-    }
-    val sig = hashed.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val bands = sig.select(col("doc_id"), explode(array((0 until 8).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
-      }: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.s0").as("s0"), col("b.s1").as("s1"))
+    * recall at J≥0.8 (LawsSpec keeps the recall-vs-exact superset law).
+    * Distinct-on-gh equals distinct-on-gram-text modulo 48-bit md5
+    * collisions, which the oracle shares. */
+  private[graft] def minhashPairsOf(grams: DataFrame, threshold: Double): DataFrame = {
+    val sets = grams.groupBy(col("doc_id")).agg(collect_set(col("gh")).as("gs"))
+    val bands = minhashBands(
+      sets.select(col("doc_id"), size(col("gs")).as("n"), explode(col("gs")).as("gh")), "n")
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") &&
         col("x.s0") === col("y.s0") && col("x.s1") === col("y.s1") &&
         col("x.doc_id") < col("y.doc_id"))
+      // fl(ni/(na+nb−ni)) ≤ fl(min/max) because division rounds
+      // monotonically, so this never drops a pair the verify keeps
+      .filter(least(col("x.n"), col("y.n")).cast(DoubleType) /
+        greatest(col("x.n"), col("y.n")) >= threshold)
       .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
       .distinct()
-    // Verify joins candidate pairs against the persisted shingle set —
-    // the banding pipeline is never re-derived.
-    val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("da"), col("gh")), "da")
-      .join(sh.select(col("doc_id").as("db"), col("gh")), Seq("db", "gh"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("ni"))
-    inter
-      .join(cnt.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(cnt.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+    cand
+      .join(sets.select(col("doc_id").as("da"), col("gs").as("ga")), "da")
+      .join(sets.select(col("doc_id").as("db"), col("gs").as("gb")), "db")
+      .select(col("da"), col("db"),
+        size(array_intersect(col("ga"), col("gb"))).as("ni"),
+        size(col("ga")).as("na"), size(col("gb")).as("nb"))
       .withColumn("j", col("ni").cast(DoubleType) / (col("na") + col("nb") - col("ni")))
-      .filter(col("j") >= 0.8)
+      // ni > 0: a band collision on gh mod p alone shares no gram
+      .filter(col("ni") > 0 && col("j") >= threshold)
       .select(col("da"), col("db"), col("j"))
   }
+
+  /** Verified minhash near-dup pairs (da < db, unrounded jaccard ≥ 0.8)
+    * over the shared fixture gram base — the pair graph consumed by both
+    * the pair-listing query (dedup_near_minhash) and the
+    * connected-components clustering (dedup_clusters). */
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
+    minhashPairsOf(gramsCached(s, d).select(col("doc_id"), col("gh")), 0.8)
 
   /** One persisted DataFrame per derived pair graph / edge list per
     * (session, sf dir, fixture fingerprint): the label-propagation loop
@@ -1197,26 +1204,6 @@ object LlmText extends QueryGroup {
     * the ONE shared [[multiLabelProp]] pass — this rung pays nothing
     * its siblings haven't already paid. */
   private val dedupClustersMultimodal: QFn = (s, d) => unionClusters(s, d, "mm")
-
-  /** 16-minhash LSH bands (8 bands × r=2) over a (doc_id, gh) gram
-    * frame — the [[minhashPairs]] signature construction (identical
-    * constants) factored so it can run over a SUBSET of the shared
-    * gram base: the incremental path signatures only the new batch,
-    * never the corpus. */
-  private def minhashBands(grams: DataFrame): DataFrame = {
-    val P = 2147483647L
-    val sh = grams.select(col("doc_id"), col("gh")).distinct()
-    val hashed = sh.withColumn("hm", col("gh") % P)
-    val mins = (0 until 16).map { i =>
-      min((col("hm") * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
-    }
-    val sig = hashed.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    sig.select(col("doc_id"), explode(array((0 until 8).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
-      }: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"),
-              col("b.s0").as("s0"), col("b.s1").as("s1"))
-  }
 
   /** Persisted banded minhash index of the "already-ingested" corpus
     * slice (doc_id % 5 ≠ 0), hive-partitioned by band — the layout an

@@ -31,6 +31,22 @@ class ApiSpec extends AnyFunSuite {
     assert(rows(api) == rows(declared))
   }
 
+  test("qualityScore's token kernels equal the split/filter HOF form on edge text") {
+    import spark.implicits._
+    val stop = Seq("the", "a", "é")
+    val docs = Seq(None, Some(""), Some(" "), Some("   "), Some(" the  a "),
+        Some("the"), Some("é é 文字 the"), Some("naïve—文 a b"), Some("a b c the of"))
+      .toDF("text")
+      .union(Tables.documents(spark, sf).select(col("text")))
+    val toks = split(col("text"), " ")
+    val hof = log(lit(1.0) + size(toks).cast("long")) * (lit(1.0) -
+      size(filter(toks, t => t.isin(stop: _*))).cast("double") / size(toks).cast("double"))
+    val diff = docs.select(col("text"),
+        GraftOps.qualityScore(col("text"), stop).as("kernel"), hof.as("hof"))
+      .filter(!(col("kernel") <=> col("hof")))
+    assert(diff.count() == 0, diff.collect().mkString("\n"))
+  }
+
   test("hashBucket reproduces the split_train_val membership") {
     val api = Tables.documents(spark, sf)
       .withColumn("split",

@@ -201,6 +201,88 @@ class DedupProps extends Properties("graft") {
       }
     }
 
+  /** The exploded-join MinHash construction GraftOps.minhashNearDupPairs
+    * had before the per-doc-set verify: distinct shingle STRINGS
+    * (interpreted transform lambda), 16 minhashes over their md5
+    * prefixes, 8 bands of r=2, then a verify that joins every candidate
+    * to both docs' exploded (id, shingle) rows and counts matches. */
+  private def explodedJoinPairs(df: org.apache.spark.sql.DataFrame,
+                                threshold: Double): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val P = 2147483647L
+    val sh = df
+      .select(col("doc_id").as("gid"), split(col("text"), " ").as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("gid"), explode(expr(
+        "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"))
+        .as("s"))
+      .distinct()
+    val hashed = sh.withColumn("hm",
+      conv(substring(md5(col("s")), 1, 12), 16, 10).cast("long") % P)
+    val mins = (0 until 16).map { i =>
+      min((col("hm") * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
+    }
+    val sig = hashed.groupBy(col("gid")).agg(mins.head, mins.tail: _*)
+    val bands = sig.select(col("gid"), explode(array((0 until 8).map { j =>
+        struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
+      }: _*)).as("b"))
+      .select(col("gid"), col("b.band").as("band"), col("b.s0").as("s0"), col("b.s1").as("s1"))
+    val cand = bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") &&
+        col("x.s0") === col("y.s0") && col("x.s1") === col("y.s1") &&
+        col("x.gid") < col("y.gid"))
+      .select(col("x.gid").as("ida"), col("y.gid").as("idb"))
+      .distinct()
+    val cnt = sh.groupBy(col("gid")).agg(count(lit(1)).as("n"))
+    cand
+      .join(sh.select(col("gid").as("ida"), col("s")), "ida")
+      .join(sh.select(col("gid").as("idb"), col("s")), Seq("idb", "s"))
+      .groupBy(col("ida"), col("idb")).agg(count(lit(1)).as("ni"))
+      .join(cnt.select(col("gid").as("ida"), col("n").as("na")), "ida")
+      .join(cnt.select(col("gid").as("idb"), col("n").as("nb")), "idb")
+      .withColumn("jaccard", col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("ida"), col("idb"), col("jaccard"))
+  }
+
+  /** Generated (doc_id, text) corpora for the minhash verify fold: each
+    * base doc gets an exact copy and a one-token edit (so every case has
+    * verified pairs), plus a doc repeating one shingle, sub-3-token,
+    * empty, whitespace-only, multi-byte and NULL texts, and a second row
+    * under an existing id (its shingles join that doc's set). */
+  private val minhashCorpusGen: Gen[Seq[(Long, Option[String])]] = {
+    val word = Gen.oneOf("the", "fast", "key", "order", "sort", "scan", "é", "文字")
+    for {
+      bases <- Gen.listOfN(3, Gen.choose(4, 12).flatMap(Gen.listOfN(_, word)))
+      edits <- Gen.listOfN(3, Gen.zip(Gen.choose(0, 11), word))
+      extra <- Gen.listOfN(2, word)
+      dupOf <- Gen.choose(0, 2)
+    } yield {
+      val related = bases.zip(edits).flatMap { case (b, (at, w)) =>
+        Seq(b, b, b.updated(at % b.length, w)).map(t => Some(t.mkString(" ")))
+      }
+      val odd = Seq(Some("key sort key sort key sort key"), Some("fast é"), Some("文字"),
+        Some(""), Some("   "), Some("    "), None,
+        Some((extra ++ bases(dupOf).take(3)).mkString(" ")))
+      val docs = (related ++ odd).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      docs :+ ((dupOf * 3).toLong -> Some(extra.mkString(" ") + " fast fast"))
+    }
+  }
+
+  property("minhash per-doc-set verify equals the exploded-join verify row for row") =
+    Prop.forAll(minhashCorpusGen, Gen.oneOf(0.3, 0.5, 0.8, 1.0)) { (docs, threshold) =>
+      val spark = TestSpark.spark
+      import spark.implicits._
+      val df = docs.toDF("doc_id", "text")
+      def pairs(p: org.apache.spark.sql.DataFrame) =
+        p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val got = pairs(api.GraftOps.minhashNearDupPairs(
+        df, org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("text"), threshold))
+      val want = pairs(explodedJoinPairs(df, threshold))
+      (want.nonEmpty && got == want) :| s"got=$got want=$want"
+    }
+
   private val corpusGen = Gen.listOfN(6, Gen.listOfN(10, Gen.oneOf(
     "the", "fast", "key", "order", "sort", "table", "scan", "merge")))
 

@@ -106,6 +106,21 @@ class PlanSpec extends AnyFunSuite {
     assert(bnlj <= 4, s"dedup_embcos pair-graph build has $bnlj BroadcastNestedLoopJoins:\n$p0")
   }
 
+  test("GraftOps.minhashNearDupPairs verifies per-doc gram sets, never per-gram rows") {
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, CartesianProductExec}
+    val pairs = graft.api.GraftOps.minhashNearDupPairs(
+      Tables.documents(spark, TestSpark.sf), col("doc_id"), col("text"))
+    val p = pairs.queryExecution.sparkPlan
+    assert(p.collect { case c: CartesianProductExec => c }.isEmpty, p.toString)
+    val joins = p.collect { case j: BaseJoinExec => j }
+    // the band self-join keys on (band, s0, s1); the verify joins key on
+    // a candidate's doc id alone — no join carries a gram (hash or text)
+    val keys = joins.flatMap(j => j.leftKeys ++ j.rightKeys)
+      .flatMap(_.references.map(_.name)).toSet
+    assert(joins.nonEmpty && keys.subsetOf(Set("band", "s0", "s1", "da", "db")),
+      s"join keys $keys:\n$p")
+  }
+
   test("sink_bucketed joins the bucketed tables without a shuffle exchange") {
     import org.apache.spark.sql.functions.col
     // materialize the bucketed tables (also runs the full oracled query)
