@@ -89,9 +89,23 @@ import org.apache.spark.sql.types._
   */
 object GraftOps {
 
-  /** Lowercase, strip non-alnum, collapse whitespace — text_normalize. */
+  /** Lowercase, strip non-alnum, collapse whitespace — text_normalize:
+    * regexp_replace(trim(regexp_replace(lower(text), '[^a-z0-9 ]', '')),
+    * ' +', ' '). ASCII rows take the one-pass `ascii_norm(text, 'alnum')`
+    * kernel; a row with any non-ASCII byte gets NULL from it and runs
+    * the exact lower()/regex chain, so the value is the chain's for
+    * every row. */
   def normalizeText(text: Column): Column =
-    regexp_replace(trim(regexp_replace(lower(text), "[^a-z0-9 ]", "")), " +", " ")
+    coalesce(graft.functions.GraftFunctions.asciiNorm(text, "alnum"),
+      regexp_replace(trim(regexp_replace(lower(text), "[^a-z0-9 ]", "")), " +", " "))
+
+  /** Lowercase, trim, collapse space runs — the text dedupExact
+    * digests: regexp_replace(trim(lower(text)), ' +', ' '), with the
+    * same ASCII kernel / exact-chain split as [[normalizeText]]
+    * (`ascii_norm(text, 'dedup')`). */
+  private[graft] def dedupNormalize(text: Column): Column =
+    coalesce(graft.functions.GraftFunctions.asciiNorm(text, "dedup"),
+      regexp_replace(trim(lower(text)), " +", " "))
 
   /** Log-length × (1 − stopword-ratio) quality score — text_quality's
     * `quality` column (unrounded; gate on round(…, 6) like pipeline_e2e
@@ -120,36 +134,36 @@ object GraftOps {
   }
 
   /** Exact-dedup survivors — dedup_exact: one row per distinct
-    * normalized text, `(id, n_copies)` with survivor = min id. The
-    * shuffle carries 16-byte digests, not documents. */
+    * normalized text ([[dedupNormalize]]: lowercase, trim, collapse
+    * spaces), `(id, n_copies)` with survivor = min id. The shuffle
+    * carries 16-byte digests, not documents. */
   def dedupExact(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.select(id.as("gid"),
-        md5(regexp_replace(trim(lower(text)), " +", " ")).as("nh"))
+    df.select(id.as("gid"), md5(dedupNormalize(text)).as("nh"))
       .groupBy(col("nh"))
       .agg(min(col("gid")).as("id"), count(lit(1)).as("n_copies"))
       .select(col("id"), col("n_copies"))
 
   /** MinHash-LSH verified near-dup pairs — dedup_near_minhash's
     * construction ([[graft.operators.LlmText.minhashPairsOf]]) over
-    * caller docs: one hashed 3-token-gram pass shuffled once into each
-    * doc's distinct gram set, 16 portable minhashes over that set, 8
-    * bands of r=2 → equality-bucket candidates, then an exact-Jaccard
-    * verify that intersects the two per-doc gram sets (array_intersect)
-    * — the verify moves one row per doc, never one per shingle, so the
-    * gram pass runs once and `df` need not be persisted. Returns
-    * `(ida, idb, jaccard)` with ida < idb and unrounded jaccard ≥
-    * threshold. Rows sharing an id are one doc (their gram sets union);
-    * docs under 3 tokens and NULL text have no grams. */
+    * caller docs: each row's distinct word-3-gram hash set is built in
+    * the row (`gram_hashes48`), rows sharing an id are unioned by one
+    * doc_id shuffle of those per-doc arrays, `minhash16` signs each
+    * set in the row, 8 bands of r=2 → equality-bucket candidates, then
+    * an exact-Jaccard verify that intersects the two per-doc gram sets
+    * (array_intersect) — no stage ever moves one row per gram, so `df`
+    * is read once and need not be persisted. Returns `(ida, idb,
+    * jaccard)` with ida < idb and unrounded jaccard ≥ threshold. Rows
+    * sharing an id are one doc (their gram sets union); docs under 3
+    * tokens and NULL text have no grams. */
   def minhashNearDupPairs(df: DataFrame, id: Column, text: Column,
                           threshold: Double = 0.8): DataFrame =
-    graft.operators.LlmText.minhashPairsOf(gramsOf(df, id, text), threshold)
+    graft.operators.LlmText.minhashPairsOf(gramSetsOf(df, id, text), threshold)
       .select(col("da").as("ida"), col("db").as("idb"), col("j").as("jaccard"))
 
-  /** (doc_id, gh) hashed word 3-grams of caller docs — the gram pass the
+  /** (doc_id, gs) per-doc gram-hash sets of caller docs — the set the
     * minhash functions share with the declared queries. */
-  private def gramsOf(df: DataFrame, id: Column, text: Column): DataFrame =
-    graft.operators.LlmText.gramsOf(df.select(id.as("doc_id"), text.as("text")))
-      .select(col("doc_id"), col("gh"))
+  private def gramSetsOf(df: DataFrame, id: Column, text: Column): DataFrame =
+    graft.operators.LlmText.gramSetsOf(df.select(id.as("doc_id"), text.as("text")))
 
   /** Connected components over an undirected pair list — dedup_clusters'
     * clustering step: bounded min-label propagation (single-reference
@@ -166,14 +180,19 @@ object GraftOps {
   }
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03/MOSS) over
-    * caller docs — text_winnowing's construction parameterized: min
+    * caller docs — text_winnowing's construction
+    * ([[graft.operators.LlmText.winnowFpsOf]]) parameterized: min
     * word-3-gram md5 hash per 4-window, rightmost position on ties,
     * full windows only, deduped. Returns (doc_id, fp_pos, fp_hash)
     * with the guarantee that any shared run of ≥ 6 tokens between two
     * docs yields a shared fp_hash — feed the output to an equality
     * self-join on fp_hash (cap hashes seen in too many docs first,
     * the boilerplate-stop step) for guarantee-backed near-dup
-    * candidates. Scale: per-doc windows only, 16-byte shuffle rows.
+    * candidates. Rows sharing an id are one doc whose fingerprints are
+    * the union of the rows' fingerprint sets (each row is winnowed on
+    * its own; no window spans two rows). Scale: the windows run inside
+    * each row (`winnow_enc` over `gram_hashes48`), and the one shuffle
+    * is the distinct over 24-byte fingerprint rows.
     * Per-doc token cap: the (hash, position) pair is packed into one
     * int64 with a 2³¹ position radix, so documents up to 2³¹ ≈ 2.1e9
     * tokens encode exactly; beyond that the packing would overflow
@@ -546,14 +565,15 @@ object GraftOps {
   /** Banded minhash signatures for an arbitrary (id, text) frame —
     * dedup_incremental's index/probe construction
     * ([[graft.operators.LlmText.minhashBands]]: the
-    * [[minhashNearDupPairs]] signature, 16 minhashes in one groupBy,
-    * 8 bands of r=2). Returns `(id, band, s0, s1)`; write it
+    * [[minhashNearDupPairs]] signature, `minhash16` over each doc's
+    * gram set, 8 bands of r=2; docs with no gram get no band). Returns
+    * `(id, band, s0, s1)`; write it
     * partitioned by `band` as a persistent dedup index, and probe a new
     * batch by equality-joining its bands against the index on
     * (band, s0, s1) — the incremental shape where per-ingest cost
     * scales with the batch, not the corpus. */
   def minhashBandSignatures(df: DataFrame, id: Column, text: Column): DataFrame =
-    graft.operators.LlmText.minhashBands(gramsOf(df, id, text))
+    graft.operators.LlmText.minhashBands(gramSetsOf(df, id, text))
       .select(col("doc_id").as("id"), col("band"), col("s0"), col("s1"))
 
   /** Per-vector int8 affine quantization — embed_quantize's storage

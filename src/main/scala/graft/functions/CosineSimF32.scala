@@ -295,6 +295,28 @@ object GraftFunctions {
   def dedupTokens(c: Column): Column =
     GraftBridge.column(DedupTokens(GraftBridge.expression(c)))
 
+  /** Column-API entry for the word-3-gram md5_prefix48 array — value-
+    * identical to the gram base's gh per offset (pinned in TextSigSpec). */
+  def gramHashes48(c: Column): Column =
+    GraftBridge.column(GramHashes48(GraftBridge.expression(c)))
+
+  /** Column-API entry for a document's winnowing selections (enc
+    * packing) over its gram hashes (pinned in TextSigSpec). */
+  def winnowEnc(c: Column): Column =
+    GraftBridge.column(WinnowEnc(GraftBridge.expression(c)))
+
+  /** Column-API entry for the 16 portable minhashes of a gram-hash
+    * array, NULL when it is empty (pinned in TextSigSpec). */
+  def minhash16(c: Column): Column =
+    GraftBridge.column(Minhash16(GraftBridge.expression(c)))
+
+  /** Column-API entry for the ASCII normalize kernel: `mode` is
+    * "alnum" or "dedup"; NULL for non-ASCII rows (pinned in
+    * TextSigSpec). */
+  def asciiNorm(c: Column, mode: String): Column =
+    GraftBridge.column(AsciiNorm(GraftBridge.expression(c),
+      org.apache.spark.sql.catalyst.expressions.Literal(mode)))
+
   /** Session-level registration so queries can say `expr("cosine_f32(a,b)")`
     * (plus the round-18 fused text-signal kernels). */
   def ensureRegistered(spark: SparkSession): Unit = {
@@ -328,6 +350,14 @@ object GraftFunctions {
       "l2sq_f64", exprs => L2SqF64(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "shingle_md5s", exprs => ShingleMd5s(exprs(0), exprs(1)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "gram_hashes48", exprs => GramHashes48(exprs(0)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "winnow_enc", exprs => WinnowEnc(exprs(0)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "minhash16", exprs => Minhash16(exprs(0)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "ascii_norm", exprs => AsciiNorm(exprs(0), exprs(1)), "built-in")
   }
 
   /** `hll_distinct(x, rsd)`: the compact-buffer HLL++ (identical
@@ -409,6 +439,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("shingle_md5s"),
       new ExpressionInfo(classOf[ShingleMd5s].getName, "shingle_md5s"),
       (exprs: Seq[Expression]) => ShingleMd5s(exprs(0), exprs(1))))
+    e.injectFunction((
+      FunctionIdentifier("gram_hashes48"),
+      new ExpressionInfo(classOf[GramHashes48].getName, "gram_hashes48"),
+      (exprs: Seq[Expression]) => GramHashes48(exprs(0))))
+    e.injectFunction((
+      FunctionIdentifier("winnow_enc"),
+      new ExpressionInfo(classOf[WinnowEnc].getName, "winnow_enc"),
+      (exprs: Seq[Expression]) => WinnowEnc(exprs(0))))
+    e.injectFunction((
+      FunctionIdentifier("minhash16"),
+      new ExpressionInfo(classOf[Minhash16].getName, "minhash16"),
+      (exprs: Seq[Expression]) => Minhash16(exprs(0))))
+    e.injectFunction((
+      FunctionIdentifier("ascii_norm"),
+      new ExpressionInfo(classOf[AsciiNorm].getName, "ascii_norm"),
+      (exprs: Seq[Expression]) => AsciiNorm(exprs(0), exprs(1))))
     e.injectFunction((
       FunctionIdentifier("histogram10"),
       new ExpressionInfo(classOf[HistogramAgg].getName, "histogram10"),

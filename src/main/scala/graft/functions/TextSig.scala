@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -189,6 +189,25 @@ object TextSig {
 
   private val hexChars = "0123456789abcdef".getBytes
 
+  /** Byte offset of every single-space token's first byte (token 0
+    * starts at 0), the split(text, " ", -1) token boundaries read off
+    * the raw bytes. */
+  private def tokenStarts(b: Array[Byte]): Array[Int] = {
+    val nb = b.length
+    var ntok = 1
+    var i = 0
+    while (i < nb) { if (b(i) == 0x20) ntok += 1; i += 1 }
+    val starts = new Array[Int](ntok)
+    var t = 1
+    i = 0
+    while (i < nb) { if (b(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
+    starts
+  }
+
+  /** End (exclusive) of the k-token span starting at token w. */
+  @inline private def spanEnd(starts: Array[Int], nb: Int, w: Int, k: Int): Int =
+    if (w + k < starts.length) starts(w + k) - 1 else nb
+
   /** All k-token sliding-window md5 digests of a single-space-tokenized
     * text, in offset order (round-19 opt). The identity that makes the
     * byte-span digest exact: split-by-single-space then
@@ -204,23 +223,16 @@ object TextSig {
   def shingleMd5s(s: UTF8String, k: Int): ArrayData = {
     val b = s.getBytes
     val nb = b.length
-    var ntok = 1
-    var i = 0
-    while (i < nb) { if (b(i) == 0x20) ntok += 1; i += 1 }
-    val wins = ntok - k + 1
+    val starts = tokenStarts(b)
+    val wins = starts.length - k + 1
     if (wins <= 0) return new GenericArrayData(Array.empty[Any])
-    val starts = new Array[Int](ntok)
-    var t = 1
-    i = 0
-    while (i < nb) { if (b(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
     val md = Md5Prefix48.digestTL.get()
     val out = new Array[Any](wins)
     var w = 0
     while (w < wins) {
       val st = starts(w)
-      val en = if (w + k < ntok) starts(w + k) - 1 else nb
       md.reset()
-      md.update(b, st, en - st)
+      md.update(b, st, spanEnd(starts, nb, w, k) - st)
       val dg = md.digest()
       val hex = new Array[Byte](32)
       var j = 0
@@ -233,6 +245,146 @@ object TextSig {
       w += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** The 48-bit md5 prefix ([[Md5Prefix48.hash48]]) of every word
+    * 3-gram byte span, in offset order — the gram base's `gh` column
+    * for one document, computed in the row: the same byte-span
+    * identity as [[shingleMd5s]] (md5 of concat_ws(' ', t[i], t[i+1],
+    * t[i+2]) = md5 of the raw span), one digest per gram, no token
+    * array, no gram string. Fewer than 3 tokens → empty array. */
+  def gramHashes48(s: UTF8String): ArrayData = {
+    val b = s.getBytes
+    val nb = b.length
+    val starts = tokenStarts(b)
+    val wins = starts.length - 2
+    if (wins <= 0) return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
+    val md = Md5Prefix48.digestTL.get()
+    val dg = Md5Prefix48.bufTL.get()
+    val out = new Array[Long](wins)
+    var w = 0
+    while (w < wins) {
+      val st = starts(w)
+      md.reset()
+      md.update(b, st, spanEnd(starts, nb, w, 3) - st)
+      md.digest(dg, 0, 16)
+      out(w) = Md5Prefix48.prefix48(dg)
+      w += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Position radix 2³¹ of the winnowing enc packing — see [[winnowEnc]]. */
+  final val WinnowP = 2147483648L
+
+  /** Winnowing selections (Schleimer et al., SIGMOD'03) over one
+    * document's gram hashes in offset order ([[gramHashes48]]): for
+    * every full window of W = 4 consecutive grams, the minimum of
+    * enc = h·2³¹ + (2³¹−1−pos) with h = gh DIV 16⁴ (the first 8 md5
+    * hex chars) — min hash, rightmost position on ties. Returns each
+    * distinct selection once, in window order; fewer than W grams →
+    * empty. A position selected by two windows is selected by every
+    * window between them, so comparing with the previous selection is
+    * a full dedup. h is 32 bits, so max enc = (2³²−1)·2³¹ + (2³¹−1) =
+    * 2⁶³−1: exactly int64, and positions up to 2³¹ ≈ 2.1e9 grams
+    * encode exactly. The input must therefore be 48-bit hashes
+    * (0 ≤ gh < 2⁴⁸); anything else, or a NULL element, raises an error
+    * instead of packing a wrong fingerprint. */
+  def winnowEnc(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    val W = 4
+    if (n < W) return UnsafeArrayData.fromPrimitiveArray(new Array[Long](0))
+    val enc = new Array[Long](n)
+    var q = 0
+    while (q < n) {
+      if (a.isNullAt(q))
+        throw new IllegalArgumentException(s"winnow_enc: NULL gram hash at index $q")
+      val gh = a.getLong(q)
+      if (gh < 0L || gh >= (1L << 48))
+        throw new IllegalArgumentException(
+          s"winnow_enc: gram hash $gh at index $q is not a 48-bit md5 prefix")
+      enc(q) = (gh >>> 16) * WinnowP + (WinnowP - 1L - q)
+      q += 1
+    }
+    val out = new Array[Long](n - W + 1)
+    var m = 0
+    var p = 0
+    while (p <= n - W) {
+      var e = enc(p)
+      var k = 1
+      while (k < W) { if (enc(p + k) < e) e = enc(p + k); k += 1 }
+      if (m == 0 || out(m - 1) != e) { out(m) = e; m += 1 }
+      p += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, m))
+  }
+
+  /** The 16 portable minhashes of a gram-hash set: mhᵢ = min over h of
+    * ((h mod p)·aᵢ + bᵢ) mod p, p = 2³¹−1, aᵢ = 2i+3, bᵢ = 7919i+13 —
+    * the same int64 terms as the `min` aggregate over gram rows (no
+    * term can overflow: (h mod p)·33 < 2³⁷). min is idempotent, so a
+    * set and its repeated-gram array give the same signature. NULL
+    * elements are skipped like the aggregate skips NULL rows; an empty
+    * (or all-NULL) array has no signature and returns NULL, so its band
+    * keys are NULL and match nothing. */
+  def minhash16(a: ArrayData): ArrayData = {
+    val P = 2147483647L
+    val n = a.numElements()
+    val mh = Array.fill(16)(Long.MaxValue)
+    var seen = false
+    var q = 0
+    while (q < n) {
+      if (!a.isNullAt(q)) {
+        val h = a.getLong(q) % P
+        var i = 0
+        while (i < 16) {
+          val v = (h * (2L * i + 3L) + (7919L * i + 13L)) % P
+          if (v < mh(i)) mh(i) = v
+          i += 1
+        }
+        seen = true
+      }
+      q += 1
+    }
+    if (seen) UnsafeArrayData.fromPrimitiveArray(mh) else null
+  }
+
+  /** ASCII fast path of the two text normalizations (NULL when any byte
+    * is ≥ 0x80, so callers fall back to the exact Unicode chain with
+    * `coalesce(ascii_norm(t, mode), chain)`):
+    *  - `alnum`: regexp_replace(trim(regexp_replace(lower(t),
+    *    '[^a-z0-9 ]', '')), ' +', ' ') — lowercase, drop every byte
+    *    but [a-z0-9 ], trim and collapse spaces;
+    *  - `dedup`: regexp_replace(trim(lower(t)), ' +', ' ') — lowercase,
+    *    trim and collapse spaces, every other byte kept.
+    * On ASCII, lower() maps exactly A–Z to a–z and trim()/' +' touch
+    * only 0x20, so both are one byte pass: the output is the runs of
+    * kept non-space bytes joined by single spaces. Returns the input
+    * itself when nothing changes. */
+  def asciiNorm(s: UTF8String, alnum: Boolean): UTF8String = {
+    val nb = s.numBytes()
+    val out = new Array[Byte](nb)
+    var m = 0
+    var gap = false
+    var same = true
+    var i = 0
+    while (i < nb) {
+      val c = s.getByte(i)
+      if (c < 0) return null
+      if (c == 0x20) gap = true
+      else {
+        val lc = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+        if (!alnum || (lc >= 'a' && lc <= 'z') || (lc >= '0' && lc <= '9')) {
+          if (gap && m > 0) { out(m) = 0x20; m += 1 }
+          gap = false
+          out(m) = lc
+          m += 1
+          if (lc != c) same = false
+        }
+      }
+      i += 1
+    }
+    if (same && m == nb) s else UTF8String.fromBytes(out, 0, m)
   }
 
   /** Σ(cp − 128)² over the chunk's code points — the audio-frame
@@ -264,12 +416,18 @@ object Md5Prefix48 {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
+  /** Per-thread digest output buffer (no 16-byte allocation per gram). */
+  private[functions] val bufTL = new ThreadLocal[Array[Byte]] {
+    override def initialValue(): Array[Byte] = new Array[Byte](16)
+  }
+  /** First 6 digest bytes, big-endian. */
+  @inline private[functions] def prefix48(d: Array[Byte]): Long =
+    ((d(0) & 0xFFL) << 40) | ((d(1) & 0xFFL) << 32) | ((d(2) & 0xFFL) << 24) |
+      ((d(3) & 0xFFL) << 16) | ((d(4) & 0xFFL) << 8) | (d(5) & 0xFFL)
   def hash48(s: UTF8String): Long = {
     val md = digestTL.get()
     md.reset()
-    val d = md.digest(s.getBytes)
-    ((d(0) & 0xFFL) << 40) | ((d(1) & 0xFFL) << 32) | ((d(2) & 0xFFL) << 24) |
-      ((d(3) & 0xFFL) << 16) | ((d(4) & 0xFFL) << 8) | (d(5) & 0xFFL)
+    prefix48(md.digest(s.getBytes))
   }
 }
 
@@ -432,6 +590,89 @@ case class ShingleMd5s(first: Expression, second: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, kk) =>
       s"${ev.value} = graft.functions.TextSig.shingleMd5s($a, $kk);")
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): Expression = copy(first = l, second = r)
+}
+
+/** `gram_hashes48(text)`: md5_prefix48 of every word-3-gram byte span
+  * in offset order ([[TextSig.gramHashes48]]) — the gram base's gh
+  * values for one row, no gram rows, no gram strings. */
+case class GramHashes48(child: Expression) extends TextSigExpr {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "gram_hashes48"
+  override def nullSafeEval(input: Any): Any =
+    TextSig.gramHashes48(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextSig.gramHashes48($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Shared type check of the kernels over one document's gram hashes. */
+private[functions] trait GramHashesExpr extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"${prettyName} expects an array<bigint> of gram hashes, got $t")
+  }
+}
+
+/** `winnow_enc(hashes)`: a document's distinct winnowing selections in
+  * the h·2³¹ + (2³¹−1−pos) packing ([[TextSig.winnowEnc]]). */
+case class WinnowEnc(child: Expression) extends GramHashesExpr {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "winnow_enc"
+  override def nullSafeEval(input: Any): Any =
+    TextSig.winnowEnc(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextSig.winnowEnc($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** `minhash16(set)`: the 16 portable minhashes of a gram-hash array;
+  * NULL for an empty one ([[TextSig.minhash16]]). */
+case class Minhash16(child: Expression) extends GramHashesExpr {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "minhash16"
+  override def nullSafeEval(input: Any): Any =
+    TextSig.minhash16(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      |${ev.value} = graft.functions.TextSig.minhash16($c);
+      |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** `ascii_norm(text, mode)`: the ASCII one-pass form of the `alnum`
+  * (text_normalize) or `dedup` (dedup_exact) normalization, NULL for a
+  * row with any non-ASCII byte ([[TextSig.asciiNorm]]). `mode` must be
+  * the literal 'alnum' or 'dedup'. */
+case class AsciiNorm(first: Expression, second: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  override def left: Expression = first
+  override def right: Expression = second
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+  override def prettyName: String = "ascii_norm"
+  override def checkInputDataTypes(): TypeCheckResult =
+    (first.dataType, second.dataType) match {
+      case (StringType, StringType) if second.foldable &&
+          Set("alnum", "dedup").contains(String.valueOf(second.eval(null))) =>
+        TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"ascii_norm expects (string, 'alnum' | 'dedup'), got $t")
+    }
+  @transient private lazy val alnum: Boolean =
+    String.valueOf(second.eval(null)) == "alnum"
+  override def nullSafeEval(a: Any, m: Any): Any =
+    TextSig.asciiNorm(a.asInstanceOf[UTF8String], alnum)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, _) => s"""
+      |${ev.value} = graft.functions.TextSig.asciiNorm($a, $alnum);
+      |${ev.isNull} = ${ev.value} == null;""".stripMargin)
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(first = l, second = r)
 }

@@ -102,7 +102,12 @@ private[graft] object ScratchParquet {
     * to a persisted construction (detector constants, hash radix,
     * distinct basis, verify threshold...). Unchanged in round 18: no
     * construction changed, and the `=`-segment dir format is itself a
-    * new namespace (old-format dirs are swept as legacy). */
+    * new namespace (old-format dirs are swept as legacy). Unchanged
+    * when the gram, winnowing and MinHash constructions moved into the
+    * per-row kernels (gram_hashes48 / winnow_enc / minhash16): the
+    * rebuilt winnow_fps, wn_index, mhp_pairs and mh_index rows are
+    * identical to the c17 ones at sf0.01 and sf0.1 (fixture ids are
+    * unique, so the duplicate-id union rule does not apply there). */
   val ConstructionVersion = "c17"
 
   private val Sep = "="

@@ -35,30 +35,32 @@ object LlmText extends QueryGroup {
 
   /** Every word 3-gram of a (doc_id, text) frame as
     * (doc_id [, extras], pos, gh), gh = the 48-bit md5 prefix of the
-    * space-joined gram ([[tokHash]]). This is the ONE tokenize+hash
-    * pass behind all three gram consumers (round-15 advice item 2 —
-    * they each re-shingled the corpus): minhash shingles take gh % P,
-    * winnowing takes the 8-hex prefix gh DIV 16⁴, the novelty table
-    * takes gh itself. Grams leave this operator already hashed: every
-    * downstream shuffle carries 8-byte digests, never text. */
+    * space-joined gram: the posexplode of the row's `gram_hashes48`
+    * array (one fused codegen call per document; <3-token and NULL
+    * texts have no grams). Grams leave this operator already hashed:
+    * every downstream shuffle carries 8-byte digests, never text. The
+    * MinHash and winnowing constructions no longer explode grams at
+    * all — they consume the same per-row array through
+    * [[gramSetsOf]] and [[winnowFpsOf]]; this row form feeds the
+    * n-gram novelty table. */
   private[graft] def gramsOf(docs: DataFrame, extras: Seq[String] = Nil): DataFrame =
-    // <3-token docs have no 3-grams; without this filter
-    // sequence(0, size-3) would DESCEND (default step -1) and
-    // fabricate null-padded grams no consumer's oracle produces.
-    // round-19 opt: the guard runs the tok_count kernel on the raw text
-    // (value-identical to size(split(...)), pinned) so the pushed-down
-    // filter no longer evaluates a second split() per row.
-    docs.filter(graft.functions.GraftFunctions.tokCount(col("text")) >= 3L)
-      .withColumn("t", split(col("text"), " "))
-      // round-18 opt: explode the OFFSETS (codegen generator) and build
-      // each gram as a top-level codegen projection — the former
-      // transform(...) lambda assembled every gram string interpreted
-      // (HOFs are CodegenFallback). Same rows bit for bit.
-      .select(col("doc_id") +: extras.map(col) :+ col("t") :+
-        explode(expr("sequence(0, size(t) - 3)")).as("i"): _*)
+    docs.select((col("doc_id") +: extras.map(col)) :+
+        posexplode(graft.functions.GraftFunctions.gramHashes48(col("text"))): _*)
       .select((col("doc_id") +: extras.map(col)) ++ Seq(
-        col("i").cast(LongType).as("pos"),
-        tokHash(expr("concat_ws(' ', t[i], t[i+1], t[i+2])")).as("gh")): _*)
+        col("pos").cast(LongType).as("pos"), col("col").as("gh")): _*)
+
+  /** Each document's distinct word-3-gram hash set over a (doc_id,
+    * text) frame as (doc_id, gs): gs = array_sort(array_distinct(
+    * gram_hashes48(text))) per row, unioned across rows that share a
+    * doc_id — the one shuffle moves one array per row, never a row per
+    * gram. A doc with no gram (<3 tokens, or only NULL texts) gets an
+    * empty set. The set is the unit MinHash reuses: [[minhashBands]]
+    * signs it, [[minhashPairsOf]] intersects it. */
+  private[graft] def gramSetsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+        array_distinct(graft.functions.GraftFunctions.gramHashes48(col("text"))).as("gs"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(array_distinct(flatten(collect_list(col("gs"))))).as("gs"))
 
   /** The session-lifetime gram base over the fixture corpus — one
     * persisted (doc_id, source, pos, gh) table per (session, sf dir,
@@ -72,13 +74,13 @@ object LlmText extends QueryGroup {
       gramsOf(Tables.documents(s, d), Seq("source"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** lowercase, strip non-alnum, collapse whitespace. */
+  /** lowercase, strip non-alnum, collapse whitespace
+    * ([[graft.api.GraftOps.normalizeText]]: ASCII rows take the
+    * one-pass kernel, the rest the exact lower()/regex chain). */
   private val textNormalize: QFn = (s, d) =>
     Tables.documents(s, d).select(
       col("doc_id"),
-      regexp_replace(
-        trim(regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")),
-        " +", " ").as("norm_text")
+      graft.api.GraftOps.normalizeText(col("text")).as("norm_text")
     ).orderBy(col("doc_id"))
 
   /** Global term frequencies, top 50 terms. */
@@ -344,11 +346,12 @@ object LlmText extends QueryGroup {
     * pos" is ONE integer min over enc = h·2³¹ + (2³¹−1−pos), h bounded
     * to 32 bits (8 md5 hex chars) so enc can't overflow int64 and any
     * document up to ~2.1e9 tokens encodes correctly — the same sliding
-    * ROWS frame and the same decode run on both engines.
-    * Scale: one token pass, per-doc windows only (WindowExec
-    * partitioned by doc_id — never a global sort), distinct on
-    * (doc, hash, pos) is the only shuffle, and shuffles carry 16-byte
-    * rows, never text. Expected density 2/(W+1) of gram count; laws
+    * ROWS frame and the same decode run on both engines (the Spark
+    * side slides it inside the row: `winnow_enc`).
+    * Scale: one pass per document, windows inside the row (no
+    * WindowExec, no per-gram rows), distinct on (doc, pos, hash) is
+    * the only shuffle, and it carries 24-byte rows, never text.
+    * Expected density 2/(W+1) of gram count; laws
     * (CurationSpec): identical-text docs fingerprint identically,
     * per-doc counts within [n_windows/W, n_windows], every window is
     * covered. */
@@ -357,43 +360,34 @@ object LlmText extends QueryGroup {
     * session-cached and rebuilt per JVM, ~2 s of every process's
     * warm-up): three rungs (text_winnowing, dedup_winnowing,
     * dedup_eval_winnowing) consume the same fingerprints, and later
-    * JVMs read the finished 24-byte rows instead of re-running the
-    * per-doc sliding-min window pipeline over the gram base. */
+    * JVMs read the finished 24-byte rows instead of re-running
+    * [[winnowFpsOf]] over the corpus. */
   private val winnowCache = new FingerprintCache
   private[graft] def winnowFps(s: SparkSession, d: String): DataFrame = {
     val fp = Tables.fingerprint(d, "documents")
     winnowCache.getOrElseUpdate(s, s"$d#wfp", fp)(
       ScratchParquet.ensure(s, "winnow_fps", d, fp)(
-        winnowFromGrams(gramsCached(s, d)))
+        winnowFpsOf(Tables.documents(s, d).select(col("doc_id"), col("text"))))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** The fingerprint construction over any (doc_id, text) frame —
+    * the one construction behind text_winnowing, both incremental
+    * winnowing rungs and [[graft.api.GraftOps.winnowFingerprints]], and
     * factored out so DedupProps can property-test it against a plain
-    * Scala reference on GENERATED docs, not just the fixture. */
-  private[graft] def winnowFpsOf(docs: DataFrame): DataFrame =
-    winnowFromGrams(gramsOf(docs))
-
-  private def winnowFromGrams(grams: DataFrame): DataFrame = {
-    val W = 4
-    // Position radix 2³¹ (round-15 advice: the old 10⁵ silently broke
-    // the shared-fingerprint guarantee past 1e5 tokens/doc — enc went
-    // negative and decoded to a wrong hash). h is 32 bits (8 md5 hex
-    // chars), so max enc = (2³²−1)·2³¹ + (2³¹−1) = 2⁶³−1: exactly
-    // int64, no overflow under ANSI, and the per-doc token cap is now
-    // ~2.1e9 — the guarantee holds for any document Spark can hold in
-    // a row. Min over enc = h·P + (P−1−pos) is still lexicographic in
-    // (h, −pos): min hash, rightmost position on ties.
-    val P = 2147483648L
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    grams
-      // first 8 of the 12 md5 hex chars: gh DIV 16⁴ — exact, no re-hash
-      .select(col("doc_id"), col("pos"), expr("gh DIV 65536").as("h"))
-      .withColumn("n_grams", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      .withColumn("enc",
-        min(col("h") * P + (lit(P - 1L) - col("pos")))
-          .over(byDoc.rowsBetween(0, W - 1)))
-      .filter(col("pos") <= col("n_grams") - W) // full windows only
+    * Scala reference on GENERATED docs, not just the fixture. Each row
+    * is winnowed inside the row (`winnow_enc` over `gram_hashes48`:
+    * the h·2³¹ + (2³¹−1−pos) packing, min per full 4-gram window,
+    * distinct selections), decoded to (fp_pos, fp_hash), and one
+    * distinct unions the rows. Rows sharing a doc_id are one document
+    * whose fingerprints are the UNION of the rows' fingerprint sets —
+    * the rule MinHash applies to gram sets; no window spans two rows,
+    * so no fingerprint appears that neither text has. */
+  private[graft] def winnowFpsOf(docs: DataFrame): DataFrame = {
+    val P = graft.functions.TextSig.WinnowP
+    docs
+      .select(col("doc_id"), explode(graft.functions.GraftFunctions.winnowEnc(
+        graft.functions.GraftFunctions.gramHashes48(col("text")))).as("enc"))
       .select(col("doc_id"),
         (lit(P - 1L) - (col("enc") % P)).as("fp_pos"),
         expr("enc DIV 2147483648").as("fp_hash")) // int division — no double detour
@@ -554,7 +548,8 @@ object LlmText extends QueryGroup {
     // alone can't see code changes.
     ScratchParquet.ensureDir("wn_index", d,
         Tables.fingerprint(d, "documents")) { tmp =>
-      winnowFromGrams(gramsCached(s, d).filter(col("doc_id") % 5 =!= 0))
+      winnowFpsOf(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
+          .select(col("doc_id"), col("text")))
         .select(col("doc_id"), col("fp_hash")).distinct()
         .withColumn("hb", (col("fp_hash") % 16L).cast("int"))
         .write.mode("overwrite").partitionBy("hb").parquet(s"$tmp/fps")
@@ -588,7 +583,8 @@ object LlmText extends QueryGroup {
       idx.groupBy(col("fp_hash")).agg(count(lit(1)).as("nd"))
         .filter(col("nd") <= 50L).select(col("fp_hash")),
       Seq("fp_hash"))
-    val delta = winnowFromGrams(gramsCached(s, d).filter(col("doc_id") % 5 === 0))
+    val delta = winnowFpsOf(Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
+        .select(col("doc_id"), col("text")))
       .select(col("doc_id").as("new_id"), col("fp_hash")).distinct()
     rareIdx.join(delta, Seq("fp_hash"))
       .groupBy(col("corpus_id"), col("new_id"))
@@ -740,56 +736,55 @@ object LlmText extends QueryGroup {
       .select(col("tok").as("term"), col("est_tf"))
   }
 
-  /** Exact dedup on normalized text; survivor = min doc_id. Grouping on
+  /** Exact dedup on normalized text; survivor = min doc_id — the
+    * fixture run of [[graft.api.GraftOps.dedupExact]]. Grouping on
     * the md5 digest of the normalized text (not the text itself) keeps
     * the shuffle rows fixed-width, and min/count aggregate map-side —
     * at 100 TB this moves digests, not documents, and never needs the
     * full per-group row set a window would (SURVEY.md §7.4: survivor
     * choice must be deterministic, hence min, not dropDuplicates). */
   private val dedupExact: QFn = (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"),
-        md5(regexp_replace(trim(lower(col("text"))), " +", " ")).as("nh"))
-      .groupBy(col("nh"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
-      .select(col("doc_id"), col("n_copies"))
+    graft.api.GraftOps.dedupExact(Tables.documents(s, d), col("doc_id"), col("text"))
+      .select(col("id").as("doc_id"), col("n_copies"))
       .orderBy(col("doc_id"))
 
-  /** 16-minhash LSH bands over a (doc_id, gh [, keep…]) gram frame:
-    * one partial-aggregating groupBy(doc_id, keep…) computes the 16
-    * portable minhashes ((aᵢ·h+bᵢ) mod p, aᵢ = 2i+3, bᵢ = 7919i+13,
-    * h = gh mod p) — no 16× row blow-up via a params crossJoin — and
-    * 8 bands of r=2 turn them into (doc_id, keep…, band, s0, s1), the
-    * equality-bucket key of the candidate self-join and of the
-    * persisted band index. min is idempotent, so raw gram rows and
-    * their distinct set give the same signature. Over a SUBSET of the
-    * shared gram base this is the incremental path: signature only the
-    * new batch, never the corpus. */
-  private[graft] def minhashBands(grams: DataFrame, keep: String*): DataFrame = {
-    val P = 2147483647L
-    val mins = (0 until 16).map { i =>
-      min((col("gh") % P * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
-    }
+  /** The 8 LSH bands of r=2 over a 16-minhash array as
+    * array<struct<band, s0, s1>> — NULL minhashes give NULL band keys,
+    * which equality-match nothing. */
+  private[graft] def bandsOf(mh: Column): Column =
+    array((0 until 8).map { j =>
+      struct(lit(j).as("band"), mh.getItem(2 * j).as("s0"), mh.getItem(2 * j + 1).as("s1"))
+    }: _*)
+
+  /** 16-minhash LSH bands over a (doc_id, gs [, keep…]) gram-set frame
+    * ([[gramSetsOf]]): `minhash16` takes the 16 portable minhashes
+    * ((aᵢ·h+bᵢ) mod p, aᵢ = 2i+3, bᵢ = 7919i+13, h = gh mod p) inside
+    * each row — no aggregate, no gram rows — and 8 bands of r=2 turn
+    * them into (doc_id, keep…, band, s0, s1), the equality-bucket key
+    * of the candidate self-join and of the persisted band index. Docs
+    * with an empty set have no signature and emit no band. Over a
+    * SUBSET of the docs this is the incremental path: signature only
+    * the new batch, never the corpus. */
+  private[graft] def minhashBands(sets: DataFrame, keep: String*): DataFrame = {
     val ids = col("doc_id") +: keep.map(col)
-    grams.groupBy(ids: _*).agg(mins.head, mins.tail: _*)
-      .select(ids :+ explode(array((0 until 8).map { j =>
-          struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"), col(s"mh${2 * j + 1}").as("s1"))
-        }: _*)).as("b"): _*)
+    // size > 0 ⇔ minhash16 is non-NULL (sets hold no NULL); filtering on
+    // the set keeps the optimizer from evaluating minhash16 twice
+    sets.filter(size(col("gs")) > 0)
+      .select(ids :+ graft.functions.GraftFunctions.minhash16(col("gs")).as("mh"): _*)
+      .select(ids :+ explode(bandsOf(col("mh"))).as("b"): _*)
       .select(ids ++ Seq(col("b.band").as("band"),
               col("b.s0").as("s0"), col("b.s1").as("s1")): _*)
   }
 
-  /** MinHash-LSH near-dup pairs over a (doc_id, gh) gram frame
-    * ([[gramsOf]]; repeated rows and repeated doc_ids allowed — a doc's
-    * set is the union of its rows). The one construction behind
-    * dedup_near_minhash, the dedup_clusters* pair graph and
+  /** MinHash-LSH near-dup pairs over a (doc_id, gs) gram-set frame
+    * ([[gramSetsOf]]: one row per doc, a doc's set is the union of its
+    * rows' grams). The one construction behind dedup_near_minhash, the
+    * dedup_clusters* pair graph and
     * [[graft.api.GraftOps.minhashNearDupPairs]]:
-    *  1. ONE groupBy(doc_id) shuffle of the gram pass collects each
-    *     doc's distinct gram set (collect_set) — the only pass over the
-    *     grams;
-    *  2. the signature is taken over that set exploded in place (the
-    *     sets are already partitioned by doc_id, so no second shuffle)
-    *     → 8 bands of r=2 → equality-bucket candidate pairs (da < db);
+    *  1. the sets arrive partitioned by doc_id (gramSetsOf's one
+    *     shuffle of per-doc arrays);
+    *  2. [[minhashBands]] signs each set in the row → 8 bands of r=2
+    *     → equality-bucket candidate pairs (da < db);
     *  3. a length filter drops candidates whose set sizes alone bound
     *     j below the threshold (j ≤ min(na, nb)/max(na, nb));
     *  4. the verify joins each candidate to the two per-doc sets and
@@ -803,10 +798,9 @@ object LlmText extends QueryGroup {
     * recall at J≥0.8 (LawsSpec keeps the recall-vs-exact superset law).
     * Distinct-on-gh equals distinct-on-gram-text modulo 48-bit md5
     * collisions, which the oracle shares. */
-  private[graft] def minhashPairsOf(grams: DataFrame, threshold: Double): DataFrame = {
-    val sets = grams.groupBy(col("doc_id")).agg(collect_set(col("gh")).as("gs"))
+  private[graft] def minhashPairsOf(sets: DataFrame, threshold: Double): DataFrame = {
     val bands = minhashBands(
-      sets.select(col("doc_id"), size(col("gs")).as("n"), explode(col("gs")).as("gh")), "n")
+      sets.select(col("doc_id"), col("gs"), size(col("gs")).as("n")), "n")
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") &&
         col("x.s0") === col("y.s0") && col("x.s1") === col("y.s1") &&
@@ -830,11 +824,11 @@ object LlmText extends QueryGroup {
   }
 
   /** Verified minhash near-dup pairs (da < db, unrounded jaccard ≥ 0.8)
-    * over the shared fixture gram base — the pair graph consumed by both
+    * over the fixture docs' gram sets — the pair graph consumed by both
     * the pair-listing query (dedup_near_minhash) and the
     * connected-components clustering (dedup_clusters). */
   private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
-    minhashPairsOf(gramsCached(s, d).select(col("doc_id"), col("gh")), 0.8)
+    minhashPairsOf(gramSetsOf(Tables.documents(s, d).select(col("doc_id"), col("text"))), 0.8)
 
   /** One persisted DataFrame per derived pair graph / edge list per
     * (session, sf dir, fixture fingerprint): the label-propagation loop
@@ -1215,7 +1209,8 @@ object LlmText extends QueryGroup {
     // [[ensureWinnowIndex]].
     ScratchParquet.ensureDir("mh_index", d,
         Tables.fingerprint(d, "documents")) { tmp =>
-      minhashBands(gramsCached(s, d).filter(col("doc_id") % 5 =!= 0))
+      minhashBands(gramSetsOf(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)
+          .select(col("doc_id"), col("text"))))
         .write.mode("overwrite").partitionBy("band").parquet(s"$tmp/bands")
     }
 
@@ -1232,8 +1227,8 @@ object LlmText extends QueryGroup {
     val path = ensureMinhashIndex(s, d)
     val idx = s.read.parquet(s"$path/bands")
       .select(col("doc_id").as("corpus_id"), col("band"), col("s0"), col("s1"))
-    val delta = minhashBands(
-        gramsCached(s, d).filter(col("doc_id") % 5 === 0))
+    val delta = minhashBands(gramSetsOf(Tables.documents(s, d)
+        .filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text"))))
       .select(col("doc_id").as("new_id"), col("band"), col("s0"), col("s1"))
     idx.join(delta, Seq("band", "s0", "s1"))
       .select(col("corpus_id"), col("new_id")).distinct()

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{QueryGroup, Tables}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** End-to-end training-data pipeline composed from the library's own
   * building blocks, declared as ONE DataFrame so Catalyst plans the
@@ -35,9 +34,7 @@ object Pipeline extends QueryGroup {
     graft.functions.GraftFunctions.ensureRegistered(s)
     val norm = Tables.documents(s, d).select(
       col("doc_id"), col("lang"), col("text"),
-      regexp_replace(
-        trim(regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")),
-        " +", " ").as("norm_text"))
+      graft.api.GraftOps.normalizeText(col("text")).as("norm_text"))
     // survivor ids: groupBy on the digest (fixed-width shuffle rows,
     // map-side min) — the dedup_exact shape, then an equi-join brings
     // the surviving rows back without moving documents twice
@@ -52,13 +49,10 @@ object Pipeline extends QueryGroup {
       .select(col("db").as("doc_id")).distinct()
     val gated = norm.join(survIds, Seq("doc_id"))
       .join(nearDropped, Seq("doc_id"), "left_anti")
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_tokens", size(col("toks")).cast(LongType))
-      .withColumn("stop_ratio",
-        size(filter(col("toks"), t => t.isin(LlmText.StopTokens: _*))).cast(DoubleType) /
-          size(col("toks")).cast(DoubleType))
-      .withColumn("quality",
-        log(lit(1.0) + col("n_tokens")) * (lit(1.0) - col("stop_ratio")))
+      // the tok_count / tok_hits kernels (value-identical to the
+      // size(split) / size(filter(split, isin)) forms, pinned)
+      .withColumn("n_tokens", graft.functions.GraftFunctions.tokCount(col("text")))
+      .withColumn("quality", graft.api.GraftOps.qualityScore(col("text"), LlmText.StopTokens))
       .filter(round(col("quality"), 6) > 2.0)
       .withColumn("split",
         when(Sampling.hashBucket(col("doc_id"), 10) === 9L, "val")

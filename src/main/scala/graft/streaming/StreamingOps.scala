@@ -107,21 +107,15 @@ object StreamingOps {
     * digests. The same code path runs on a bounded batch frame
     * (StreamingSpec asserts equivalence against the dedup_exact +
     * text_quality batch construction). */
-  def docPipeline(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    val stopRatio =
-      size(filter(toks, t => t.isin(graft.operators.LlmText.StopTokens: _*)))
-        .cast("double") / size(toks).cast("double")
+  def docPipeline(docs: DataFrame): DataFrame =
     docs
-      .withColumn("nh", md5(regexp_replace(
-        trim(regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")), " +", " ")))
+      .withColumn("nh", md5(graft.api.GraftOps.normalizeText(col("text"))))
       .withWatermark("ts_us", "10 minutes")
       .dropDuplicatesWithinWatermark("nh")
       .withColumn("quality",
-        log(lit(1.0) + size(toks).cast("long")) * (lit(1.0) - stopRatio))
+        graft.api.GraftOps.qualityScore(col("text"), graft.operators.LlmText.StopTokens))
       .filter(round(col("quality"), 6) > 2.0)
       .select(col("doc_id"), col("lang"), round(col("quality"), 6).as("quality"))
-  }
 
   /** Stream-stream interval join: each purchase joined to the same user's
     * clicks in the hour before it. Watermarks on BOTH sides plus the
@@ -265,50 +259,33 @@ object StreamingOps {
 
   /** Streaming near-dup gate — dedup_incremental's as-data-lands twin:
     * each arriving doc is MinHash-signed IN THE ROW (the same 16-hash /
-    * 8-band construction as the persisted corpus index, but as pure
-    * array HOFs — no shuffle touches the signature: a streaming groupBy
-    * per doc would force an aggregation where none is needed) and its 8
-    * band keys are probed against the static band index; a doc is novel
-    * iff NO band matches. The static side is the index's DISTINCT
-    * (band, s0, s1) key set — distinct because several corpus docs can
-    * share a band key and an outer join would multiply stream rows.
-    * The only stateful operator is the post-join per-doc verdict
-    * aggregation ((window, doc_id) keyed, 10 min watermark, append
-    * emits each verdict exactly once) — state is 8 band verdicts per
-    * in-flight doc, watermark-bounded. In production the distinct key
-    * set is persisted next to the index (here it's derived, computed
-    * per micro-batch — fine for KB-scale fixtures, a real deployment
-    * reads the precomputed keys); index growth goes through
+    * 8-band construction as the persisted corpus index: `minhash16`
+    * over the row's `gram_hashes48` — no shuffle touches the signature:
+    * a streaming groupBy per doc would force an aggregation where none
+    * is needed) and its 8 band keys are probed against the static band
+    * index; a doc is novel iff NO band matches. The static side is the
+    * index's DISTINCT (band, s0, s1) key set — distinct because several
+    * corpus docs can share a band key and an outer join would multiply
+    * stream rows. The only stateful operator is the post-join per-doc
+    * verdict aggregation ((window, doc_id) keyed, 10 min watermark,
+    * append emits each verdict exactly once) — state is 8 band verdicts
+    * per in-flight doc, watermark-bounded. In production the distinct
+    * key set is persisted next to the index (here it's derived,
+    * computed per micro-batch — fine for KB-scale fixtures, a real
+    * deployment reads the precomputed keys); index growth goes through
     * dedup_incremental/ann_upsert-style batch appends. min over
-    * per-shingle hashes equals the index's min over DISTINCT shingles,
-    * so the signatures are bit-identical to minhashBands' (the
-    * StreamingSpec twin proves it against the declared batch rung). */
+    * per-gram hashes equals the index's min over DISTINCT grams, so the
+    * signatures are bit-identical to minhashBands' (the StreamingSpec
+    * twin proves it against the declared batch rung). A <3-token doc
+    * has no gram, so minhash16 is NULL, its band keys are NULL and
+    * match nothing: novel, the right verdict for an unsignable doc. */
   def nearDupGate(docs: DataFrame, bandIndex: DataFrame): DataFrame = {
-    val P = 2147483647L
-    val mins = (0 until 16).map { i =>
-      expr(s"array_min(transform(hm, x -> (x * ${2 * i + 3} + ${7919 * i + 13}) % $P))")
-        .as(s"mh$i")
-    }
+    import graft.functions.GraftFunctions.{gramHashes48, minhash16}
     val idxKeys = bandIndex.select(col("band"), col("s0"), col("s1"))
       .distinct().withColumn("hit", lit(1L))
     docs
-      .withColumn("t", split(col("text"), " "))
-      // sequence(0, negative) DESCENDS and fabricates phantom shingles
-      // for a <3-token doc (the multimodal_audio_rms guard convention);
-      // such docs keep an EMPTY shingle set → null band keys → no index
-      // match → novel, which is the right verdict for unsignable docs
-      .withColumn("hm", expr(
-        s"""transform(
-              CASE WHEN size(t) >= 3
-                   THEN transform(sequence(0, size(t) - 3),
-                          i -> concat_ws(' ', t[i], t[i+1], t[i+2]))
-                   ELSE CAST(array() AS ARRAY<STRING>) END,
-              s -> CAST(conv(substring(md5(s), 1, 12), 16, 10) AS BIGINT) % $P)"""))
-      .select(Seq(col("doc_id"), col("ts_us")) ++ mins: _*)
-      .select(col("doc_id"), col("ts_us"), explode(array((0 until 8).map { j =>
-        struct(lit(j).as("band"), col(s"mh${2 * j}").as("s0"),
-          col(s"mh${2 * j + 1}").as("s1"))
-      }: _*)).as("b"))
+      .select(col("doc_id"), col("ts_us"), explode(graft.operators.LlmText.bandsOf(
+        minhash16(gramHashes48(col("text"))))).as("b"))
       .select(col("doc_id"), col("ts_us"), col("b.band").as("band"),
         col("b.s0").as("s0"), col("b.s1").as("s1"))
       .withWatermark("ts_us", "10 minutes")
@@ -327,20 +304,22 @@ object StreamingOps {
     * screen the banded minhash gate only gives probabilistically.
     * Winnowing needs per-doc sliding mins, which streaming DataFrames
     * can't spell as window functions — but a document is one row, so
-    * the whole construction runs as IN-ROW higher-order functions:
-    * gram hashes, the batch rung's exact enc = h·2³¹ + (2³¹−1−pos)
-    * packing, array_min over each 4-slice, decode, distinct. Bit-
-    * identical to the batch fingerprints (StreamingSpec asserts set
-    * equality against winnowFpsOf). Stateless until the verdict
-    * aggregation; the only stream state is the watermark-bounded
-    * per-(window, doc) hit count; the index side is a static distinct
-    * fp set (the same >50-corpus-doc boilerplate cap as the declared
-    * rung, applied before the join). n_hit_fps counts distinct indexed
-    * fingerprints — the declared rung's ≥2-shared-with-one-corpus-doc
-    * candidates are always a subset of n_hit_fps ≥ 2 docs. */
+    * the whole construction runs IN THE ROW: `winnow_enc` over the
+    * row's `gram_hashes48` (the batch operator's own kernels), each
+    * selection decoded to its hash (enc DIV 2³¹, a shift: enc ≥ 0),
+    * distinct. Bit-identical to the batch fingerprints (StreamingSpec
+    * asserts set equality against winnowFpsOf). Stateless until the
+    * verdict aggregation; the only stream state is the
+    * watermark-bounded per-(window, doc) hit count; the index side is a
+    * static distinct fp set (the same >50-corpus-doc boilerplate cap as
+    * the declared rung, applied before the join). n_hit_fps counts
+    * distinct indexed fingerprints — the declared rung's
+    * ≥2-shared-with-one-corpus-doc candidates are always a subset of
+    * n_hit_fps ≥ 2 docs. Docs with fewer than W+2 tokens keep an EMPTY
+    * set → no index hit → novel (the right verdict for
+    * unfingerprintable docs). */
   def winnowGate(docs: DataFrame, fpIndex: DataFrame): DataFrame = {
-    val P = 2147483648L
-    val W = 4
+    import graft.functions.GraftFunctions.{gramHashes48, winnowEnc}
     // the same boilerplate-stop the declared incremental rung applies:
     // fingerprints in >50 corpus docs never count as hits
     val idxKeys = fpIndex
@@ -348,25 +327,8 @@ object StreamingOps {
       .filter(col("nd") <= 50L)
       .select(col("fp_hash"), lit(1L).as("hit"))
     docs
-      .withColumn("t", split(col("text"), " "))
-      // enc array: one element per gram, the batch construction's
-      // int64 packing (h from the first 8 md5 hex chars)
-      .withColumn("genc", expr(
-        s"""CASE WHEN size(t) >= 3
-              THEN transform(sequence(0, size(t) - 3),
-                     i -> CAST(conv(substring(md5(
-                            concat_ws(' ', t[i], t[i+1], t[i+2])), 1, 8), 16, 10)
-                          AS BIGINT) * ${P}L + (${P - 1}L - i))
-              ELSE CAST(array() AS ARRAY<BIGINT>) END"""))
-      // min per 4-window, decoded to the hash, deduped — the exact
-      // fingerprint set winnowFpsOf emits for this doc; <W+2-token
-      // docs keep an EMPTY set → no index hit → novel (the right
-      // verdict for unfingerprintable docs)
-      .withColumn("fps", expr(
-        s"""array_distinct(transform(
-              CASE WHEN size(genc) >= $W THEN sequence(0, size(genc) - $W)
-                   ELSE CAST(array() AS ARRAY<INT>) END,
-              i -> array_min(slice(genc, i + 1, $W)) DIV ${P}L))"""))
+      .withColumn("fps", array_distinct(transform(
+        winnowEnc(gramHashes48(col("text"))), e => shiftright(e, 31))))
       .select(col("doc_id"), col("ts_us"), explode_outer(col("fps")).as("fp_hash"))
       .withWatermark("ts_us", "10 minutes")
       .join(idxKeys, Seq("fp_hash"), "left")

@@ -137,6 +137,24 @@ class DedupProps extends Properties("graft") {
       got == want
     }
 
+  property("winnowing with duplicate ids is the union of each row's fingerprints") =
+    Prop.forAll(
+      Gen.listOfN(5, Gen.choose(0, 16).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf("the", "fast", "key", "order", "sort",
+          "table", "scan", "merge", "slow", "value")))),
+      Gen.listOfN(5, Gen.choose(0L, 2L))) { (docs, ids) =>
+      // 5 rows over at most 3 ids: most cases split one doc over rows,
+      // and the texts' lengths straddle the 6-token (4-window) minimum
+      val spark = TestSpark.spark
+      val rows = ids.zip(docs)
+      val df = spark.createDataFrame(rows.map { case (i, t) => (i, t.mkString(" ")) })
+        .toDF("doc_id", "text")
+      val got = operators.LlmText.winnowFpsOf(df).collect()
+        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toSet
+      val want = rows.flatMap { case (i, t) => refWinnow(t).map(fp => (i, fp)) }.toSet
+      (got == want) :| s"extra=${got.diff(want)} missing=${want.diff(got)}"
+    }
+
   /** Plain-Scala curriculum reference: stage by token-count literals,
     * rank inside (stage, src) by (md5-u48 of "id:cur", id), key =
     * stage·10¹² + (r−1)·20 + src — the operator's exact recipe. */

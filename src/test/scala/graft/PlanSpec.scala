@@ -1161,25 +1161,49 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("GreaterThanOrEqual(l_shipdate"), p)
   }
 
-  test("text_winnowing windows stay doc-partitioned; dedup is a hash aggregate") {
-    // the sliding-min frame and the lead() grams must partition by
-    // doc_id — a single-partition WindowExec serializes the corpus
-    // through one task at scale. The SERVED rung now reads the finished
-    // ScratchParquet fingerprint artifact (round 17), so the shape pin
-    // runs against the CONSTRUCTION itself — the plan the artifact
-    // build executes once per fixture generation.
+  test("text_winnowing winnows inside each row; the one shuffle is the distinct") {
+    // the sliding-min windows run in the row (winnow_enc over
+    // gram_hashes48), so the construction has no WindowExec at all and
+    // its only exchange feeds the one distinct (partial + final hash
+    // aggregate). The SERVED rung reads the finished ScratchParquet
+    // fingerprint artifact (round 17), so the shape pin runs against
+    // the CONSTRUCTION itself — the plan the artifact build executes
+    // once per fixture generation.
     val build = operators.LlmText.winnowFpsOf(
         Tables.documents(spark, TestSpark.sf).select(col("doc_id"), col("text")))
       .queryExecution.executedPlan.toString
-    assert(build.contains("windowspecdefinition(doc_id"), build)
-    assert(!build.contains("Exchange SinglePartition"),
+    assert(!build.contains("Window"), s"per-gram Window is back:\n$build")
+    assert(!build.contains("SinglePartition"),
       s"corpus serialized through one task:\n$build")
-    assert(build.contains("HashAggregate"), s"distinct must hash-aggregate:\n$build")
+    assert("HashAggregate".r.findAllIn(build).length == 2 &&
+      "Exchange hashpartitioning".r.findAllIn(build).length == 1,
+      s"expected one distinct (partial + final) over one exchange:\n$build")
     assert(!build.contains("CartesianProduct"), build)
     // and the served rung leafs at the artifact scan, never re-deriving
     val served = plan("text_winnowing")
     assert(served.contains("winnow_fps=") || served.contains("InMemoryTableScan"),
       s"expected the persisted fingerprint leaf:\n$served")
+  }
+
+  test("GraftOps winnowFingerprints and minhashNearDupPairs never shuffle per-gram rows") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    val docs = Tables.documents(spark, TestSpark.sf)
+    for ((name, df) <- Seq(
+        "winnowFingerprints" -> graft.api.GraftOps.winnowFingerprints(docs, col("doc_id"), col("text")),
+        "minhashNearDupPairs" -> graft.api.GraftOps.minhashNearDupPairs(docs, col("doc_id"), col("text")))) {
+      val p = df.queryExecution.sparkPlan
+      assert(p.collect { case w: WindowExec => w }.isEmpty, s"$name:\n$p")
+      // a generator over the gram array (or the gram set) is one row per
+      // gram; the allowed generators explode fingerprints and bands
+      val perGram = p.collect { case g: GenerateExec => g }.filter(_.generator.children.exists {
+        case _: graft.functions.GramHashes48 => true
+        case a: AttributeReference => a.name == "gs"
+        case _ => false
+      })
+      assert(perGram.isEmpty, s"$name explodes grams:\n$p")
+    }
   }
 
   test("ivf_nprobe_curve broadcasts query set and radii; corpus never shuffles as rows") {

@@ -308,4 +308,141 @@ class TextSigSpec extends AnyFunSuite {
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("*("))
   }
+
+  /** Per-document gram / normalize kernels (gram_hashes48, winnow_enc,
+    * minhash16, ascii_norm): fixture docs plus NULL, empty and
+    * whitespace-only text; leading, trailing and double spaces, tabs
+    * and newlines; exactly 2-5 tokens; repeated grams; uppercase ASCII
+    * and punctuation-only text; and multi-byte text whose ICU
+    * lowercase differs from a naive mapping (dotted capital I, Kelvin
+    * sign, capital sharp s, final sigma). */
+  private def gramDocs = {
+    import spark.implicits._
+    val edge = Seq[(Long, Option[String])](
+      (300001L, None),
+      (300002L, Some("")),
+      (300003L, Some(" ")),
+      (300004L, Some("   ")),
+      (300005L, Some(" lead space here now")),
+      (300006L, Some("trail space here now ")),
+      (300007L, Some("double  space  here  now  ok")),
+      (300008L, Some("tab\there and\tthere too")),
+      (300009L, Some("new\nline and more\nlines here")),
+      (300010L, Some("two tokens")),
+      (300011L, Some("three tok ens")),
+      (300012L, Some("four tok ens here")),
+      (300013L, Some("five tok ens here now")),
+      (300014L, Some("x y z x y z x y z x y z x y")),
+      (300015L, Some("a a a a a a a a a")),
+      (300016L, Some("HELLO World FOO bar BAZ Qux")),
+      (300017L, Some("!!! ... ,,, ??? ;;; :: -- !!")),
+      (300018L, Some("\u0130stanbul IS big and \u0130I")),
+      (300019L, Some("\u212A kelvin KELVIN k\u212A end")),
+      (300020L, Some("\u1E9E stra\u00DFe GROSS \u1E9E\u1E9E end")),
+      (300021L, Some("\u039F\u0394\u039F\u03A3 \u03A3\u039F\u03A6\u039F\u03A3 END")),
+      (300022L, Some("Caf\u00E9 OK ok  Fine. \tTabbed")),
+      (300023L, Some("  MiXeD  Case,  punct!  and   runs  ")),
+    ).toDF("doc_id", "text")
+    Tables.documents(spark, TestSpark.sf).select($"doc_id", $"text")
+      .unionByName(edge)
+  }
+
+  /** The parent gram formulation: split, offsets explode, md5 prefix
+    * of concat_ws over the three tokens. */
+  private def legacyGrams(d: org.apache.spark.sql.DataFrame) =
+    d.filter(size(split(col("text"), " ")) >= 3)
+      .withColumn("t", split(col("text"), " "))
+      .select(col("doc_id"), col("t"), explode(expr("sequence(0, size(t) - 3)")).as("i"))
+      .select(col("doc_id"), col("i").cast("long").as("pos"),
+        expr("conv(substring(md5(concat_ws(' ', t[i], t[i+1], t[i+2])), 1, 12), 16, 10)")
+          .cast("long").as("gh"))
+
+  test("gram_hashes48 is bit-identical to the split/concat_ws/md5-prefix gram rows") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val d = gramDocs
+    val fused = d.select(col("doc_id"), posexplode(expr("gram_hashes48(text)")))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("gh_k"))
+    val j = fused.join(legacyGrams(d), Seq("doc_id", "pos"), "full_outer")
+    assert(j.filter(col("gh").isNull || col("gh_k").isNull ||
+      col("gh") =!= col("gh_k")).count() == 0)
+    assert(j.count() > 1000)
+    val sizes = d.select(col("doc_id"), expr("gram_hashes48(text)").as("g"))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) -1 else r.getSeq[Long](1).length)).toMap
+    assert(sizes(300001L) == -1, "NULL text has no array")
+    assert(Seq(300002L, 300003L, 300010L).forall(sizes(_) == 0), sizes)
+    assert(sizes(300004L) == 2 && sizes(300011L) == 1 && sizes(300013L) == 3, sizes)
+  }
+
+  test("winnow_enc is bit-identical to the doc-partitioned sliding-min Window") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    import org.apache.spark.sql.expressions.Window
+    val d = gramDocs
+    val P = 2147483648L
+    // the Window construction winnow_enc replaced
+    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val legacy = legacyGrams(d)
+      .select(col("doc_id"), col("pos"), expr("gh DIV 65536").as("h"))
+      .withColumn("n_grams", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      .withColumn("enc", min(col("h") * P + (lit(P - 1L) - col("pos")))
+        .over(byDoc.rowsBetween(0, 3)))
+      .filter(col("pos") <= col("n_grams") - 4)
+      .select(col("doc_id"), col("enc"), lit(1).as("l")).distinct()
+    val encs = d.select(col("doc_id"), expr("winnow_enc(gram_hashes48(text))").as("e"))
+    val fused = encs.select(col("doc_id"), explode(col("e")).as("enc"), lit(1).as("k"))
+    val j = fused.join(legacy, Seq("doc_id", "enc"), "full_outer")
+    assert(j.filter(col("l").isNull || col("k").isNull).count() == 0)
+    assert(legacy.count() > 1000)
+    // one entry per distinct selection, never a repeat
+    assert(encs.filter(size(col("e")) =!= size(array_distinct(col("e")))).count() == 0)
+    val err = intercept[Exception] {
+      spark.sql("SELECT winnow_enc(array(1L, 2L, -3L, 4L))").collect()
+    }
+    assert(err.toString.contains("48-bit"), err.toString)
+  }
+
+  test("minhash16 is bit-identical to the 16-min aggregate; an empty set is NULL") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val d = gramDocs
+    val P = 2147483647L
+    val mins = (0 until 16).map { i =>
+      min((col("gh") % P * (2L * i + 3L) + (7919L * i + 13L)) % P).as(s"mh$i")
+    }
+    val legacy = legacyGrams(d).groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"), array((0 until 16).map(i => col(s"mh$i")): _*).as("mh_l"))
+    val fused = d.select(col("doc_id"),
+      expr("minhash16(gram_hashes48(text))").as("mh"),
+      expr("minhash16(sort_array(array_distinct(gram_hashes48(text))))").as("mh_set"))
+    val j = fused.join(legacy, Seq("doc_id"), "left")
+    assert(j.filter(col("mh_l").isNull =!= col("mh").isNull).count() == 0,
+      "NULL exactly for the docs with no gram")
+    assert(j.filter(col("mh") =!= col("mh_l") || col("mh_set") =!= col("mh_l")).count() == 0)
+    assert(j.filter(col("mh").isNotNull).count() > 100)
+    val r = spark.sql("SELECT minhash16(CAST(array() AS ARRAY<BIGINT>)), " +
+      "minhash16(CAST(NULL AS ARRAY<BIGINT>))").collect()(0)
+    assert(r.isNullAt(0) && r.isNullAt(1))
+  }
+
+  test("ascii_norm equals the lower/regex chains; non-ASCII rows take the chain") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val d = gramDocs
+    val chains = Seq(
+      "alnum" -> regexp_replace(trim(regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")), " +", " "),
+      "dedup" -> regexp_replace(trim(lower(col("text"))), " +", " "))
+    val entry = Map(
+      "alnum" -> api.GraftOps.normalizeText(col("text")),
+      "dedup" -> api.GraftOps.dedupNormalize(col("text")))
+    for ((mode, chain) <- chains) {
+      val both = d.select(col("doc_id"), col("text"), chain.as("want"),
+        expr(s"ascii_norm(text, '$mode')").as("k"), entry(mode).as("got"))
+      assert(both.filter(!col("got").eqNullSafe(col("want"))).count() == 0, mode)
+      assert(both.filter(col("k").isNotNull && col("k") =!= col("want")).count() == 0, mode)
+      // NULL exactly on NULL text and on rows with a byte >= 0x80
+      val nonAscii = col("text").rlike("[^\\x00-\\x7F]")
+      assert(both.filter(col("k").isNull =!= (col("text").isNull || nonAscii)).count() == 0, mode)
+      assert(both.filter(nonAscii).count() == 5, mode)
+    }
+    val err = intercept[Exception] { spark.sql("SELECT ascii_norm('a', 'upper')").collect() }
+    assert(err.toString.contains("ascii_norm"), err.toString)
+  }
 }
