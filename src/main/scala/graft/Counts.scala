@@ -9,8 +9,3 @@ object Counts {
       s"oracled=${SparkEntry.oracleSql.size}")
 }
 
-/** Key dump for the SURVEY §2 set-diff sanity check (build tooling). */
-object DumpKeys {
-  def main(args: Array[String]): Unit =
-    SparkEntry.queries.keys.toSeq.sorted.foreach(println)
-}
