@@ -6,11 +6,13 @@ import org.apache.spark.sql.types._
 
 /** The library surface for ARBITRARY DataFrames — what "switch your
   * pipeline to this library" means in practice. The declared queries in
-  * [[graft.SparkEntry]] are fixture-bound so the driver can oracle them;
-  * each function here is the SAME construction parameterized over the
-  * caller's columns, and ApiSpec asserts result equality against the
-  * corresponding declared query on the fixtures, so the DuckDB-verified
-  * semantics transfer to user data unchanged.
+  * [[graft.SparkEntry]] are fixture-bound so the driver can oracle them.
+  * Where a declared query and a function here share a construction, the
+  * query CALLS the function (fixture columns → `GraftOps.f(...)` → the
+  * query's total ORDER BY), so DuckDB parity checks the library body
+  * itself; ApiSpec pins each query's binding (column renames, literal
+  * parameters, ordering) and every function that still stands beside an
+  * operator-side construction.
   *
   * Everything stays in codegen-friendly Column expressions (no UDFs) and
   * keeps the declared queries' scale shapes: digest-keyed dedup shuffles,
@@ -400,7 +402,8 @@ object GraftOps {
   }
 
   /** Weighted Bernoulli keep decision — sample_weighted's membership
-    * rule over caller columns: P(keep) = weight / cap via the
+    * rule over caller columns (the query calls it at cap = 1024 with
+    * n_chars as the weight): P(keep) = weight / cap via the
     * ALL-INTEGER compare `u48 < weight · (2^48 / cap)` on the 48-bit
     * md5 uniform (cap must be a power of two ≤ 2^48). A pure row
     * function: no float thresholds, no shuffle, reproducible on any
@@ -528,15 +531,17 @@ object GraftOps {
     * tenths (buckets 0..9 kept below the rate), falling back to
     * `defaultOf10` for unlisted strata. Still a pure row function: the
     * sample can be re-derived or re-tuned per stratum without any
-    * shuffle. */
+    * shuffle. The bucket is hashed once per row and compared against
+    * the stratum's rate. The sample_stratified query calls this with
+    * Map("en" -> 5) and default 2. */
   def stratifiedKeep(id: Column, stratum: Column,
                      keepOf10: Map[String, Int], defaultOf10: Int): Column = {
-    val b = hashBucket(id, 10)
-    keepOf10.toSeq
+    val rate = keepOf10.toSeq
       .foldLeft(Option.empty[Column]) { case (acc, (k, n)) =>
-        Some(acc.fold(when(stratum === k, b < n))(_.when(stratum === k, b < n)))
+        Some(acc.fold(when(stratum === k, n))(_.when(stratum === k, n)))
       }
-      .fold(b < defaultOf10: Column)(_.otherwise(b < defaultOf10))
+      .fold(lit(defaultOf10))(_.otherwise(defaultOf10))
+    hashBucket(id, 10) < rate
   }
 
   /** Near-dup deduplicated corpus in one call — the composition a
@@ -750,26 +755,31 @@ object GraftOps {
     * n_kept, clean_text) with clean_text the ordered rejoin of
     * surviving spans. The survivor pick is ONE md5-digest min-struct
     * groupBy — the shuffle carries digests, never span text, so the
-    * operator is corpus-size-bound only in fixed-width keys. */
+    * operator is corpus-size-bound only in fixed-width keys. The span
+    * stream feeds both the first-occurrence build and the probe, so it
+    * is localCheckpointed EAGERLY at call time (one Spark job before
+    * any action — the paired A/B that kept it measured the eager form).
+    * The text_dedup_span query is this function at spanTokens = 8. */
   def spanDedup(df: DataFrame, id: Column, text: Column,
                 spanTokens: Int = 8): DataFrame = {
     require(spanTokens >= 1, s"spanDedup: spanTokens >= 1, got $spanTokens")
-    val spans = df.select(id.as("sd_id"), text.as("sd_tx"))
-      .filter(length(col("sd_tx")) >= 1)
-      .select(col("sd_id"), split(col("sd_tx"), " ").as("tk"))
-      .select(col("sd_id"),
+    val spans = df.select(id.as("doc_id"), text.as("text"))
+      .filter(length(col("text")) >= 1)
+      .select(col("doc_id"), split(col("text"), " ").as("tk"))
+      .select(col("doc_id"),
         explode(expr(s"sequence(0, (size(tk)-1) div $spanTokens)")).as("i"),
         col("tk"))
-      .select(col("sd_id"), col("i").cast(LongType).as("span_id"),
+      .select(col("doc_id"), col("i").cast(LongType).as("span_id"),
         expr(s"array_join(slice(tk, i*$spanTokens + 1, $spanTokens), ' ')").as("span"))
+      .localCheckpoint()
     val firsts = spans
       .groupBy(md5(col("span")).as("dig"))
-      .agg(min(struct(col("sd_id"), col("span_id"))).as("f"))
-      .select(col("dig"), col("f.sd_id").as("f_id"), col("f.span_id").as("f_span"))
+      .agg(min(struct(col("doc_id"), col("span_id"))).as("f"))
+      .select(col("dig"), col("f.doc_id").as("f_doc"), col("f.span_id").as("f_span"))
     spans.join(firsts, md5(col("span")) === col("dig"))
       .withColumn("kept",
-        col("sd_id") === col("f_id") && col("span_id") === col("f_span"))
-      .groupBy(col("sd_id").as("id"))
+        col("doc_id") === col("f_doc") && col("span_id") === col("f_span"))
+      .groupBy(col("doc_id").as("id"))
       .agg(count(lit(1)).as("n_spans"),
         sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
         array_join(expr(
@@ -846,7 +856,9 @@ object GraftOps {
     * carry no full shingle to test). The eval shingle digest set is
     * distinct'd and BROADCAST — benchmarks are MBs while the corpus is
     * TBs — so the train side sees one broadcast equality join plus one
-    * groupBy(id); drop the hint if the eval corpus outgrows broadcast. */
+    * groupBy(id); drop the hint if the eval corpus outgrows broadcast.
+    * The text_decontaminate query is this function at n = 8 with the
+    * src0 source as the eval split. */
   def decontaminate(train: DataFrame, trainId: Column, trainText: Column,
                     eval: DataFrame, evalText: Column,
                     n: Int = 8): DataFrame = {
@@ -859,12 +871,10 @@ object GraftOps {
       // rebind by NAME after the first select — the caller's Column
       // expressions are only resolvable against the original frame
       val keep = idOpt.map(_ => col("dc_id")).toSeq
-      // round-19 opt: fused shingle_md5s kernel (value-identical to the
-      // per-window md5(array_join(slice(...))) transform, pinned in
-      // TextSigSpec) — the former HOF built every shingle string
-      // interpreted. < n tokens yields an empty array (the old
-      // size(tk) ≥ n guard); the length ≥ 1 filter stays for the n = 1
-      // edge, where the empty string is one (empty) token.
+      // fused shingle_md5s kernel (value-identical to the per-window
+      // md5(array_join(slice(...))) form, pinned in TextSigSpec). < n
+      // tokens yields an empty array; the length ≥ 1 filter stays for
+      // the n = 1 edge, where the empty string is one (empty) token.
       base.filter(length(col("dc_tx")) >= 1)
         .select(keep :+ explode(
           graft.functions.GraftFunctions.shingleMd5s(col("dc_tx"), n))
@@ -879,9 +889,9 @@ object GraftOps {
       .withColumn("contaminated", col("n_hits") > 0L)
   }
 
-  /** Exact column profile — profile_columns over caller columns: per
-    * column, row count, null count, exact distinct count. round-19 opt:
-    * one union branch per column (a single-distinct aggregate plans
+  /** Exact column profile — the profile_columns query is this function
+    * over six orders columns: per column, row count, null count, exact
+    * distinct count. One union branch per column (a single-distinct aggregate plans
     * WITHOUT Catalyst's Expand — no |cols|× fan-out of the full-width
     * row; each branch scans only its own column and all branches run in
     * one job). At 100 TB swap countDistinct for approx_count_distinct
@@ -898,139 +908,147 @@ object GraftOps {
   }
 
   /** Temperature-scaled mixture weights — sample_temperature over
-    * caller groups: per group, its realized weight share and the
+    * caller groups: per group, its row count `n_docs`, its summed
+    * weight `n_tokens`, its realized weight share and the
     * P ∝ share^(1/T) sampling weight (T > 1 flattens toward uniform).
-    * The libm power is rounded to 6 dp then micro-quantized to int64
+    * The share divides the group's weight sum by the total as doubles;
+    * the libm power is rounded to 6 dp then micro-quantized to int64
     * BEFORE the normalizer sum so the Σ fold is order-insensitive; the
-    * group table is localCheckpointed (it feeds three branches — one
-    * corpus pass total). */
+    * group table is eagerly localCheckpointed (it feeds three branches
+    * — one corpus pass total). Returns (group, n_docs, n_tokens, share,
+    * temp_weight). The sample_temperature query is this function over
+    * per-doc token counts at T = 2. */
   def temperatureWeights(df: DataFrame, group: Column, weight: Column,
                          temperature: Double): DataFrame = {
     require(temperature > 0.0, s"temperatureWeights: T=$temperature must be > 0")
     val perG = df.select(group.as("group"), weight.as("w"))
-      .groupBy(col("group")).agg(sum(col("w")).cast("double").as("gw"))
+      .groupBy(col("group"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("n_tokens"))
       .localCheckpoint()
-    val tot = perG.agg(sum(col("gw")).as("tot"))
+    val tot = perG.agg(sum(col("n_tokens")).as("tot"))
     val scored = perG.crossJoin(broadcast(tot))
-      .withColumn("share", col("gw") / col("tot"))
+      .withColumn("share", col("n_tokens").cast(DoubleType) / col("tot"))
       .withColumn("qi",
         floor(round(pow(col("share"), lit(1.0 / temperature)), 6) * 1e6
-          + lit(0.5)).cast("long"))
+          + lit(0.5)).cast(LongType))
     scored.crossJoin(broadcast(scored.agg(sum(col("qi")).as("z"))))
-      .select(col("group"), round(col("share"), 6).as("share"),
-        round(col("qi").cast("double") / col("z"), 6).as("temp_weight"))
+      .select(col("group"), col("n_docs"), col("n_tokens"),
+        round(col("share"), 6).as("share"),
+        round(col("qi").cast(DoubleType) / col("z"), 6).as("temp_weight"))
   }
 
-  /** Exact prefix-budget cutoff — sample_token_budget over caller
-    * columns: every row gains its running total (in `ord` order) and a
-    * kept flag (cum ≤ budget). The prefix sum is DISTRIBUTED: per-bucket
-    * totals → tiny bucket-offset window → broadcast join + within-bucket
-    * running sum — no global single-partition window at any size. `ord`
-    * must be unique, NON-NEGATIVE, and bucketizable by division (an id
-    * column) — enforced per row: a negative id raises instead of
-    * silently collapsing out-of-order into bucket 0. Bucketing uses
-    * true integer division (`div`), not the long/long `/` that routes
-    * through DOUBLE and loses exactness above 2^53. */
+  /** Exact prefix-budget cutoff — sample_token_budget's rule over
+    * caller columns: every row gains its running total `cum` (in `ord`
+    * order) and a kept flag (cum ≤ budget). It is [[tokenIntervals]]
+    * (cum = the interval end) plus the budget compare, so it inherits
+    * that function's distributed prefix sum and its lazy checkpoint: no
+    * Spark job runs before the caller's first action. `ord` must be
+    * unique, NON-NEGATIVE, and bucketizable by integer division (an id
+    * column) — enforced per row: a negative `ord` raises instead of
+    * silently collapsing out-of-order into bucket 0. Returns
+    * (ord, amt, cum, kept) with `ord` and `amt` cast to bigint. */
   def prefixBudgetKeep(df: DataFrame, ord: Column, amount: Column,
                        budget: Long, bucketWidth: Long = 1000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(bucketWidth > 0, "prefixBudgetKeep: bucketWidth must be > 0")
-    val rows = df.select(ord.as("ord"), amount.cast("long").as("amt"))
-      .withColumn("bkt",
-        when(assert_true(col("ord") >= 0,
-          lit("prefixBudgetKeep: ord must be >= 0")).isNull,
-          expr(s"ord div ${bucketWidth}L")))
-      .localCheckpoint()
-    val offsets = rows.groupBy(col("bkt")).agg(sum(col("amt")).as("bt"))
-      .withColumn("off",
-        coalesce(sum(col("bt")).over(Window.orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("bkt"), col("off"))
-    rows
-      .withColumn("run",
-        sum(col("amt")).over(Window.partitionBy(col("bkt"))
-          .orderBy(col("ord"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .join(broadcast(offsets), Seq("bkt"))
-      .select(col("ord"), col("amt"), (col("off") + col("run")).as("cum"),
-        (col("off") + col("run") <= lit(budget)).as("kept"))
+    val checkedOrd = when(assert_true(ord >= 0,
+      lit("prefixBudgetKeep: ord must be >= 0")).isNull, ord)
+    tokenIntervals(df, checkedOrd, amount, bucketWidth)
+      .select(col("doc_id").as("ord"), col("ntok").as("amt"),
+        col("end").as("cum"), (col("end") <= lit(budget)).as("kept"))
   }
 
-  /** Regex PII redaction — text_pii_scan's redaction half as a pure
-    * column function (one codegen stage, no shuffle): masks email and
-    * NANP-555 phone patterns. Patterns stay in the POSIX-safe subset
-    * every mainstream regex engine parses identically. */
-  def redactPii(text: Column): Column =
-    regexp_replace(
-      regexp_replace(text, "[a-z0-9]+@[a-z0-9]+\\.[a-z]+", "[email]"),
-      "555-[0-9]{4}", "[phone]")
+  /** The email and NANP-555 phone patterns [[redactPii]] masks and the
+    * text_pii_scan query counts. */
+  private[graft] val PiiEmailRe = "[a-z0-9]+@[a-z0-9]+\\.[a-z]+"
+  private[graft] val PiiPhoneRe = "555-[0-9]{4}"
 
-  /** Per-document keyword tagging over caller DataFrames —
-    * text_keyword_extract's construction: top-`k` whitespace tokens by
-    * tf·idf (idf = ln((N+1)/(df+1))), rejoined rank-ordered into one
-    * `keywords` string per doc. Shapes are the 100 TB ones: per-doc tf
-    * groupBy, vocabulary-sized df table BROADCAST (vocabularies are
-    * MBs while corpora are TBs), 1-row corpus count broadcast, and the
+  /** Regex PII redaction — text_pii_scan's redaction column (the query
+    * calls this): a pure column function (one codegen stage, no
+    * shuffle) that masks email and NANP-555 phone patterns. Patterns
+    * stay in the POSIX-safe subset every mainstream regex engine
+    * parses identically. */
+  def redactPii(text: Column): Column =
+    regexp_replace(regexp_replace(text, PiiEmailRe, "[email]"),
+      PiiPhoneRe, "[phone]")
+
+  /** Per-document keyword tagging over caller DataFrames — the
+    * text_keyword_extract query is this function at k = 3: top-`k`
+    * whitespace tokens by tf·idf (idf = ln((N+1)/(df+1))), rejoined
+    * rank-ordered into one `keywords` string per doc. Shapes: per-doc
+    * tf groupBy, eagerly localCheckpointed (it feeds the df aggregate
+    * and the scoring join — one Spark job at call time); the
+    * vocabulary-sized df join is UNHINTED, so AQE broadcasts it while
+    * the vocabulary fits and falls back to a tok-keyed shuffle at
+    * web-corpus vocabulary sizes; 1-row corpus count broadcast; the
     * rank window partitions by doc — never a global sort. Returns
-    * (id, keywords); docs whose text is empty emit no row (no tokens
-    * to rank). */
+    * (id, keywords); an empty text is one empty token. */
   def keywordExtract(df: DataFrame, id: Column, text: Column,
                      k: Int = 3): DataFrame = {
     require(k >= 1, s"keywordExtract: k >= 1, got $k")
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("ke_id")).orderBy(col("tfidf").desc, col("tok"))
-    val base = df.select(id.as("ke_id"), text.as("ke_tx"))
-    val n = base.agg(count(lit(1)).cast("double").as("n_docs"))
+      .partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("tok"))
+    val base = df.select(id.as("doc_id"), text.as("text"))
+    val n = base.agg(count(lit(1)).cast(DoubleType).as("n_docs"))
     val tf = base
-      .select(col("ke_id"), explode(split(col("ke_tx"), " ")).as("tok"))
-      .groupBy(col("ke_id"), col("tok")).agg(count(lit(1)).as("tf"))
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+      .localCheckpoint()
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "tok")
+    tf.join(dfreq, "tok")
       .crossJoin(broadcast(n))
       .withColumn("tfidf",
-        col("tf").cast("double") *
-          log((col("n_docs") + 1.0) / (col("df").cast("double") + 1.0)))
+        col("tf").cast(DoubleType) *
+          log((col("n_docs") + 1.0) / (col("df").cast(DoubleType) + 1.0)))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .groupBy(col("ke_id").as("id"))
+      .groupBy(col("doc_id").as("id"))
       .agg(array_join(expr(
         "transform(sort_array(collect_list(struct(rn, tok))), x -> x.tok)"), " ")
         .as("keywords"))
   }
 
-  /** CCNet-style quality bucketing over caller DataFrames —
-    * text_quality_bucket's construction: every doc scored by the mean
-    * corpus-unigram logprob of its tokens, then split into `buckets`
+  /** Per-doc mean corpus-unigram logprob (the CCNet perplexity
+    * stand-in) over caller docs — the one score the exact and approx
+    * quality-bucket queries and [[qualityBuckets]] read. Returns
+    * (doc_id, mean_logprob rounded to 6 dp). The vocabulary table is
+    * eagerly localCheckpointed: the corpus total and the broadcast both
+    * read the |V|-row table, not the token stream (one Spark job at
+    * call time); the total is Σ tf over it, not a second corpus scan. */
+  private[graft] def docQualityScore(df: DataFrame, id: Column,
+                                     text: Column): DataFrame = {
+    val t = df.select(id.as("doc_id"), explode(split(text, " ")).as("tok"))
+    val tf = t.groupBy(col("tok")).agg(count(lit(1)).as("tf"))
+      .localCheckpoint()
+    val n = tf.agg(sum(col("tf")).cast(DoubleType).as("n_tok"))
+    t.join(broadcast(tf), "tok")
+      .crossJoin(broadcast(n))
+      .withColumn("lp", log(col("tf") / col("n_tok")))
+      .groupBy(col("doc_id"))
+      .agg(round(sum(col("lp")) / count(lit(1)), 6).as("mean_logprob"))
+  }
+
+  /** CCNet-style quality bucketing over caller DataFrames — the
+    * text_quality_bucket query is this function at buckets = 3: every
+    * doc scored by [[docQualityScore]], then split into `buckets`
     * equal ntiles over the fully tie-broken order (score DESC, id ASC).
     * Returns (id, mean_logprob, bucket_idx, bucket) — bucket is the
     * CCNet head/middle/tail naming when buckets == 3, else "q<i>".
-    * The vocabulary table is localCheckpointed (corpus total + broadcast
-    * both read the |V|-row table, not the token stream). Scale note
-    * (from the rung): the global ntile sorts ~16 B/doc score rows; past
-    * that, replace it with broadcast approx_percentile cutpoints —
-    * same output modulo boundary ties, no global sort. */
+    * Scale note: the global ntile sorts ~16 B/doc score rows; past
+    * that, the text_quality_bucket_approx query's broadcast
+    * approx_percentile cutpoints give the same output modulo boundary
+    * ties with no global sort. */
   def qualityBuckets(df: DataFrame, id: Column, text: Column,
                      buckets: Int = 3): DataFrame = {
     require(buckets >= 2, s"qualityBuckets: buckets >= 2, got $buckets")
-    val t = df.select(id.as("qb_id"), explode(split(text, " ")).as("tok"))
-    val tf = t.groupBy(col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val n = tf.agg(sum(col("tf")).cast("double").as("n_tok"))
-    val score = t.join(broadcast(tf), "tok")
-      .crossJoin(broadcast(n))
-      .withColumn("lp", log(col("tf") / col("n_tok")))
-      .groupBy(col("qb_id"))
-      .agg(round(sum(col("lp")) / count(lit(1)), 6).as("mean_logprob"))
-    val labeled = score.withColumn("bucket_idx",
+    val labeled = docQualityScore(df, id, text).withColumn("b",
       ntile(buckets).over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("mean_logprob").desc, col("qb_id").asc)))
+        .orderBy(col("mean_logprob").desc, col("doc_id").asc)))
     val name =
       if (buckets == 3)
-        when(col("bucket_idx") === 1, "head")
-          .when(col("bucket_idx") === 2, "middle").otherwise("tail")
-      else concat(lit("q"), col("bucket_idx"))
-    labeled.select(col("qb_id").as("id"), col("mean_logprob"),
-      col("bucket_idx"), name.as("bucket"))
+        when(col("b") === 1, "head").when(col("b") === 2, "middle").otherwise("tail")
+      else concat(lit("q"), col("b"))
+    labeled.select(col("doc_id").as("id"), col("mean_logprob"),
+      col("b").as("bucket_idx"), name.as("bucket"))
   }
 
   /** Class-balanced downsampling — sample_balanced over arbitrary
@@ -1039,18 +1057,19 @@ object GraftOps {
     * construction with k = broadcast min(stratum count) derived from
     * the data). Membership is a pure function of the stratum's id set —
     * deterministic under any partitioning, reproducible on any engine.
-    * Returns (stratum, id). */
+    * Returns (stratum, id). The sample_balanced query is this function
+    * over (doc_id, lang). */
   def balancedKeep(df: DataFrame, id: Column, stratum: Column): DataFrame = {
-    val base = df.select(id.as("bid"), stratum.as("stratum"))
-    val kMin = base.groupBy(col("stratum")).agg(count(lit(1)).as("c"))
+    val base = df.select(id.as("doc_id"), stratum.as("stratum"))
+    val kMin = df.groupBy(stratum).agg(count(lit(1)).as("c"))
       .agg(min(col("c")).as("k"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("stratum"))
-      .orderBy(md5(col("bid").cast(StringType)).asc, col("bid").asc)
+      .orderBy(md5(col("doc_id").cast(StringType)).asc, col("doc_id").asc)
     base.withColumn("rn", row_number().over(w))
       .crossJoin(broadcast(kMin))
       .filter(col("rn") <= col("k"))
-      .select(col("stratum"), col("bid").as("id"))
+      .select(col("stratum"), col("doc_id").as("id"))
   }
 
   /** Exact integer division as a Column (`a div b`) — `/` on Columns
@@ -1194,11 +1213,12 @@ object GraftOps {
     * cheap first dedup pass of a web-corpus pipeline (collapse
     * re-crawls before any content hashing): a scan plus ONE
     * map-side-combining groupBy(canonical); zero joins, zero
-    * windows. */
+    * windows. The dedup_url query is this function over URLs it
+    * synthesizes from the fixture. */
   def urlDedup(df: DataFrame, id: Column, url: Column): DataFrame =
-    df.select(id.as("ud_id"), urlCanonicalize(url).as("canonical_url"))
+    df.select(id.as("doc_id"), urlCanonicalize(url).as("canonical_url"))
       .groupBy(col("canonical_url"))
-      .agg(count(lit(1)).as("n_dups"), min(col("ud_id")).as("survivor"))
+      .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("survivor"))
 
   /** Exact distinct counts via mergeable fixed-width bitmaps —
     * agg_bitmap_distinct over caller columns: `(g, n_distinct)` per
@@ -1235,34 +1255,34 @@ object GraftOps {
     * caller text column and word list: the C4 banned-word rule counts
     * whole-token matches (never substrings — the recipe's classic
     * false-positive fix); gate on `=== 0` for the C4 any-hit drop.
-    * Pure row function, single codegen stage. */
+    * Pure row function, single codegen stage; the text_blocklist query
+    * calls it with its two-word list. */
   def blocklistHits(text: Column, banned: Seq[String]): Column = {
     require(banned.nonEmpty, "blocklistHits: banned list must be non-empty")
-    // round-19 opt: fused kernel, value-identical to
+    // fused kernel, value-identical to
     // size(filter(split(text, " "), t => t.isin(banned: _*))) (pinned
     // in TextSigSpec) with no token array and no interpreted lambda
     graft.functions.GraftFunctions.tokHits(text, banned)
   }
 
   /** Epoch-weighted oversampling — sample_epochs' materialization over
-    * caller columns: each row emits ⌊factor⌋ full copies plus a
-    * deterministic all-integer Bernoulli extra with P = frac(factor)
-    * (u48 of a salted md5 vs frac·2^48 — pass the threshold as the
-    * precomputed integer `fracThreshold` = round(frac·2^48) so no
-    * float boundary exists at runtime). Returns the exploded
-    * (original columns + copy_id) rows — the corpus the mix actually
-    * trains on. The copies ≥ 1 guard is load-bearing: Spark's
-    * sequence(1, 0) is the DESCENDING [1, 0], not an empty array. */
+    * caller columns (the query calls this): each row emits ⌊factor⌋
+    * full copies plus a deterministic all-integer Bernoulli extra with
+    * P = frac(factor) (u48 = the `md5_prefix48` kernel of the salted id
+    * vs frac·2^48 — pass the threshold as the precomputed integer
+    * `fracThreshold` = round(frac·2^48) so no float boundary exists at
+    * runtime; u48 ≥ 0, so a threshold of 0 never adds a copy). Returns
+    * the exploded (original columns + copy_id) rows —
+    * the corpus the mix actually trains on. The copies ≥ 1 guard is
+    * load-bearing: Spark's sequence(1, 0) is the DESCENDING [1, 0], not
+    * an empty array. */
   def epochOversample(df: DataFrame, id: Column, wholeEpochs: Column,
                       fracThreshold: Column, salt: String = ":ep"): DataFrame =
-    df.withColumn("eo_u48",
-        conv(substring(md5(concat(id.cast(StringType), lit(salt))), 1, 12), 16, 10)
-          .cast(LongType))
+    df.withColumn("eo_u48", graft.functions.GraftFunctions.md5Prefix48(
+        concat(id.cast(StringType), lit(salt))))
       .withColumn("eo_copies",
         wholeEpochs.cast(LongType)
-          + when(fracThreshold > 0L,
-              when(col("eo_u48") < fracThreshold, 1L).otherwise(0L))
-            .otherwise(0L))
+          + when(col("eo_u48") < fracThreshold, 1L).otherwise(0L))
       .filter(col("eo_copies") >= 1L)
       .withColumn("copy_id", explode(expr("sequence(1, eo_copies)")))
       .drop("eo_u48", "eo_copies")
@@ -1399,18 +1419,16 @@ object GraftOps {
     (bit_count(hiA.bitwiseXOR(hiB)) + bit_count(loA.bitwiseXOR(loB)))
       .cast(LongType)
 
-  /** Flesch reading-ease over a page string — text_readability's scoring
-    * half for caller pages that HAVE sentence punctuation (the declared
-    * rung synthesizes boundaries first because the fixture has none):
-    * words = whitespace tokens, sentences = max(1, runs of [.!?]+),
-    * syllables = vowel groups with the standard >= 1-per-word floor.
-    * Words split on runs of ANY whitespace (`\s+`) with empty tokens
-    * dropped, so tab/newline/multi-space pages count words correctly —
-    * unlike the declared rung, whose fixture contract is single-space
-    * text (round-13 advice fix). Returns struct(n_words, n_sentences,
-    * n_syllables, flesch) where flesch is the raw double (callers gate
-    * on it; round only for display). Pure row functions — rides the
-    * ingest scan. */
+  /** Flesch reading-ease over a page string — text_readability's
+    * scoring half (the query synthesizes sentence boundaries into the
+    * fixture text, then calls this): words = whitespace tokens,
+    * sentences = max(1, runs of [.!?]+), syllables = vowel groups with
+    * the standard >= 1-per-word floor. Words split on runs of ANY
+    * whitespace (`\s+`) with empty tokens dropped, so tab/newline/
+    * multi-space pages count words correctly. Returns struct(n_words,
+    * n_sentences, n_syllables, flesch) where flesch is the raw double
+    * (callers gate on it; round only for display). Pure row functions
+    * — rides the ingest scan. */
   def fleschReadingEase(page: Column): Column = {
     val words = filter(split(page, "\\s+"), w => length(w) > 0)
     val nWords = size(words).cast(LongType)

@@ -210,36 +210,19 @@ object LlmText extends QueryGroup {
   /** Per-document keyword extraction — the metadata-enrichment step a
     * corpus pipeline runs to tag every document (search facets, topic
     * routing, dataset cards): top-3 tokens by tf·idf, emitted as one
-    * rank-ordered string per doc. Same bounded shapes as text_tfidf
-    * (per-doc tf groupBy, UNHINTED vocabulary-sized df join — like
-    * text_tfidf's, so AQE broadcasts it only while the vocabulary
-    * actually fits and falls back to a tok-keyed shuffle at web-corpus
-    * vocabulary sizes; `text_hash_features` is the vocabulary-FREE
-    * alternative when even the df aggregate is too hot; 1-row corpus
-    * count broadcast); the rank window partitions by doc_id — never a
-    * global sort — and the reassembly is text_dedup_span's
-    * sort_array-of-structs idiom. */
-  private val textKeywordExtract: QFn = (s, d) => {
-    val n = Tables.documents(s, d).agg(count(lit(1)).cast(DoubleType).as("n_docs"))
-    // round-18 opt: checkpoint tf once for its two consumers (the
-    // text_tfidf device)
-    val tf = tokens(s, d).groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("tok"))
-    tf.join(df, "tok")
-      .crossJoin(broadcast(n))
-      .withColumn("tfidf",
-        col("tf").cast(DoubleType) *
-          log((col("n_docs") + 1.0) / (col("df").cast(DoubleType) + 1.0)))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .groupBy(col("doc_id"))
-      .agg(array_join(expr(
-        "transform(sort_array(collect_list(struct(rn, tok))), x -> x.tok)"), " ")
-        .as("keywords"))
+    * rank-ordered string per doc. The construction is
+    * [[graft.api.GraftOps.keywordExtract]]: per-doc tf groupBy
+    * (checkpointed for its two consumers), UNHINTED vocabulary-sized df
+    * join — like text_tfidf's, so AQE broadcasts it only while the
+    * vocabulary actually fits; `text_hash_features` is the
+    * vocabulary-FREE alternative when even the df aggregate is too hot
+    * — 1-row corpus count broadcast, and a rank window partitioned by
+    * doc_id — never a global sort. */
+  private val textKeywordExtract: QFn = (s, d) =>
+    graft.api.GraftOps.keywordExtract(Tables.documents(s, d),
+        col("doc_id"), col("text"), k = 3)
+      .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"))
-  }
 
   private val textLangStats: QFn = (s, d) =>
     Tables.documents(s, d).groupBy(col("lang"))
@@ -483,7 +466,7 @@ object LlmText extends QueryGroup {
     * the audit costs one |pairs|-row aggregate. */
   private val splitLeakageAudit: QFn = (s, d) => {
     def side(c: Column): Column =
-      when(Sampling.hashBucket(c, 10) === 9L, lit("val")).otherwise(lit("train"))
+      when(graft.api.GraftOps.hashBucket(c, 10) === 9L, lit("val")).otherwise(lit("train"))
     minhashPairsCached(s, d)
       .select(side(col("da")).as("sa"), side(col("db")).as("sb"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -514,7 +497,7 @@ object LlmText extends QueryGroup {
   private val splitClusterAware: QFn = (s, d) => {
     val labels = unionNodeLabels(s, d, "mh")
     def side(c: Column): Column =
-      when(Sampling.hashBucket(c, 10) === 9L, lit("val")).otherwise(lit("train"))
+      when(graft.api.GraftOps.hashBucket(c, 10) === 9L, lit("val")).otherwise(lit("train"))
     val docSide = Tables.documents(s, d).select(col("doc_id"))
       .join(labels.select(col("v").as("doc_id"), col("lab")), Seq("doc_id"), "left")
       .select(col("doc_id"), side(coalesce(col("lab"), col("doc_id"))).as("sp"))

@@ -55,7 +55,7 @@ object Pipeline extends QueryGroup {
       .withColumn("quality", graft.api.GraftOps.qualityScore(col("text"), LlmText.StopTokens))
       .filter(round(col("quality"), 6) > 2.0)
       .withColumn("split",
-        when(Sampling.hashBucket(col("doc_id"), 10) === 9L, "val")
+        when(graft.api.GraftOps.hashBucket(col("doc_id"), 10) === 9L, "val")
           .otherwise("train"))
     // fused codegen Σx² (round-18 opt; bit-identical to the HOF fold,
     // pinned in VectorSpec)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,21 +13,17 @@ import org.apache.spark.sql.types._
   * row id: the sample membership of a row is a pure function of the
   * row, independent of partitioning, executor count, or engine — the
   * property that makes a sample re-derivable years later. Filters stay
-  * in codegen and push down; no shuffle is introduced at all. */
+  * in codegen and push down; no shuffle is introduced at all. The
+  * membership rules are [[graft.api.GraftOps]]'s (`hashBucket`,
+  * `stratifiedKeep`, `weightedKeep`, `balancedKeep`, `epochOversample`);
+  * the queries here bind fixture columns to them. */
 object Sampling extends QueryGroup {
-
-  /** mod-bucket of the md5 of a stable id: 0..buckets-1, portable.
-    * Shared with Pipeline.pipeline_e2e's split stage so the two can't
-    * drift (the StopTokens pattern). */
-  private[operators] def hashBucket(c: org.apache.spark.sql.Column, buckets: Int) =
-    // round-18 opt: fused md5-prefix kernel (value-identical, pinned)
-    graft.functions.GraftFunctions.md5Prefix48(c.cast(StringType)) % buckets
 
   /** Deterministic ~10% sample of orders: rows whose id-hash bucket is
     * 0 of 10. Exactly reproducible on any engine with md5. */
   private val sampleHash: QFn = (s, d) =>
     Tables.orders(s, d)
-      .filter(hashBucket(col("o_orderkey"), 10) === 0L)
+      .filter(GraftOps.hashBucket(col("o_orderkey"), 10) === 0L)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy(col("o_orderkey"))
 
@@ -36,7 +33,7 @@ object Sampling extends QueryGroup {
   private val splitTrainVal: QFn = (s, d) =>
     Tables.documents(s, d)
       .withColumn("split",
-        when(hashBucket(col("doc_id"), 10) === 9L, "val").otherwise("train"))
+        when(GraftOps.hashBucket(col("doc_id"), 10) === 9L, "val").otherwise("train"))
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"),
            sum(col("n_chars")).as("total_chars"))
@@ -57,7 +54,7 @@ object Sampling extends QueryGroup {
     * aggregation. */
   private val sampleKfold: QFn = (s, d) =>
     Tables.documents(s, d)
-      .withColumn("fold", hashBucket(concat(col("doc_id").cast(StringType),
+      .withColumn("fold", GraftOps.hashBucket(concat(col("doc_id").cast(StringType),
         lit(":fold")).cast(StringType), 5))
       .groupBy(col("fold"), col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -74,9 +71,8 @@ object Sampling extends QueryGroup {
     * per-lang kept/total counts plus the realized rate. */
   private val sampleStratified: QFn = (s, d) =>
     Tables.documents(s, d)
-      .withColumn("bkt", hashBucket(col("doc_id"), 10))
       .withColumn("keep",
-        when(col("lang") === "en", col("bkt") < 5L).otherwise(col("bkt") < 2L))
+        GraftOps.stratifiedKeep(col("doc_id"), col("lang"), Map("en" -> 5), 2))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_total"),
            sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
@@ -127,9 +123,8 @@ object Sampling extends QueryGroup {
     * construction (P(keep) ∝ weight). */
   private val sampleWeighted: QFn = (s, d) =>
     Tables.documents(s, d)
-      .withColumn("u48",
-        graft.functions.GraftFunctions.md5Prefix48(col("doc_id").cast(StringType)))
-      .withColumn("keep", col("u48") < col("n_chars") * lit(274877906944L))
+      .withColumn("keep",
+        GraftOps.weightedKeep(col("doc_id"), col("n_chars"), cap = 1024L))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_total"),
            sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
@@ -149,20 +144,10 @@ object Sampling extends QueryGroup {
     * global sort; when k ≪ class size the reservoir's salted two-level
     * window prunes candidates first — with k ≈ class size (this op) the
     * single per-class window IS the honest plan. */
-  private val sampleBalanced: QFn = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(s, d)
-    val kMin = docs.groupBy(col("lang")).agg(count(lit(1)).as("c"))
-      .agg(min(col("c")).as("k")) // broadcast 1-row minority size
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(md5(col("doc_id").cast(StringType)).asc, col("doc_id").asc)
-    docs.select(col("doc_id"), col("lang"))
-      .withColumn("rn", row_number().over(w))
-      .crossJoin(broadcast(kMin))
-      .filter(col("rn") <= col("k"))
-      .select(col("lang"), col("doc_id"))
+  private val sampleBalanced: QFn = (s, d) =>
+    GraftOps.balancedKeep(Tables.documents(s, d), col("doc_id"), col("lang"))
+      .select(col("stratum").as("lang"), col("id").as("doc_id"))
       .orderBy(col("lang"), col("doc_id"))
-  }
 
   /** Epoch-weighted OVERSAMPLING — the data-mixing step every published
     * LLM recipe runs that the rest of the sampling family can't express
@@ -173,9 +158,9 @@ object Sampling extends QueryGroup {
     * sample_weighted's all-integer rule — u48 < frac·2^48 with the
     * threshold written as the integer literal 2^47 (frac = .5 here), a
     * salted md5 so membership is independent of the other samplers —
-    * and the copies materialize via a sequence() generator: pure row
-    * functions, embarrassingly parallel, no shuffle until the
-    * per-source rollup. Per source: docs, emitted copies, realized
+    * and the copies materialize via a sequence() generator
+    * ([[graft.api.GraftOps.epochOversample]]): pure row functions,
+    * embarrassingly parallel, no shuffle until the per-source rollup. Per source: docs, emitted copies, realized
     * epochs — the number the mixing spreadsheet checks against the
     * target r. */
   private val sampleEpochs: QFn = (s, d) => {
@@ -183,24 +168,15 @@ object Sampling extends QueryGroup {
       .when(col("source") === "src1", 1.5)
       .when(col("source") === "src2", 0.5)
       .otherwise(1.0)
-    val base = Tables.documents(s, d)
+    val base = Tables.documents(s, d).select(col("doc_id"), col("source"))
       .withColumn("r", r)
-      .withColumn("u48",
-        graft.functions.GraftFunctions.md5Prefix48(
-          concat(col("doc_id").cast(StringType), lit(":ep"))))
-      .withColumn("copies",
-        floor(col("r")).cast(LongType)
-          + when(col("r") =!= floor(col("r")),
-              when(col("u48") < lit(140737488355328L), 1L).otherwise(0L)) // 2^47
-            .otherwise(0L))
     // n_docs counts ALL source docs (a frac-coin miss with ⌊r⌋ = 0 emits
     // nothing and must still sit in the denominator); n_copies counts the
     // actually MATERIALIZED explode output — the thing the mix trains on
-    val emitted = base
-      // the copies >= 1 guard is load-bearing: Spark's sequence(1, 0) is
-      // the DESCENDING [1, 0] (step inferred -1), not an empty array
-      .filter(col("copies") >= 1L)
-      .select(col("source"), explode(expr("sequence(1, copies)")).as("copy_id"))
+    val emitted = GraftOps.epochOversample(base, col("doc_id"),
+        wholeEpochs = floor(col("r")),
+        fracThreshold = when(col("r") =!= floor(col("r")), lit(140737488355328L)) // 2^47
+          .otherwise(lit(0L)))
       .groupBy(col("source")).agg(count(lit(1)).as("n_copies"))
     base.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       .join(emitted, Seq("source"))

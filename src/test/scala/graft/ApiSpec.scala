@@ -413,6 +413,51 @@ class ApiSpec extends AnyFunSuite {
     assert(rows(api) == rows(SparkEntry.queries("sample_token_budget")(spark, sf)))
   }
 
+  test("prefixBudgetKeep raises on a negative ord instead of misbucketing it") {
+    import spark.implicits._
+    val df = Seq((3L, 5L), (-1L, 2L), (7L, 1L)).toDF("o", "a")
+    val e = intercept[Throwable] {
+      GraftOps.prefixBudgetKeep(df, col("o"), col("a"), budget = 6L).collect()
+    }
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(chain.contains("prefixBudgetKeep: ord must be >= 0"), chain)
+    // the same rows without the negative ord pass the guard
+    val ok = GraftOps.prefixBudgetKeep(df.filter(col("o") >= 0), col("o"), col("a"),
+        budget = 6L)
+      .collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3))).toSet
+    assert(ok == Set((3L, 5L, true), (7L, 6L, true)), ok.toString)
+  }
+
+  test("prefixBudgetKeep runs no Spark job before the caller's first action") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val perDoc = Tables.documents(spark, sf)
+        .select(col("doc_id"), size(split(col("text"), " ")).as("ntok"))
+      sc.setJobGroup("graft-pbk-call", "prefixBudgetKeep call")
+      val out = try GraftOps.prefixBudgetKeep(perDoc, col("doc_id"), col("ntok"), 1000L)
+                finally sc.clearJobGroup()
+      // listener events arrive in order: once a later fence job is
+      // seen, every job the call started has been seen too
+      sc.setJobGroup("graft-pbk-fence", "listener fence")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("graft-pbk-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("graft-pbk-fence"), "fence job never reached the listener")
+      assert(!groups.contains("graft-pbk-call"), "prefixBudgetKeep ran a job at call time")
+      assert(out.count() == Tables.documents(spark, sf).count())
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("redactPii strips every synthesized email and phone") {
     val redacted = SparkEntry.queries("text_pii_scan")(spark, sf)
       .select(col("doc_id"), col("redacted"))

@@ -344,8 +344,8 @@ class CurationSpec extends AnyFunSuite {
     val body = (0 until 24).map(j => s"w$j").mkString(" ") // 24 unique tokens
     val docs = Seq((0L, body), (1L, "pad " + body)).toDF("doc_id", "text")
     // span dedup: zero duplicate spans detected (everything "survives")
-    val span = graft.operators.Curation.spanDedupOn(docs)
-    assert(span.filter(!col("kept")).count() == 0,
+    val span = graft.api.GraftOps.spanDedup(docs, col("doc_id"), col("text"))
+    assert(span.filter(col("n_kept") =!= col("n_spans")).count() == 0,
       "span dedup unexpectedly caught the shifted copy")
     // substring dedup: the whole body is flagged in BOTH docs
     val sub = graft.operators.Curation.substringDedupOn(docs, 10)
