@@ -889,13 +889,14 @@ object GraftOps {
       .withColumn("contaminated", col("n_hits") > 0L)
   }
 
-  /** Exact column profile — the profile_columns query is this function
-    * over six orders columns: per column, row count, null count, exact
-    * distinct count. One union branch per column (a single-distinct aggregate plans
-    * WITHOUT Catalyst's Expand — no |cols|× fan-out of the full-width
-    * row; each branch scans only its own column and all branches run in
-    * one job). At 100 TB swap countDistinct for approx_count_distinct
-    * and even the per-column value shuffle disappears. */
+  /** Exact column profile — the profile_columns query is this
+    * function over six orders columns: per column, row count, null
+    * count, exact distinct count. One union branch per column (a
+    * single-distinct aggregate plans WITHOUT Catalyst's Expand — no
+    * |cols|× fan-out of the full-width row; each branch scans only its
+    * own column and all branches run in one job). At 100 TB swap
+    * countDistinct for approx_count_distinct and even the per-column
+    * value shuffle disappears. */
   def profileColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profileColumns: need at least one column")
     cols.map { c =>
@@ -981,7 +982,7 @@ object GraftOps {
     * the vocabulary fits and falls back to a tok-keyed shuffle at
     * web-corpus vocabulary sizes; 1-row corpus count broadcast; the
     * rank window partitions by doc — never a global sort. Returns
-    * (id, keywords); an empty text is one empty token. */
+    * (id, keywords). */
   def keywordExtract(df: DataFrame, id: Column, text: Column,
                      k: Int = 3): DataFrame = {
     require(k >= 1, s"keywordExtract: k >= 1, got $k")
