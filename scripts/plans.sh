@@ -17,11 +17,14 @@ export SPARK_GRAFT_SF_DIR
 # suffixes (x_39) are session-global counters: adding ONE query
 # renumbers every later plan, which buries the real diffs this split
 # exists to expose. The source line of a checkpoint's creation site
-# moves with any edit above it. Normalize them all — a snapshot diff
-# must mean the plan CHANGED, not that the run order or a line did.
+# moves with any edit above it. A scratch artifact's directory carries
+# the fixture's content hash and its part files carry a write UUID, so
+# both change whenever the artifact is rebuilt. Normalize them all — a
+# snapshot diff must mean the plan CHANGED, not that the run order, a
+# line or a rebuild did.
 sbt -batch "runMain graft.Explain" 2>/dev/null \
   | grep -v '^\[' \
-  | sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/(Subquery|subquery|cte)([ _]?)[0-9]+/\1\2N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/Lambda\$[0-9]+\/0x[0-9a-f]+@[0-9a-f]+/Lambda\$N/g; s/lambda ([a-z]+)_[0-9]+/lambda \1_N/g; s/(\.scala):[0-9]+/\1:N/g' \
+  | sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g; s/(Subquery|subquery|cte)([ _]?)[0-9]+/\1\2N/g; s/RDD\[[0-9]+\]/RDD[N]/g; s/Lambda\$[0-9]+\/0x[0-9a-f]+@[0-9a-f]+/Lambda\$N/g; s/lambda ([a-z]+)_[0-9]+/lambda \1_N/g; s/(\.scala):[0-9]+/\1:N/g; s/([_=]sf[0-9.]+[_=])[0-9a-f]{16}(\+[0-9a-f]{16})*/\1H/g; /^Location:/ s/[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}/UUID/g' \
   | awk '/^## /{found=1} found' > PLANS.tmp
 n=$(grep -c '^## ' PLANS.tmp)
 if [ "$n" -lt 1 ]; then

@@ -52,7 +52,12 @@ object Explain {
     "dedup_winnowing", "dedup_eval_winnowing", "join_asof_nearest",
     "text_ngram_novelty", "sample_kfold", "profile_freshness",
     "events_rfm_approx", "sample_dsir_approx", "dedup_winnowing_incremental",
-    "split_leakage_audit", "split_cluster_aware")
+    "split_leakage_audit", "split_cluster_aware",
+    "agg_bool", "events_basket", "fn_map", "join_asof_exec", "project_cast",
+    "sample_stratified", "set_union_evolve", "sim_kmeans", "sink_sorted",
+    "text_tfidf", "udaf_histogram", "win_drawdown",
+    "agg_ttest", "win_streak", "text_quality",
+    "sample_weighted", "profile_columns")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
