@@ -110,14 +110,20 @@ object GraftOps {
       regexp_replace(trim(lower(text)), " +", " "))
 
   /** Log-length × (1 − stopword-ratio) quality score — text_quality's
-    * `quality` column (unrounded; gate on round(…, 6) like pipeline_e2e
-    * if the threshold must be engine-portable). */
-  def qualityScore(text: Column, stopTokens: Seq[String]): Column = {
-    val n = graft.functions.GraftFunctions.tokCount(text)
-    val stopRatio = graft.functions.GraftFunctions.tokHits(text, stopTokens).cast(DoubleType) /
-      n.cast(DoubleType)
-    log(lit(1.0) + n) * (lit(1.0) - stopRatio)
-  }
+    * `quality` column (the query calls this and rounds to 6 dp; gate on
+    * round(…, 6) like pipeline_e2e if the threshold must be
+    * engine-portable). Tokens are single-space separated and counted by
+    * the pinned `tok_count` kernel. */
+  def qualityScore(text: Column, stopTokens: Seq[String]): Column =
+    log(lit(1.0) + graft.functions.GraftFunctions.tokCount(text)) *
+      (lit(1.0) - stopRatio(text, stopTokens))
+
+  /** Unrounded share of tokens equal to a stop token — `tok_hits` over
+    * `tok_count`, the ratio [[qualityScore]] discounts by and
+    * text_quality reports. */
+  private[graft] def stopRatio(text: Column, stopTokens: Seq[String]): Column =
+    graft.functions.GraftFunctions.tokHits(text, stopTokens).cast(DoubleType) /
+      graft.functions.GraftFunctions.tokCount(text).cast(DoubleType)
 
   /** Portable md5 mod-bucket in 0..buckets-1 — sample_hash /
     * split_train_val membership: a pure function of the row id,
@@ -269,11 +275,13 @@ object GraftOps {
           .cast(LongType).as("imp_nano"))
 
   /** Incremental winnowing near-dup candidates — the probe half of the
-    * guarantee-backed ingest screen (dedup_winnowing_incremental
-    * parameterized): `indexFps` is the persisted corpus fingerprint
+    * guarantee-backed ingest screen (the dedup_winnowing_incremental
+    * query calls this over its persisted index at the defaults): `indexFps` is the persisted corpus fingerprint
     * table (one row per (corpus id, fp_hash) — build it once with
     * [[winnowFingerprints]] and keep it between ingests), `newDocs` is
-    * the landing batch. Fingerprints seen in more than `cap` corpus
+    * the landing batch. The index is de-duplicated on (corpus id,
+    * fp_hash) first, so a repeated index row never counts twice.
+    * Fingerprints seen in more than `cap` corpus
     * docs are dropped before the join (the boilerplate-stop /
     * anti-quadratic bound), then every (corpus doc, new doc) pair
     * sharing ≥ 2 surviving fingerprints is emitted with its shared
@@ -417,9 +425,10 @@ object GraftOps {
   }
 
   /** Gaps-and-islands streak statistics — win_streak's construction
-    * over caller columns: per `key`, consecutive-`day` runs via the
-    * day − row_number island id, reduced to max/count/total. All
-    * integer; two key-partitioned aggregations. */
+    * (the query calls this per user over event days): per `key`,
+    * consecutive-`day` runs via the day − row_number island id, reduced
+    * to max/count/total. All integer; two key-partitioned aggregations.
+    * Returns (sk_key, max_streak, n_streaks, n_active_days). */
   def streakStats(df: DataFrame, key: Column, day: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sk_key")).orderBy(col("sk_day"))
@@ -434,42 +443,52 @@ object GraftOps {
   }
 
   /** Weighted PageRank over an arbitrary edge list — graph_pagerank's
-    * construction parameterized over the caller's graph: rank ⋈ edges →
-    * groupBy(dst) per round (one bounded equality shuffle over EDGES,
-    * never the upstream joins that built them), per-round 9-dp re-round
-    * for engine/partitioning stability. The edge list is eagerly
-    * localCheckpointed so the `iterations` unrolled references re-read
-    * materialized rows, not the caller's lineage. `vertices` bounds the
-    * driver cost to one count(). */
+    * construction (the query calls this over the trade graph and the
+    * nation vertex set): rank ⋈ edges → groupBy(dst) per round (one
+    * bounded equality shuffle over EDGES), per-round 9-dp re-round for
+    * engine/partitioning stability. The teleport term is the exact
+    * decimal 1 − damping as a double (0.15 at the default, not
+    * 0.15000000000000002), divided by |V|, the distinct vertex count —
+    * a scalar subquery carried as column `nv` of the vertex frame,
+    * evaluated once per execution, so no Spark job runs before the
+    * caller's first action. Each unrolled round re-reads `edges` as
+    * given: pass a materialized edge table (a parquet scan, a persisted
+    * or checkpointed frame) when building the edges is expensive.
+    * Returns (id, pagerank). */
   def pageRank(edges: DataFrame, src: Column, dst: Column, weight: Column,
                vertices: DataFrame, vid: Column,
                iterations: Int = 3, damping: Double = 0.85): DataFrame = {
-    val nV = vertices.select(vid).distinct().count().toDouble
+    val teleport = (BigDecimal(1) - BigDecimal(damping)).toDouble
     val e = edges.select(src.as("src"), dst.as("dst"), weight.as("w"))
-      .localCheckpoint()
     val out = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     val ew = e.join(out, "src")
       .select(col("src"), col("dst"),
         (col("w").cast(DoubleType) / col("outw")).as("p"))
-    val nodes = vertices.select(vid.as("id"))
-    var r = nodes.select(col("id"), (lit(1.0) / lit(nV)).as("r"))
+    val nodes = vertices.select(vid.as("id"),
+      vertices.select(vid).distinct().agg(count(lit(1)).cast(DoubleType)).scalar()
+        .as("nv"))
+    var r = nodes.select(col("id"), (lit(1.0) / col("nv")).as("r"))
     for (_ <- 1 to iterations) {
+      // round-19 note: broadcasting r/contrib per iteration was tried
+      // and reverted with the graph_components negative — loop-varying
+      // broadcast sides forfeit the reusable edge-side broadcast
       val contrib = ew.join(r, col("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("r") * col("p")).as("c"))
       r = nodes.join(contrib, col("id") === col("dst"), "left")
         .select(col("id"),
-          round(lit(1.0 - damping) / lit(nV)
+          round(lit(teleport) / col("nv")
             + lit(damping) * coalesce(col("c"), lit(0.0)), 9).as("r"))
     }
     r.select(col("id"), (round(col("r"), 6) + lit(0.0)).as("pagerank"))
   }
 
   /** Resample-to-grid + forward fill — events_gap_fill's construction
-    * over caller columns: per `key`, a dense integer-`bucket` grid
+    * (the query calls this per user over hourly buckets): per `key`, a dense integer-`bucket` grid
     * spanning [min, max] via sequence+explode (bounded by span, never
     * corpus), missing buckets as n=0, last observed per-bucket sum
     * carried forward. Every stage — grid explode, join, fill window —
-    * partitions on `key`; nothing global. */
+    * partitions on `key`; nothing global. Returns (gf_key, gf_bucket, n,
+    * filled_sum). */
   def gapFillForward(df: DataFrame, key: Column, bucket: Column,
                      value: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -500,14 +519,16 @@ object GraftOps {
     transform(e, x => when(nrm =!= 0.0, x / nrm).otherwise(lit(0.0)))
   }
 
-  /** Argmax aggregate — agg_argmax's shape: use inside .agg(...) to get
+  /** Argmax aggregate — agg_argmax's shape (the query aggregates with
+    * this): use inside .agg(...) to get
     * the payload of the row maximizing `ord` (ties → max payload) in a
     * single hash aggregate, no join-back. Read fields off the returned
     * struct: `.agg(argmax(price, key).as("m")) … col("m.<payload>")`. */
   def argmax(ord: Column, payload: Column): Column =
     max(struct(ord, payload))
 
-  /** SCD2 validity intervals — ingest_cdc_scd2's assembly step: given
+  /** SCD2 validity intervals — ingest_cdc_scd2's assembly step (the
+    * query calls this over its three written generations): given
     * one row per (key, version), attach `valid_to` (= next version, NULL
     * while current) and `is_current`. The per-key window is bounded by
     * the key's version count — the CDC feed invariant that keeps this
@@ -598,13 +619,15 @@ object GraftOps {
   }
 
   /** Two-sample grid Kolmogorov–Smirnov distance — agg_ks's
-    * construction over caller columns (the distribution-drift screen):
+    * construction (the query calls this with click vs purchase values
+    * at scale 100; the distribution-drift screen):
     * `value` quantizes to an integer grid (⌊v·scale⌋), per-bucket class
     * counts come from ONE map-side-combining pass, and the CDF gap is
     * the all-int64 `max|c1·n2 − c2·n1|` over the AGGREGATED grid (a
     * single bounded window, never the raw rows), then one closing
-    * division. One row: n1, n2, ks_stat. Grid KS equals exact KS at
-    * grid boundaries; max error is the largest within-bucket mass. */
+    * division. One row: n1, n2, ks_stat; an empty class raises. Grid
+    * KS equals exact KS at grid boundaries; max error is the largest
+    * within-bucket mass. */
   def ksDistance(df: DataFrame, group: Column, value: Column,
                  a: String, b: String, scale: Double = 100.0): DataFrame = {
     val bkt = df.filter(group.isin(a, b))
@@ -633,19 +656,26 @@ object GraftOps {
           + lit(0.0)).as("ks_stat"))
   }
 
-  /** Welch two-sample t-test — agg_ttest's construction over caller
-    * columns (the A/B / drift significance screen): per-class Σx, Σx²
-    * through the exact DECIMAL(18,6) cast, conditional-max fold to one
-    * row, closed-form t and Welch–Satterthwaite df on identical
-    * doubles. One row: n_a, n_b, mean_diff, t_stat, df_welch. */
+  /** Welch two-sample t-test — agg_ttest's construction (the query
+    * calls this with click vs purchase values; the A/B / drift
+    * significance screen): per-class Σx and Σx² accumulate int64 micros
+    * (⌊x·10⁶ + ½⌋ per row — exact and order-free, so any partitioning
+    * sums the same integers; exact for values with ≤ 3 decimals, whose
+    * squares have ≤ 6), a conditional-max fold to one row, closed-form
+    * t and Welch–Satterthwaite df on identical doubles. One row: n_a,
+    * n_b, mean_diff, t_stat, df_welch; a class with fewer than 2 rows
+    * raises. */
   def welchT(df: DataFrame, group: Column, value: Column,
              a: String, b: String): DataFrame = {
+    def microSum(e: String) =
+      (sum(expr(s"CAST(floor(($e) * 1e6 + 0.5) AS BIGINT)"))
+        .cast(DecimalType(26, 0)) / lit(1000000)).cast(DoubleType)
     val m = df.filter(group.isin(a, b))
       .select(group.as("g"), value.cast(DoubleType).as("x"))
       .groupBy(col("g"))
       .agg(count(lit(1)).cast(DoubleType).as("nd"),
-           sum(expr("CAST(x AS DECIMAL(18,6))")).cast(DoubleType).as("sx"),
-           sum(expr("CAST(x * x AS DECIMAL(18,6))")).cast(DoubleType).as("sxx"))
+           microSum("x").as("sx"),
+           microSum("x * x").as("sxx"))
     def pick(c: String, g: String, as: String) =
       max(when(col("g") === g, col(c))).as(as)
     m.agg(pick("nd", a, "nd1"), pick("sx", a, "sx1"), pick("sxx", a, "sxx1"),
@@ -679,26 +709,37 @@ object GraftOps {
   }
 
   /** Per-node triangle participation — graph_triangles' construction
-    * over an arbitrary edge list: symmetrize to canonical u<v pairs
-    * (self-loops dropped), enumerate a<b<c via the two-hop equality
-    * joins (each triangle once), explode to corners. Returns
-    * (node, n_triangles) for nodes in ≥1 triangle — left-join onto the
-    * vertex set for zero rows. Edge list localCheckpointed once (three
-    * references). */
-  def triangleCounts(edges: DataFrame, src: Column, dst: Column): DataFrame = {
-    val ue = edges.select(src.as("tc_s"), dst.as("tc_d"))
-      .filter(col("tc_s") =!= col("tc_d"))
-      .select(least(col("tc_s"), col("tc_d")).as("u"),
-              greatest(col("tc_s"), col("tc_d")).as("v"))
+    * (the query left-joins this onto the nation vertex set): symmetrize
+    * to canonical u<v pairs (self-loops dropped), enumerate a<b<c via
+    * the two-hop equality joins (each triangle once), explode to
+    * corners. Returns (node, n_triangles) for nodes in ≥1 triangle —
+    * left-join onto the vertex set for zero rows. The undirected edge
+    * table is eagerly localCheckpointed once (the enumeration reads it
+    * three times; one Spark job at call time). */
+  def triangleCounts(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    trianglesPerNode(undirectedEdges(edges, src, dst))
+
+  /** Distinct canonical (u < v) pairs of an edge list, self-loops
+    * dropped, eagerly localCheckpointed — the one edge table
+    * [[triangleCounts]] and [[clusteringCoefficient]] read. */
+  private def undirectedEdges(edges: DataFrame, src: Column, dst: Column): DataFrame =
+    edges.select(src.as("ue_s"), dst.as("ue_d"))
+      .filter(col("ue_s") =!= col("ue_d"))
+      .select(least(col("ue_s"), col("ue_d")).as("u"),
+              greatest(col("ue_s"), col("ue_d")).as("v"))
       .distinct()
       .localCheckpoint()
+
+  /** (node, n_triangles) over canonical `(u, v)` pairs: triangles
+    * a<b<c from e(a,b) ⋈ e(b,c) ⋈ e(a,c), each counted once, exploded to
+    * their three corners. */
+  private def trianglesPerNode(ue: DataFrame): DataFrame =
     ue.select(col("u").as("a"), col("v").as("b"))
       .join(ue.select(col("u").as("b2"), col("v").as("c")), col("b") === col("b2"))
       .join(ue.select(col("u").as("a2"), col("v").as("c2")),
         col("a") === col("a2") && col("c") === col("c2"))
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
-  }
 
   /** Blocked fuzzy entity canonicalization — join_fuzzy_blocked's
     * construction over caller columns: every entity resolves to the
@@ -712,7 +753,10 @@ object GraftOps {
     * length can never cost recall; tail-token recall is the blocking
     * assumption the caller accepts (LawsSpec measures it exact on the
     * fixtures). `band` must be > maxDist/3-ish for bucket selectivity;
-    * the default mirrors the declared query (band 3, maxDist 2).
+    * the join_fuzzy_blocked query calls this over part names at the
+    * defaults (band 3, maxDist 2). A NULL name raises with the smallest
+    * id carrying it (checked once per distinct name, not per row)
+    * instead of silently dropping the entity from the output.
     * Returns (id, canon_id, n_fuzzy) — one row PER ENTITY, never a
     * pair list, so output stays linear at 100 TB. */
   def fuzzyCanonicalize(df: DataFrame, id: Column, name: Column,
@@ -725,6 +769,12 @@ object GraftOps {
     // → vocab² Levenshtein evals), rejoin rows at the end
     val names = rows.groupBy(col("fz_nm"))
       .agg(min(col("fz_id")).as("fz_gmin"), count(lit(1)).as("fz_gcnt"))
+      .select(
+        when(col("fz_nm").isNull, raise_error(concat(
+          lit("graft.fuzzyCanonicalize: name is NULL for id "),
+          col("fz_gmin").cast(StringType))).cast(StringType))
+          .otherwise(col("fz_nm")).as("fz_nm"),
+        col("fz_gmin"), col("fz_gcnt"))
     val banded = names
       .select(col("fz_nm"),
         element_at(split(col("fz_nm"), " "), -1).as("fz_lw"),
@@ -742,6 +792,8 @@ object GraftOps {
       .join(names.select(col("fz_nm").as("nb"), col("fz_gmin"), col("fz_gcnt")), "nb")
       .groupBy(col("na"))
       .agg(min(col("fz_gmin")).as("canon_id"), sum(col("fz_gcnt")).as("fz_n"))
+    // no broadcast hint: the resolved side is vocabulary-sized, which
+    // can outgrow a broadcast at 100 TB; AQE picks
     rows.join(resolved, rows("fz_nm") === resolved("na"))
       .select(col("fz_id").as("id"), col("canon_id"),
         (col("fz_n") - 1L).as("n_fuzzy"))
@@ -1081,14 +1133,16 @@ object GraftOps {
     call_function("div", a, b)
 
   /** Affine-normalized 32-bit Morton z-value of two nonnegative integer
-    * keys — sink_zorder's curve math over arbitrary columns: each key
-    * is mapped into [0, 2¹⁶) by the exact integer (k·65536) div hi
-    * (hi = domain max + 1, typically a broadcast max(k)+1), then
-    * bit-interleaved (x on even positions) with the classic 4-step
-    * magic-mask ladder. All int64 bit ops — bit-identical on any
-    * engine or partitioning. Range-partition + sort by this column and
-    * every output file boxes BOTH keys, so predicates on either skip
-    * files and row groups (the multi-dimensional zone-map layout). */
+    * keys — sink_zorder's curve math (the query lays its files out by
+    * this column; its DuckDB oracle renders the same ladder from
+    * `Scans.zValSql`): each key is mapped into [0, 2¹⁶) by the exact
+    * integer (k·65536) div hi (hi = domain max + 1, typically a
+    * broadcast max(k)+1), then bit-interleaved (x on even positions)
+    * with the classic 4-step magic-mask ladder. All int64 bit ops —
+    * bit-identical on any engine or partitioning. Range-partition +
+    * sort by this column and every output file boxes BOTH keys, so
+    * predicates on either skip files and row groups (the
+    * multi-dimensional zone-map layout). */
   def mortonZ(x: Column, xHi: Column, y: Column, yHi: Column): Column = {
     def spread(c: Column): Column = {
       val s1 = c.bitwiseOR(shiftleft(c, 8)).bitwiseAND(lit(16711935L))
@@ -1102,36 +1156,27 @@ object GraftOps {
     spread(norm(x, xHi)).bitwiseOR(shiftleft(spread(norm(y, yHi)), 1))
   }
 
-  /** RFM quintile segmentation — events_rfm over an arbitrary event
-    * log: recency in `recencyUnit` ticks of the exact-integer event
+  /** RFM quintile segmentation — events_rfm's construction (the query
+    * calls this over the events fixture, purchases as monetary, hourly
+    * recency): recency in `recencyUnit` ticks of the exact-integer event
     * time (int64 subtraction + integral divide, never float), total
     * event count, exact-DECIMAL sum of `value` over rows matching
     * `isMonetary`; ntile(5) scores on fully tie-broken orders (the
     * DECIMAL — not a rounded double — is the monetary sort key), and
     * the concatenated "RFM" digit segment. Returns (user_id, r_units,
     * frequency, monetary, r_score, f_score, m_score, segment). Scale
-    * shape: one map-side-combining groupBy(user) before three
-    * |users|-row global windows (text_quality_bucket's posture — past
-    * ~10⁹ users swap the ntiles for broadcast approx_percentile
-    * cutpoints). */
+    * shape: one map-side-combining groupBy(user) ([[rfmBase]]) before
+    * three |users|-row global windows (text_quality_bucket's posture —
+    * past ~10⁹ users swap the ntiles for broadcast approx_percentile
+    * cutpoints, as events_rfm_approx does over the same base). */
   def rfmSegments(df: DataFrame, user: Column, ts: Column, value: Column,
                   isMonetary: Column,
                   recencyUnit: Long = 3600000000000L): DataFrame = {
-    require(recencyUnit >= 1L, s"rfmSegments: recencyUnit >= 1, got $recencyUnit")
-    val per = df.groupBy(user.as("user_id"))
-      .agg(max(ts).as("last_ts"),
-           count(lit(1)).as("frequency"),
-           sum(when(isMonetary, value.cast(DecimalType(18, 6)))
-               .otherwise(lit(0).cast(DecimalType(18, 6)))).as("mon_dec"))
-    val mx = df.agg(max(ts).as("max_ts")) // broadcast 1-row total
     val w = org.apache.spark.sql.expressions.Window
     val wR = w.orderBy(col("r_units").asc, col("user_id").asc)
     val wF = w.orderBy(col("frequency").desc, col("user_id").asc)
     val wM = w.orderBy(col("mon_dec").desc, col("user_id").asc)
-    per.crossJoin(broadcast(mx))
-      .select(col("user_id"),
-        idiv(col("max_ts") - col("last_ts"), lit(recencyUnit)).as("r_units"),
-        col("frequency"), col("mon_dec"))
+    rfmBase(df, user, ts, value, isMonetary, recencyUnit)
       .withColumn("r_score", ntile(5).over(wR).cast(LongType))
       .withColumn("f_score", ntile(5).over(wF).cast(LongType))
       .withColumn("m_score", ntile(5).over(wM).cast(LongType))
@@ -1142,15 +1187,35 @@ object GraftOps {
                col("m_score").cast(StringType)).as("segment"))
   }
 
-  /** Robust dispersion profile — agg_mad over an arbitrary numeric
-    * column: per group the exact interpolated median, the median
-    * absolute deviation, and the count past the Hampel gate
-    * dev > `gate`·mad (default 4.4478 = 3·1.4826, the 3σ-equivalent).
-    * Returns (g, n, median, mad, n_outliers). The raw (unrounded)
-    * median/mad feed the math; rounding is output-only. Two extra
-    * key-partitioned passes over a localCheckpointed 3-column dev
-    * table; at 100 TB swap percentile → approx_percentile, same plan
-    * shape. */
+  /** The per-user (user_id, r_units, frequency, mon_dec) base
+    * [[rfmSegments]] scores and the events_rfm_approx query cuts with
+    * approx_percentile: one map-side-combining groupBy(user) plus one
+    * broadcast 1-row corpus max. */
+  private[graft] def rfmBase(df: DataFrame, user: Column, ts: Column,
+                             value: Column, isMonetary: Column,
+                             recencyUnit: Long): DataFrame = {
+    require(recencyUnit >= 1L, s"rfmSegments: recencyUnit >= 1, got $recencyUnit")
+    val per = df.groupBy(user.as("user_id"))
+      .agg(max(ts).as("last_ts"),
+           count(lit(1)).as("frequency"),
+           sum(when(isMonetary, value.cast(DecimalType(18, 6)))
+               .otherwise(lit(0).cast(DecimalType(18, 6)))).as("mon_dec"))
+    val mx = df.agg(max(ts).as("max_ts")) // broadcast 1-row total
+    per.crossJoin(broadcast(mx))
+      .select(col("user_id"),
+        idiv(col("max_ts") - col("last_ts"), lit(recencyUnit)).as("r_units"),
+        col("frequency"), col("mon_dec"))
+  }
+
+  /** Robust dispersion profile — agg_mad's construction (the query
+    * calls this per language over n_chars): per group the exact
+    * interpolated median, the median absolute deviation, and the count
+    * past the Hampel gate dev > `gate`·mad (default 4.4478 = 3·1.4826,
+    * the 3σ-equivalent). Returns (g, n, median, mad, n_outliers). The
+    * raw (unrounded) median/mad feed the math; rounding is output-only.
+    * Two extra key-partitioned passes over a 3-column dev table that is
+    * eagerly localCheckpointed (one Spark job at call time); at 100 TB
+    * swap percentile → approx_percentile, same plan shape. */
   def madStats(df: DataFrame, group: Column, x: Column,
                gate: Double = 4.4478): DataFrame = {
     val base = df.select(group.as("g"), x.as("mx"))
@@ -1222,8 +1287,10 @@ object GraftOps {
       .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("survivor"))
 
   /** Exact distinct counts via mergeable fixed-width bitmaps —
-    * agg_bitmap_distinct over caller columns: `(g, n_distinct)` per
-    * group, exact, with the shuffle carrying (group, bucket, ≤4 KB
+    * agg_bitmap_distinct's construction (the query calls this over
+    * lineitem order keys): `(g, n_distinct, n_buckets)` per group,
+    * exact, with `n_buckets` the number of 32768-key bitmap buckets the
+    * group touched and the shuffle carrying (group, bucket, ≤4 KB
     * bitmap) rows bounded by the KEY RANGE instead of every raw
     * distinct key. `key` must be a non-negative integer column (ids,
     * hashes); it is shifted 1-based internally because the engine's
@@ -1249,7 +1316,8 @@ object GraftOps {
       .groupBy(col("g"), col("bucket"))
       .agg(expr("bitmap_construct_agg(pos)").as("bm"))
     perBucket.groupBy(col("g"))
-      .agg(sum(expr("bitmap_count(bm)")).as("n_distinct"))
+      .agg(sum(expr("bitmap_count(bm)")).as("n_distinct"),
+           count(lit(1)).as("n_buckets"))
   }
 
   /** Token-exact blocklist hit count — text_blocklist's gate over a
@@ -1356,29 +1424,20 @@ object GraftOps {
     out
   }
 
-  /** Per-node clustering coefficient — graph_clustering over caller
-    * edge columns: `(node, deg, n_triangles, cc)` with cc = 2·T/(deg·
-    * (deg−1)) on the undirected distinct graph, 0 for deg ≤ 1. Shares
-    * [[triangleCounts]]' exact enumeration; every join touches only
-    * the deduplicated edge table (localCheckpointed once — degree and
-    * both wedge sides re-read it). */
+  /** Per-node clustering coefficient — graph_clustering's construction
+    * (the query left-joins this onto the nation vertex set, 0 for
+    * nations without edges): `(node, deg, n_triangles, cc)` with cc =
+    * 2·T/(deg·(deg−1)) on the undirected distinct graph, 0 for deg ≤ 1,
+    * for every node with deg ≥ 1. The undirected edge table and the
+    * triangle enumeration are [[triangleCounts]]' own; the edge table
+    * is eagerly localCheckpointed once (degree and the enumeration
+    * re-read it; one Spark job at call time). */
   def clusteringCoefficient(edges: DataFrame, src: Column, dst: Column): DataFrame = {
-    val ue = edges.select(src.as("cc_s"), dst.as("cc_d"))
-      .filter(col("cc_s") =!= col("cc_d"))
-      .select(least(col("cc_s"), col("cc_d")).as("u"),
-              greatest(col("cc_s"), col("cc_d")).as("v"))
-      .distinct()
-      .localCheckpoint()
+    val ue = undirectedEdges(edges, src, dst)
     val deg = ue.select(col("u").as("node"))
       .union(ue.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val tri = ue.select(col("u").as("a"), col("v").as("b"))
-      .join(ue.select(col("u").as("b2"), col("v").as("c")), col("b") === col("b2"))
-      .join(ue.select(col("u").as("a2"), col("v").as("c2")),
-        col("a") === col("a2") && col("c") === col("c2"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
-    deg.join(tri, Seq("node"), "left")
+    deg.join(trianglesPerNode(ue), Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .withColumn("cc",

@@ -255,7 +255,8 @@ object GraftFunctions {
     GraftBridge.column(Md5Prefix48(GraftBridge.expression(c)))
 
   /** Column-API entry for the fused 32-bit sign pack — value-identical
-    * to the unrolled IF-sum packSignBits(off) (pinned in TextSigSpec). */
+    * to the unrolled 32-term IF-sum whose reference copy lives in
+    * TextSigSpec's sign_pack32 test. */
   def signPack32(c: Column, off: Int): Column =
     GraftBridge.column(SignPack32(GraftBridge.expression(c),
       org.apache.spark.sql.catalyst.expressions.Literal(off)))

@@ -444,9 +444,9 @@ case class Md5Prefix48(child: Expression) extends TextSigExpr {
 
 /** Fused 32-bit sign pack (round-18 opt): bit i set iff
   * `embedding[off + i] >= 0` — the value of the unrolled 32-term
-  * IF-sum `packSignBits(off)` as ONE loop instead of 32 branch
-  * expressions per row (and a fraction of the generated-code size).
-  * Bit-identical; pinned in TextSigSpec. */
+  * IF-sum (the reference copy in TextSigSpec's sign_pack32 test) as ONE
+  * loop instead of 32 branch expressions per row (and a fraction of
+  * the generated-code size). Bit-identical; pinned in TextSigSpec. */
 object SignPack32 {
   /** round-19 hardening (ADVICE r18): match the unrolled SQL IF-sum on
     * adversarial inputs too — a NULL element leaves its bit CLEAR

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.D — aggregations. All shapes are hash aggregations with
@@ -222,7 +223,7 @@ object Aggregates extends QueryGroup {
   private val aggArgmax: QFn = (s, d) =>
     Tables.orders(s, d)
       .groupBy(col("o_custkey"))
-      .agg(max(struct(col("o_totalprice"), col("o_orderkey"))).as("m"),
+      .agg(GraftOps.argmax(col("o_totalprice"), col("o_orderkey")).as("m"),
            count(lit(1)).as("n_orders"))
       .select(col("o_custkey"),
               col("m.o_totalprice").as("best_price"),
@@ -554,46 +555,16 @@ object Aggregates extends QueryGroup {
   }
 
   /** Welch two-sample t-test between click and purchase values — the
-    * A/B-test / drift significance screen. Per-type Σx and Σx² go
-    * through the exact DECIMAL(18,6) cast (the agg_linreg device), the
-    * two type rows fold to one via conditional max (order-free), and
-    * mean/variance/t/Welch-Satterthwaite df are a closed form over
-    * those identical doubles — engine-identical, no quantization
-    * needed. One contingency-free aggregation pass; nothing but six
-    * numbers crosses the final stage. */
-  private val aggTtest: QFn = (s, d) => {
-    // round-18 opt: int64-micros accumulators (the agg_linreg idiom;
-    // value is 2 dp so value·value is 4 dp — inside the exactness bound)
-    def dsum(e: String) =
-      (sum(expr(s"CAST(floor(($e) * 1e6 + 0.5) AS BIGINT)"))
-        .cast("decimal(26,0)") / lit(1000000)).cast("double")
-    val m = Tables.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).cast("double").as("nd"),
-           dsum("value").as("sx"),
-           dsum("value * value").as("sxx"))
-    def pick(c: String, et: String) =
-      max(when(col("event_type") === et, col(c))).as(s"${c}_$et")
-    m.agg(pick("nd", "click"), pick("sx", "click"), pick("sxx", "click"),
-          pick("nd", "purchase"), pick("sx", "purchase"), pick("sxx", "purchase"))
-      .withColumn("m1", col("sx_click") / col("nd_click"))
-      .withColumn("m2", col("sx_purchase") / col("nd_purchase"))
-      .withColumn("v1", (col("nd_click") * col("sxx_click") - col("sx_click") * col("sx_click"))
-        / (col("nd_click") * (col("nd_click") - lit(1.0))))
-      .withColumn("v2", (col("nd_purchase") * col("sxx_purchase") - col("sx_purchase") * col("sx_purchase"))
-        / (col("nd_purchase") * (col("nd_purchase") - lit(1.0))))
-      .withColumn("se2", col("v1") / col("nd_click") + col("v2") / col("nd_purchase"))
-      .select(
-        col("nd_click").cast("long").as("n_click"),
-        col("nd_purchase").cast("long").as("n_purchase"),
-        (round(col("m1") - col("m2"), 6) + lit(0.0)).as("mean_diff"),
-        (round((col("m1") - col("m2")) / sqrt(col("se2")), 6) + lit(0.0)).as("t_stat"),
-        (round(col("se2") * col("se2")
-          / ((col("v1") / col("nd_click")) * (col("v1") / col("nd_click")) / (col("nd_click") - lit(1.0))
-           + (col("v2") / col("nd_purchase")) * (col("v2") / col("nd_purchase")) / (col("nd_purchase") - lit(1.0))), 2)
-          + lit(0.0)).as("df_welch"))
-  }
+    * A/B-test / drift significance screen, [[GraftOps.welchT]] over the
+    * event value (int64-micros Σx and Σx², a conditional-max fold of
+    * the two type rows, closed-form t and Welch–Satterthwaite df; a
+    * type with fewer than 2 rows raises). Nothing but six numbers
+    * crosses the final stage. */
+  private val aggTtest: QFn = (s, d) =>
+    GraftOps.welchT(Tables.events(s, d), col("event_type"), col("value"),
+        "click", "purchase")
+      .select(col("n_a").as("n_click"), col("n_b").as("n_purchase"),
+        col("mean_diff"), col("t_stat"), col("df_welch"))
 
   /** Two-sample Kolmogorov–Smirnov distance between the click and
     * purchase value distributions on a centi-unit grid — the
@@ -607,25 +578,11 @@ object Aggregates extends QueryGroup {
     * evaluated at grid boundaries; max error is the largest
     * within-bucket probability mass (≤1e-2-quantile scale here).
     * Every intermediate is int64, so any partitioning yields the
-    * identical answer. */
-  private val aggKs: QFn = (s, d) => {
-    val b = Tables.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(floor(col("value") * lit(100.0)).cast("long").as("bkt"), col("event_type"))
-      .groupBy(col("bkt"))
-      .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c1"),
-           sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("c2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bkt")).rowsBetween(Long.MinValue, 0)
-    val n = b.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    b.select(col("bkt"), sum(col("c1")).over(w).as("f1"), sum(col("c2")).over(w).as("f2"))
-      .crossJoin(broadcast(n))
-      .agg(max(abs(col("f1") * col("n2") - col("f2") * col("n1"))).as("dnum"),
-           max(col("n1")).as("n1"), max(col("n2")).as("n2"))
-      .select(col("n1"), col("n2"),
-        (round(col("dnum").cast("double") / (col("n1") * col("n2")).cast("double"), 6)
-          + lit(0.0)).as("ks_stat"))
-  }
+    * identical answer. This is [[GraftOps.ksDistance]] at scale 100,
+    * which raises if either type has no row. */
+  private val aggKs: QFn = (s, d) =>
+    GraftOps.ksDistance(Tables.events(s, d), col("event_type"), col("value"),
+      "click", "purchase")
 
   /** Population stability index between the first and second time
     * halves of the event stream — the batch spelling of the
@@ -679,25 +636,13 @@ object Aggregates extends QueryGroup {
     * re-read it; at 100 TB swap the exact percentiles for
     * approx_percentile (agg_approx_quantiles' constant-memory path)
     * without changing the plan shape — text_quality_bucket_approx is
-    * the proven in-repo cutpoint recipe. */
-  private val aggMad: QFn = (s, d) => {
-    val docs = Tables.documents(s, d)
-    val med = docs.groupBy(col("lang"))
-      .agg(expr("percentile(n_chars, 0.5)").as("med"))
-    val dv = docs.join(broadcast(med), "lang")
-      .select(col("lang"), col("med"),
-        abs(col("n_chars") - col("med")).as("dev"))
-      .localCheckpoint()
-    val mad = dv.groupBy(col("lang")).agg(expr("percentile(dev, 0.5)").as("mad"))
-    dv.join(broadcast(mad), "lang")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-           (round(max(col("med")), 6) + lit(0.0)).as("median"),
-           (round(max(col("mad")), 6) + lit(0.0)).as("mad"),
-           sum(when(col("dev") > lit(4.4478) * col("mad"), 1L).otherwise(0L))
-             .as("n_outliers"))
+    * the proven in-repo cutpoint recipe. This is [[GraftOps.madStats]]
+    * at the default gate. */
+  private val aggMad: QFn = (s, d) =>
+    GraftOps.madStats(Tables.documents(s, d), col("lang"), col("n_chars"))
+      .select(col("g").as("lang"), col("n").as("n_docs"), col("median"),
+        col("mad"), col("n_outliers"))
       .orderBy(col("lang"))
-  }
 
   /** Exact distinct counting via mergeable fixed-width bitmaps — the
     * at-scale replacement for COUNT(DISTINCT) when the approximate
@@ -712,22 +657,18 @@ object Aggregates extends QueryGroup {
     * count-distinct rollups; the bitmaps themselves are mergeable
     * state, so the same pass can feed incremental/grouping-set
     * rollups. The oracle is the plain COUNT(DISTINCT) — equality
-    * proves the bitmap path exact, not approximate. */
-  private val aggBitmapDistinct: QFn = (s, d) => {
-    // key shifted to 1-based (fixture orderkeys start at 0; the bitmap
-    // position/bucket functions are defined on positive inputs — the
-    // shift is part of the declared recipe and mirrored in the oracle)
-    val perBucket = Tables.lineitem(s, d)
-      .select(col("l_returnflag"),
-        expr("bitmap_bucket_number(l_orderkey + 1)").as("bucket"),
-        expr("bitmap_bit_position(l_orderkey + 1)").as("pos"))
-      .groupBy(col("l_returnflag"), col("bucket"))
-      .agg(expr("bitmap_construct_agg(pos)").as("bm"))
-    perBucket.groupBy(col("l_returnflag"))
-      .agg(sum(expr("bitmap_count(bm)")).as("n_orders"),
-           count(lit(1)).as("n_buckets"))
+    * proves the bitmap path exact, not approximate. This is
+    * [[GraftOps.bitmapDistinct]], which raises on a NULL or negative
+    * key instead of miscounting it. */
+  private val aggBitmapDistinct: QFn = (s, d) =>
+    // GraftOps shifts the key 1-based (fixture orderkeys start at 0; the
+    // bitmap position/bucket functions are defined on positive inputs —
+    // the shift is part of the declared recipe and mirrored in the oracle)
+    GraftOps.bitmapDistinct(Tables.lineitem(s, d),
+        col("l_returnflag"), col("l_orderkey"))
+      .select(col("g").as("l_returnflag"), col("n_distinct").as("n_orders"),
+        col("n_buckets"))
       .orderBy(col("l_returnflag"))
-  }
 
   /** Audience-overlap matrix via mergeable bitmaps — agg_bitmap_distinct
     * extended from sizes to SET ALGEBRA (the ads/analytics "how many

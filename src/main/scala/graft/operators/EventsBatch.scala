@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -151,24 +152,16 @@ object EventsBatch extends QueryGroup {
     * grid explode, the join, and the fill window all partition on
     * user_id — one key-local pipeline, no global ordering anywhere.
     * Restricted to user_id < 10 to keep the oracled output small; the
-    * construction is per-key and scales with keys × span. */
-  private val eventsGapFill: QFn = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("hr"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val e = Tables.events(s, d)
-      .filter(col("user_id") < 10L)
-      .select(col("user_id"), expr("ts div 3600000000000").as("hr"), col("value"))
-    val perHr = e.groupBy(col("user_id"), col("hr"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 6).as("sum_v"))
-    val grid = e.groupBy(col("user_id"))
-      .agg(min(col("hr")).as("h0"), max(col("hr")).as("h1"))
-      .select(col("user_id"), explode(sequence(col("h0"), col("h1"))).as("hr"))
-    grid.join(perHr, Seq("user_id", "hr"), "left")
-      .select(col("user_id"), col("hr"),
-        coalesce(col("n"), lit(0L)).as("n"),
-        last(col("sum_v"), ignoreNulls = true).over(w).as("filled_sum"))
+    * construction is per-key and scales with keys × span. This is
+    * [[GraftOps.gapFillForward]] over (user_id, hour, value). */
+  private val eventsGapFill: QFn = (s, d) =>
+    GraftOps.gapFillForward(
+        Tables.events(s, d).filter(col("user_id") < 10L)
+          .select(col("user_id"), expr("ts div 3600000000000").as("hr"), col("value")),
+        col("user_id"), col("hr"), col("value"))
+      .select(col("gf_key").as("user_id"), col("gf_bucket").as("hr"),
+        col("n"), col("filled_sum"))
       .orderBy(col("user_id"), col("hr"))
-  }
 
   /** First-order Markov transitions over each user's event stream — the
     * behavioral n-gram (what follows what) that powers next-event
@@ -428,49 +421,22 @@ object EventsBatch extends QueryGroup {
     * text_quality_bucket posture. This rung is the declared EXACT
     * companion; past ~10⁹ users run its shipped twin
     * `events_rfm_approx` (broadcast approx_percentile cutpoints, zero
-    * WindowExec, LawsSpec-bounded against this rung). */
-  /** The per-user (recency, frequency, monetary) aggregate shared by
-    * the exact and approx RFM rungs: one map-side-combining
-    * groupBy(user) + one broadcast 1-row corpus max. */
-  private def rfmBase(s: org.apache.spark.sql.SparkSession,
-                      d: String): org.apache.spark.sql.DataFrame = {
-    val e = Tables.events(s, d)
-    val per = e.groupBy(col("user_id"))
-      .agg(max(col("ts")).as("last_ts"),
-           count(lit(1)).as("frequency"),
-           sum(when(col("event_type") === "purchase",
-                 expr("CAST(value AS DECIMAL(18,6))"))
-               .otherwise(expr("CAST(0 AS DECIMAL(18,6))"))).as("mon_dec"))
-    val mx = e.agg(max(col("ts")).as("max_ts")) // broadcast 1-row total
-    per.crossJoin(broadcast(mx))
-      .select(col("user_id"),
-        expr("(max_ts - last_ts) div 3600000000000").as("r_hours"),
-        col("frequency"), col("mon_dec"))
-  }
-
-  private val eventsRfm: QFn = (s, d) => {
-    val wR = Window.orderBy(col("r_hours").asc, col("user_id").asc)
-    val wF = Window.orderBy(col("frequency").desc, col("user_id").asc)
-    val wM = Window.orderBy(col("mon_dec").desc, col("user_id").asc)
-    rfmBase(s, d)
-      .withColumn("r_score", ntile(5).over(wR).cast("long"))
-      .withColumn("f_score", ntile(5).over(wF).cast("long"))
-      .withColumn("m_score", ntile(5).over(wM).cast("long"))
-      .select(col("user_id"), col("r_hours"), col("frequency"),
-        round(col("mon_dec").cast("double"), 4).as("monetary"),
-        col("r_score"), col("f_score"), col("m_score"),
-        concat(col("r_score").cast("string"), col("f_score").cast("string"),
-               col("m_score").cast("string")).as("segment"))
+    * WindowExec, LawsSpec-bounded against this rung). This is
+    * [[GraftOps.rfmSegments]] with purchases as the monetary rows and
+    * hourly recency. */
+  private val eventsRfm: QFn = (s, d) =>
+    GraftOps.rfmSegments(Tables.events(s, d), col("user_id"), col("ts"),
+        col("value"), col("event_type") === "purchase")
+      .withColumnRenamed("r_units", "r_hours")
       .orderBy(col("user_id"))
-  }
 
   /** The RUNNABLE 100 TB twin of events_rfm (round-15 verdict item 1 —
     * the text_quality_bucket_approx recipe applied to the second of
-    * the three exact-ntile rungs): the same per-user base, but all
-    * three quintile scores come from approx_percentile cutpoints
-    * (Greenwald-Khanna, accuracy 10⁴) computed in ONE constant-memory
-    * aggregation pass over the |users|-row base and broadcast into
-    * CASE arithmetic. No global sort, zero WindowExec anywhere in the
+    * the three exact-ntile rungs): the same per-user base
+    * ([[GraftOps.rfmBase]]), but all three quintile scores come from
+    * approx_percentile cutpoints (Greenwald-Khanna, accuracy 10⁴)
+    * computed in ONE constant-memory aggregation pass over the
+    * |users|-row base and broadcast into CASE arithmetic. No global sort, zero WindowExec anywhere in the
     * plan (PlanSpec-pinned). Tie semantics differ from the exact rung
     * by design: ntile splits equal values across buckets by user_id,
     * a value threshold keeps them together — LawsSpec bounds the
@@ -478,7 +444,9 @@ object EventsBatch extends QueryGroup {
     * error. Not oracled: the sketch is engine-specific — events_rfm
     * remains the oracled shape, this twin is the scale path. */
   private val eventsRfmApprox: QFn = (s, d) => {
-    val base = rfmBase(s, d)
+    val base = GraftOps.rfmBase(Tables.events(s, d), col("user_id"), col("ts"),
+        col("value"), col("event_type") === "purchase", 3600000000000L)
+      .withColumnRenamed("r_units", "r_hours")
     val acc = 10000
     val cuts = base.agg(
       expr(s"approx_percentile(CAST(r_hours AS DOUBLE), array(0.2D, 0.4D, 0.6D, 0.8D), $acc)").as("cr"),

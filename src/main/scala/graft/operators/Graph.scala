@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -84,31 +85,15 @@ object Graph extends QueryGroup {
       .orderBy(col("nationkey"))
   }
 
-  /** Weighted PageRank, damping 0.85, 3 unrolled power iterations. */
-  private val graphPagerank: QFn = (s, d) => {
-    val nV = 25.0 // |nation| is fixed by the schema on every SF
-    // one materialization of the edge build; the 3 unrolled iterations
-    // then each re-read ≤|V|² checkpointed rows, not the fact join
-    val e = tradeEdgesCached(s, d)
-    val out = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val ew = e.join(out, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("outw")).as("p"))
-    val nodes = Tables.nation(s, d).select(col("n_nationkey").as("id"))
-    var r = nodes.select(col("id"), (lit(1.0) / lit(nV)).as("r"))
-    for (_ <- 1 to 3) {
-      // round-19 note: broadcasting r/contrib per iteration was tried
-      // and reverted with the graph_components negative — loop-varying
-      // broadcast sides forfeit the reusable edge-side broadcast
-      val contrib = ew.join(r, col("src") === col("id"))
-        .groupBy(col("dst")).agg(sum(col("r") * col("p")).as("c"))
-      r = nodes.join(contrib, col("id") === col("dst"), "left")
-        .select(col("id"),
-          round(lit(0.15) / lit(nV) + lit(0.85) * coalesce(col("c"), lit(0.0)), 9).as("r"))
-    }
-    r.select(col("id").as("nationkey"), (round(col("r"), 6) + lit(0.0)).as("pagerank"))
+  /** Weighted PageRank, damping 0.85, 3 unrolled power iterations —
+    * [[GraftOps.pageRank]] over the persisted edge artifact (each
+    * iteration re-reads ≤|V|² parquet rows, not the fact join) and the
+    * nation vertex set. */
+  private val graphPagerank: QFn = (s, d) =>
+    GraftOps.pageRank(tradeEdgesCached(s, d), col("src"), col("dst"), col("w"),
+        Tables.nation(s, d), col("n_nationkey"))
+      .select(col("id").as("nationkey"), col("pagerank"))
       .orderBy(col("pagerank").desc, col("nationkey"))
-  }
 
   /** Per-node triangle participation over the undirected trade graph —
     * the clustering/cohesion kernel (third classic after degree and
@@ -120,29 +105,17 @@ object Graph extends QueryGroup {
     * at real scale the same plan runs with degree-based edge
     * orientation (orient toward the higher-(degree,id) endpoint)
     * which bounds the wedge fan-out by arboricity — with |V|=25 the
-    * canonical id orientation is that plan. localCheckpoint: the edge
-    * build is referenced three times. */
-  private val graphTriangles: QFn = (s, d) => {
-    val ue = tradeEdgesCached(s, d)
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-              greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint()
-    val tri = ue.select(col("u").as("a"), col("v").as("b"))
-      .join(ue.select(col("u").as("b2"), col("v").as("c")), col("b") === col("b2"))
-      .join(ue.select(col("u").as("a2"), col("v").as("c2")),
-        col("a") === col("a2") && col("c") === col("c2"))
-      .select(col("a"), col("b"), col("c"))
-    val perNode = tri
-      .select(explode(array(col("a"), col("b"), col("c"))).as("nationkey"))
-      .groupBy(col("nationkey")).agg(count(lit(1)).as("n_triangles"))
+    * canonical id orientation is that plan. This is
+    * [[GraftOps.triangleCounts]] (one localCheckpoint of the undirected
+    * edges, referenced three times) left-joined onto the nations. */
+  private val graphTriangles: QFn = (s, d) =>
     Tables.nation(s, d).select(col("n_nationkey").as("nationkey"), col("n_name"))
-      .join(perNode, Seq("nationkey"), "left")
+      .join(GraftOps.triangleCounts(tradeEdgesCached(s, d), col("src"), col("dst"))
+          .withColumnRenamed("node", "nationkey"),
+        Seq("nationkey"), "left")
       .select(col("nationkey"), col("n_name"),
         coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
       .orderBy(col("nationkey"))
-  }
 
   /** Neighbor-set Jaccard similarity between node pairs — the classic
     * link-prediction screen (do two nations trade with the same
@@ -219,36 +192,19 @@ object Graph extends QueryGroup {
     * identical operands, 6-dp rounded (+0.0 normalizes −0). Scale
     * shape: identical to graph_triangles — every join touches only the
     * checkpointed EDGE table; degree is a |V|-row aggregate; at large
-    * graphs the same degree-based orientation bound applies. */
-  private val graphClustering: QFn = (s, d) => {
-    val ue = tradeEdgesCached(s, d)
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-              greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = ue.select(col("u").as("nationkey"))
-      .union(ue.select(col("v").as("nationkey")))
-      .groupBy(col("nationkey")).agg(count(lit(1)).as("deg"))
-    val tri = ue.select(col("u").as("a"), col("v").as("b"))
-      .join(ue.select(col("u").as("b2"), col("v").as("c")), col("b") === col("b2"))
-      .join(ue.select(col("u").as("a2"), col("v").as("c2")),
-        col("a") === col("a2") && col("c") === col("c2"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("nationkey"))
-      .groupBy(col("nationkey")).agg(count(lit(1)).as("n_triangles"))
+    * graphs the same degree-based orientation bound applies. This is
+    * [[GraftOps.clusteringCoefficient]] left-joined onto the nations
+    * (a nation with no edge reads deg 0, cc 0). */
+  private val graphClustering: QFn = (s, d) =>
     Tables.nation(s, d).select(col("n_nationkey").as("nationkey"), col("n_name"))
-      .join(deg, Seq("nationkey"), "left")
-      .join(tri, Seq("nationkey"), "left")
+      .join(GraftOps.clusteringCoefficient(tradeEdgesCached(s, d), col("src"), col("dst"))
+          .withColumnRenamed("node", "nationkey"),
+        Seq("nationkey"), "left")
       .select(col("nationkey"), col("n_name"),
         coalesce(col("deg"), lit(0L)).as("deg"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-      .withColumn("cc",
-        when(col("deg") >= 2L,
-          round(lit(2.0) * col("n_triangles").cast("double")
-                / (col("deg") * (col("deg") - 1L)).cast("double"), 6) + lit(0.0))
-          .otherwise(lit(0.0)))
+        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
+        coalesce(col("cc"), lit(0.0)).as("cc"))
       .orderBy(col("nationkey"))
-  }
 
   private val graphComponents: QFn = (s, d) => {
     val sym = sparseSymEdges(s, d)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -482,46 +483,15 @@ object Joins extends QueryGroup {
     * name vocabulary after one shuffle on the blocking key — never
     * rows² — and the output is one row per entity, not per pair. The
     * oracle mirrors the identical blocking row-level (equal by
-    * construction: the match relation is a function of the name). */
-  private val joinFuzzyBlocked: QFn = (s, d) => {
-    val parts = Tables.part(s, d)
-      .select(col("p_partkey").as("pk"), col("p_name").as("nm"))
-    // Collapse to DISTINCT names before anything quadratic: the match
-    // relation is a pure function of the name, and catalogs repeat
-    // names heavily (the sf0.1 fixture: 20 000 rows over ~160 names),
-    // so the blocked Levenshtein verify runs over the name VOCABULARY
-    // — |distinct names in bucket|² evals, not |rows in bucket|² (the
-    // row-level form benched 77 s at sf0.1; this one is sub-second).
-    // Rows rejoin by one broadcast of the name-level result at the end.
-    // Per-name stats: min row key (canonical candidate) + row count.
-    val names = parts.groupBy(col("nm"))
-      .agg(min(col("pk")).as("gmin"), count(lit(1)).as("gcnt"))
-    val banded = names
-      .select(col("nm"),
-        element_at(split(col("nm"), " "), -1).as("lw"),
-        length(col("nm")).as("len"))
-      .select(col("nm"), col("lw"),
-        explode(array_distinct(array(
-          expr("len div 3"), expr("(len + 2) div 3")))).as("band"))
-    val cand = banded.select(col("nm").as("na"), col("lw"), col("band"))
-      .join(banded.select(col("nm").as("nb"), col("lw"), col("band")),
-        Seq("lw", "band"))
-      .filter(levenshtein(col("na"), col("nb")) <= 2)
-      .select(col("na"), col("nb")).distinct() // band replication collapses
-    // per-name canonical key and matched-row total: every row of a
-    // matched group is a distinct fuzzy neighbor (n_fuzzy excludes only
-    // the row itself, whose own group IS matched via the dist-0 self-pair)
-    val resolved = cand
-      .join(names.select(col("nm").as("nb"), col("gmin"), col("gcnt")), "nb")
-      .groupBy(col("na"))
-      .agg(min(col("gmin")).as("canon_pk"), sum(col("gcnt")).as("n_matched"))
-    // no broadcast hint: the resolved side is vocabulary-sized — tiny
-    // here, but at 100 TB it can outgrow a broadcast; AQE picks
-    parts.join(resolved, parts("nm") === resolved("na"))
-      .select(col("pk"), col("canon_pk"),
-        (col("n_matched") - 1L).as("n_fuzzy"))
+    * construction: the match relation is a function of the name). The
+    * construction is [[GraftOps.fuzzyCanonicalize]] at band 3, distance
+    * 2; it collapses rows to the distinct-name vocabulary first (the
+    * row-level form benched 77 s at sf0.1, the vocabulary form runs
+    * sub-second) and raises on a NULL name. */
+  private val joinFuzzyBlocked: QFn = (s, d) =>
+    GraftOps.fuzzyCanonicalize(Tables.part(s, d), col("p_partkey"), col("p_name"))
+      .select(col("id").as("pk"), col("canon_id").as("canon_pk"), col("n_fuzzy"))
       .orderBy(col("pk"))
-  }
 
   val queries: Seq[(String, QFn)] = Seq(
     "join_broadcast" -> joinBroadcast,

@@ -287,26 +287,23 @@ object LlmText extends QueryGroup {
 
   /** Quality scoring: token/char counts, stopword ratio, log-length
     * score — the standard pre-training quality gates. `quality` is
-    * computed from the UNROUNDED stop ratio (the same semantic the
-    * pipeline_e2e gate and api.GraftOps.qualityScore use — ApiSpec
-    * asserts the three agree); the reported stop_ratio column is
-    * rounded for display only. */
-  private val textQuality: QFn = (s, d) =>
+    * [[graft.api.GraftOps.qualityScore]] (the score the pipeline_e2e gate also
+    * reads), computed from the UNROUNDED stop ratio; token counts and
+    * stop hits come from the pinned `tok_count` / `tok_hits` kernels;
+    * the reported stop_ratio column is rounded for display only. */
+  private val textQuality: QFn = (s, d) => {
+    val n = graft.functions.GraftFunctions.tokCount(col("text"))
     Tables.documents(s, d).select(
       col("doc_id"),
-      size(split(col("text"), " ")).cast(LongType).as("n_tokens"),
+      n.as("n_tokens"),
       length(col("text")).cast(LongType).as("len_chars"),
       col("n_chars").as("meta_chars"),
       round(length(regexp_replace(col("text"), " ", "")).cast(DoubleType) /
-            size(split(col("text"), " ")).cast(DoubleType), 6).as("avg_tok_len"),
-      (size(filter(split(col("text"), " "),
-              x => x.isin(StopTokens: _*))).cast(DoubleType) /
-            size(split(col("text"), " ")).cast(DoubleType)).as("stop_ratio_raw"),
-    ).withColumn("quality",
-        round(log(lit(1.0) + col("n_tokens")) * (lit(1.0) - col("stop_ratio_raw")), 6))
-     .withColumn("stop_ratio", round(col("stop_ratio_raw"), 6))
-     .drop("stop_ratio_raw")
-     .orderBy(col("doc_id"))
+            n.cast(DoubleType), 6).as("avg_tok_len"),
+      round(graft.api.GraftOps.qualityScore(col("text"), StopTokens), 6).as("quality"),
+      round(graft.api.GraftOps.stopRatio(col("text"), StopTokens), 6).as("stop_ratio"))
+      .orderBy(col("doc_id"))
+  }
 
   /** Token counting: whitespace split vs BPE-ish regex tokenizer. */
   private val textTokenCount: QFn = (s, d) =>
@@ -556,25 +553,15 @@ object LlmText extends QueryGroup {
     * dropped before the join — the anti-quadratic bound again. Cost
     * scales with the BATCH: the index read is a columnar scan of
     * 16-byte fingerprint rows, the probe is one equality shuffle on
-    * fp_hash, and corpus text is never touched. The oracle mirrors
-    * the fingerprint construction over the same split. */
-  private val dedupWinnowingIncremental: QFn = (s, d) => {
-    val path = ensureWinnowIndex(s, d)
-    val idx = s.read.parquet(s"$path/fps")
-      .select(col("doc_id").as("corpus_id"), col("fp_hash"))
-    val rareIdx = idx.join(
-      idx.groupBy(col("fp_hash")).agg(count(lit(1)).as("nd"))
-        .filter(col("nd") <= 50L).select(col("fp_hash")),
-      Seq("fp_hash"))
-    val delta = winnowFpsOf(Tables.documents(s, d).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("text")))
-      .select(col("doc_id").as("new_id"), col("fp_hash")).distinct()
-    rareIdx.join(delta, Seq("fp_hash"))
-      .groupBy(col("corpus_id"), col("new_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= 2L)
+    * fp_hash, and corpus text is never touched. This is
+    * [[graft.api.GraftOps.winnowIncrementalCandidates]] at its defaults
+    * (cap 50, ≥ 2 shared). The oracle mirrors the fingerprint
+    * construction over the same split. */
+  private val dedupWinnowingIncremental: QFn = (s, d) =>
+    graft.api.GraftOps.winnowIncrementalCandidates(
+        s.read.parquet(s"${ensureWinnowIndex(s, d)}/fps"), col("doc_id"), col("fp_hash"),
+        Tables.documents(s, d).filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"))
       .orderBy(col("corpus_id"), col("new_id"))
-  }
 
   /** Position-weighted rolling fingerprint over md5 token hashes:
     * fp = Σ (h(tok) mod M) · (pos+1)  mod M. Order-sensitive, portable. */

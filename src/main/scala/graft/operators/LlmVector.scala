@@ -531,9 +531,6 @@ object LlmVector extends QueryGroup {
     * later argmin); the per-(vector, centroid) distances themselves are
     * bit-identical left folds on both sides. Deterministic: init =
     * vectors 0..k-1, ties broken by min cid via struct ordering. */
-  private[graft] def anchorsFit(s: SparkSession, d: String, k: Int, iters: Int): DataFrame =
-    anchorsFitOf(Tables.embeddings(s, d), k, iters)
-
   private[graft] def anchorsFitOf(e0: DataFrame, k: Int, iters: Int): DataFrame = {
     val s = e0.sparkSession
     val e = e0
@@ -612,7 +609,7 @@ object LlmVector extends QueryGroup {
     * so vector→anchor assignment probes only the anchors in the few
     * nearest coarse cells instead of all ⌈√n⌉ anchors. Input is the
     * bounded anchor table (√n rows), so the fit itself is trivial;
-    * determinism matches [[anchorsFit]] exactly: init = anchors with
+    * determinism matches [[anchorsFitOf]] exactly: init = anchors with
     * cid < kc, bit-identical l2sq folds, ties by min gid, per-dimension
     * means rounded to 9 dp — all of which the DuckDB oracle mirrors CTE
     * for CTE ([[duckEmbcosPairsCtes]]). Returns (g_id, gv). */
@@ -644,7 +641,7 @@ object LlmVector extends QueryGroup {
   /** Embedding near-dup, SemDeDup-shaped (Abbas et al. 2023,
     * arXiv:2303.09540): coarse-quantize every vector to its
     * [[CellsPerVector]] nearest anchor cells — anchors are persisted
-    * ⌈√n⌉ k-means centroids from [[anchorsFit]], so cell count GROWS
+    * ⌈√n⌉ k-means centroids from [[anchorsFitOf]], so cell count GROWS
     * with the corpus and the per-cell pair product stays ~constant per
     * cell (the round-2 hardcoded 16-anchor set made it O(n²/16)) — then
     * candidate pairs share ≥1 cell and are exact-cosine verified > 0.4.
@@ -1623,28 +1620,19 @@ object LlmVector extends QueryGroup {
   // quantizers, binarization has no iterative fit).
   // ------------------------------------------------------------------
 
-  /** SQL expr packing 32 sign bits (dims off..off+31, 0-based) of the
-    * `embedding` column into an int64: bit i set iff the f32 dim is
-    * >= 0 (the ivf_eval sign convention). Two 32-bit halves instead of
-    * one 64-bit word keep every intermediate in non-negative int64 —
-    * a single word would need the sign bit (1L<<63) and the engines'
-    * signed-overflow conventions differ; two halves cost one extra
-    * XOR+POPCNT and are portable everywhere. UNROLLED as a 32-term
-    * literal sum rather than an `aggregate` HOF: plain conditionals
-    * stay inside whole-stage codegen (HOFs are eval-mode), so the
-    * packing is a true free rider on the scan. */
-  private def packSignBits(off: Int): String =
-    (0 until 32).map(i => s"IF(embedding[${i + off}] >= 0, ${1L << i}L, 0L)")
-      .mkString("(", " + ", ")")
-
-  /** Unrolled 64-term popcount of positive dims (same codegen rationale
-    * as [[packSignBits]]). */
+  /** Unrolled 64-term popcount of positive dims (the ivf_eval sign
+    * convention: a dim counts iff its f32 value is >= 0). Plain
+    * conditionals, not an `aggregate` HOF, so the count stays inside
+    * whole-stage codegen (HOFs are eval-mode) and rides the scan. */
   private val nPosExpr: String =
     (0 until 64).map(i => s"IF(embedding[$i] >= 0, 1L, 0L)")
       .mkString("(", " + ", ")")
 
   /** vec_id + the two packed 32-bit sign halves (hi = dims 33-64,
-    * lo = dims 1-32). Shared by every Hamming rung; one shuffle-free
+    * lo = dims 1-32). Two halves instead of one 64-bit word keep every
+    * intermediate a non-negative int64 (a single word would need the
+    * sign bit, and engines differ on signed overflow); they cost one
+    * extra XOR+POPCNT. Shared by every Hamming rung; one shuffle-free
     * codegen projection over the scan — binarization at 100 TB is a
     * free rider on whatever pass reads the vectors. */
   private def binaryCodes(s: SparkSession, d: String): DataFrame =
@@ -1947,8 +1935,8 @@ object LlmVector extends QueryGroup {
 
   /** The packed-sign-code construction as a DuckDB CTE ending in
     * `bc(vec_id, code_hi, code_lo)` — generated from the same >= 0
-    * convention and 32-bit halves as [[packSignBits]], shared by the
-    * binarize/Hamming oracles so they cannot drift apart. */
+    * convention and 32-bit halves as the `sign_pack32` kernel, shared
+    * by the binarize/Hamming oracles so they cannot drift apart. */
   private val duckBinCodesCte: String =
     """bbit AS (SELECT vec_id, CAST(i AS BIGINT) AS i,
                        CASE WHEN embedding[i + 1] >= 0 THEN 1 ELSE 0 END AS bit

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -281,9 +282,9 @@ object Scans extends QueryGroup {
     * stay bounded even as the key count grows. The oracle rebuilds the
     * same generation rows from the original table with CASE arithmetic
     * and applies DuckDB's own lead() — an independent check of the
-    * interval assembly, not a mirror of Spark's window code. */
+    * interval assembly, not a mirror of Spark's window code. The
+    * assembly is [[GraftOps.scd2History]]. */
   private val ingestCdcScd2: QFn = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val out = s"${Tables.scratchDir}/ingest_cdc_scd2"
     val c = Tables.customer(s, d).select(col("c_custkey"), col("c_acctbal"))
     c.write.mode("overwrite").parquet(s"$out/gen=0")
@@ -293,15 +294,13 @@ object Scans extends QueryGroup {
     c.filter(col("c_custkey") % 20L === 0L)
       .withColumn("c_acctbal", col("c_acctbal") + 1500.0)
       .write.mode("overwrite").parquet(s"$out/gen=2")
-    val w = Window.partitionBy(col("c_custkey")).orderBy(col("gen"))
-    s.read.parquet(out)
-      .withColumn("gen", col("gen").cast(IntegerType))
-      .withColumn("valid_to_gen", lead(col("gen"), 1).over(w))
-      .withColumn("is_current", col("valid_to_gen").isNull)
+    GraftOps.scd2History(
+        s.read.parquet(out).withColumn("gen", col("gen").cast(IntegerType)),
+        col("c_custkey"), col("gen"))
       // keys with %10==0 have ≥2 versions — the interesting history rows
       .filter(col("c_custkey") % 10L === 0L)
       .select(col("c_custkey"), col("gen"), col("c_acctbal"),
-              col("valid_to_gen"), col("is_current"))
+              col("valid_to").as("valid_to_gen"), col("is_current"))
       .orderBy(col("c_custkey"), col("gen"))
   }
 
@@ -593,8 +592,6 @@ object Scans extends QueryGroup {
   private[graft] def zNormSql(k: String, hi: String, divOp: String): String =
     s"(($k * 65536) $divOp $hi)"
 
-  private[graft] val zSparkShl: (String, Int) => String =
-    (a, n) => s"shiftleft($a, $n)"
   private[graft] val zDuckShl: (String, Int) => String =
     (a, n) => s"($a << $n)"
 
@@ -611,7 +608,9 @@ object Scans extends QueryGroup {
     * read-back applies a (partkey, suppkey) box and rolls up per
     * top-8-bit z-bucket; the oracle computes the identical all-integer
     * z math from the original table, so equality proves the layout
-    * lossless and the curve arithmetic engine-portable.
+    * lossless and the curve arithmetic engine-portable. The z-value is
+    * [[GraftOps.mortonZ]]; ApiSpec pins it bit-identical to the
+    * [[zValSql]] ladder the oracle renders.
     * At 100 TB this is the layout job run at compaction time (the
     * sink_compact slot), amortized over every subsequent scan. */
   private val sinkZorder: QFn = (s, d) => {
@@ -619,12 +618,12 @@ object Scans extends QueryGroup {
     val his = Tables.lineitem(s, d)
       .agg((max(col("l_partkey")) + lit(1L)).as("hp"),
            (max(col("l_suppkey")) + lit(1L)).as("hs"))
-    val z = zValSql(zNormSql("l_partkey", "hp", "div"),
-                    zNormSql("l_suppkey", "hs", "div"), zSparkShl)
     Tables.lineitem(s, d)
       .crossJoin(broadcast(his))
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-        col("l_quantity"), expr(z).as("zval"))
+        col("l_quantity"),
+        GraftOps.mortonZ(col("l_partkey"), col("hp"), col("l_suppkey"), col("hs"))
+          .as("zval"))
       .repartitionByRange(8, col("zval"))
       .sortWithinPartitions(col("zval"))
       .write.mode("overwrite").parquet(out)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -179,21 +180,15 @@ object Windows extends QueryGroup {
     * constant difference, so the difference IS the island id and two
     * cheap per-user aggregations replace any iterative reasoning.
     * All-integer (day index from integer ns division), per-user windows
-    * only — scales as a pair of key-partitioned aggs. */
-  private val winStreak: QFn = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    Tables.events(s, d)
-      .select(col("user_id"), expr("ts div 86400000000000").as("day"))
-      .distinct()
-      .withColumn("grp", col("day") - row_number().over(w))
-      .groupBy(col("user_id"), col("grp"))
-      .agg(count(lit(1)).as("len"))
-      .groupBy(col("user_id"))
-      .agg(max(col("len")).as("max_streak"),
-           count(lit(1)).as("n_streaks"),
-           sum(col("len")).as("n_active_days"))
+    * only — scales as a pair of key-partitioned aggs. This is
+    * [[GraftOps.streakStats]] over (user_id, day). */
+  private val winStreak: QFn = (s, d) =>
+    GraftOps.streakStats(
+        Tables.events(s, d).select(col("user_id"), expr("ts div 86400000000000").as("day")),
+        col("user_id"), col("day"))
+      .select(col("sk_key").as("user_id"), col("max_streak"), col("n_streaks"),
+        col("n_active_days"))
       .orderBy(col("user_id"))
-  }
 
   /** Bounded-horizon EWMA (α = 0.3, 10 terms) per user — the smoothing
     * primitive time-series feature pipelines run over metrics streams.

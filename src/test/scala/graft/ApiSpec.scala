@@ -15,6 +15,34 @@ class ApiSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
+  /** Runs `call` in job group `<group>-call` and reports whether any
+    * Spark job started in that group. Build the call's inputs before:
+    * reading a parquet table runs a schema job. */
+  private def jobAtCall[T](group: String)(call: => T): (T, Boolean) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(s"$group-call", "library call")
+      val out = try call finally sc.clearJobGroup()
+      // listener events arrive in order: once a later fence job is
+      // seen, every job the call started has been seen too
+      sc.setJobGroup(s"$group-fence", "listener fence")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"$group-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$group-fence"), "fence job never reached the listener")
+      (out, groups.contains(s"$group-call"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("normalizeText matches text_normalize") {
     val api = Tables.documents(spark, sf)
       .select(col("doc_id"), GraftOps.normalizeText(col("text")).as("norm_text"))
@@ -221,6 +249,16 @@ class ApiSpec extends AnyFunSuite {
     assert(rows(api) == rows(SparkEntry.queries("graph_pagerank")(spark, sf)))
   }
 
+  test("pageRank runs no Spark job before the caller's first action") {
+    val e = operators.Graph.tradeEdges(spark, sf)
+    val v = Tables.nation(spark, sf)
+    val (out, ranJob) = jobAtCall("graft-pr") {
+      GraftOps.pageRank(e, col("src"), col("dst"), col("w"), v, col("n_nationkey"))
+    }
+    assert(!ranJob, "pageRank ran a job at call time")
+    assert(out.count() == v.count())
+  }
+
   test("gapFillForward matches events_gap_fill") {
     val api = GraftOps.gapFillForward(
         Tables.events(spark, sf).filter(col("user_id") < 10L)
@@ -373,6 +411,24 @@ class ApiSpec extends AnyFunSuite {
     assert(rows(api) == rows(SparkEntry.queries("join_fuzzy_blocked")(spark, sf)))
   }
 
+  test("fuzzyCanonicalize raises on a NULL name, naming its id") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq((1L, Some("red steel bolt")), (2L, Some("red steal bolt")),
+        (7L, None), (9L, None), (3L, Some("blue brass nut"))).toDF("id", "name")
+    val e = intercept[Throwable] {
+      GraftOps.fuzzyCanonicalize(df, col("id"), col("name")).collect()
+    }
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+    assert(chain.contains("graft.fuzzyCanonicalize: name is NULL for id 7"), chain)
+    // the same rows without the NULL names resolve as before
+    val ok = GraftOps.fuzzyCanonicalize(df.filter(col("name").isNotNull),
+        col("id"), col("name"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(ok == Set((1L, 1L, 1L), (2L, 1L, 1L), (3L, 3L, 0L)), ok.toString)
+  }
+
   test("triangleCounts matches graph_triangles on the trade graph") {
     val e = operators.Graph.tradeEdges(spark, sf)
     val api = Tables.nation(spark, sf)
@@ -430,32 +486,13 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("prefixBudgetKeep runs no Spark job before the caller's first action") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    val perDoc = Tables.documents(spark, sf)
+      .select(col("doc_id"), size(split(col("text"), " ")).as("ntok"))
+    val (out, ranJob) = jobAtCall("graft-pbk") {
+      GraftOps.prefixBudgetKeep(perDoc, col("doc_id"), col("ntok"), 1000L)
     }
-    sc.addSparkListener(listener)
-    try {
-      val perDoc = Tables.documents(spark, sf)
-        .select(col("doc_id"), size(split(col("text"), " ")).as("ntok"))
-      sc.setJobGroup("graft-pbk-call", "prefixBudgetKeep call")
-      val out = try GraftOps.prefixBudgetKeep(perDoc, col("doc_id"), col("ntok"), 1000L)
-                finally sc.clearJobGroup()
-      // listener events arrive in order: once a later fence job is
-      // seen, every job the call started has been seen too
-      sc.setJobGroup("graft-pbk-fence", "listener fence")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("graft-pbk-fence") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("graft-pbk-fence"), "fence job never reached the listener")
-      assert(!groups.contains("graft-pbk-call"), "prefixBudgetKeep ran a job at call time")
-      assert(out.count() == Tables.documents(spark, sf).count())
-    } finally sc.removeSparkListener(listener)
+    assert(!ranJob, "prefixBudgetKeep ran a job at call time")
+    assert(out.count() == Tables.documents(spark, sf).count())
   }
 
   test("redactPii strips every synthesized email and phone") {
@@ -486,10 +523,12 @@ class ApiSpec extends AnyFunSuite {
     val his = Tables.lineitem(spark, sf)
       .agg((max(col("l_partkey")) + lit(1L)).as("hp"),
            (max(col("l_suppkey")) + lit(1L)).as("hs"))
+    // the SQL ladder the DuckDB oracle renders, in Spark's shift spelling
+    val zSparkShl: (String, Int) => String = (a, n) => s"shiftleft($a, $n)"
     val sqlZ = operators.Scans.zValSql(
       operators.Scans.zNormSql("l_partkey", "hp", "div"),
       operators.Scans.zNormSql("l_suppkey", "hs", "div"),
-      operators.Scans.zSparkShl)
+      zSparkShl)
     val diff = Tables.lineitem(spark, sf).crossJoin(broadcast(his))
       .select(expr(sqlZ).as("sql_z"),
         GraftOps.mortonZ(col("l_partkey"), col("hp"),
@@ -620,9 +659,7 @@ class ApiSpec extends AnyFunSuite {
     val api = GraftOps.bitmapDistinct(Tables.lineitem(spark, sf),
         col("l_returnflag"), col("l_orderkey"))
       .orderBy(col("g"))
-    val declared = SparkEntry.queries("agg_bitmap_distinct")(spark, sf)
-      .select(col("l_returnflag"), col("n_orders"))
-    assert(rows(api) == rows(declared))
+    assert(rows(api) == rows(SparkEntry.queries("agg_bitmap_distinct")(spark, sf)))
   }
 
   test("clusteringCoefficient matches graph_clustering on the trade graph") {
