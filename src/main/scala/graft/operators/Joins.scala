@@ -485,9 +485,8 @@ object Joins extends QueryGroup {
     * oracle mirrors the identical blocking row-level (equal by
     * construction: the match relation is a function of the name). The
     * construction is [[GraftOps.fuzzyCanonicalize]] at band 3, distance
-    * 2; it collapses rows to the distinct-name vocabulary first (the
-    * row-level form benched 77 s at sf0.1, the vocabulary form runs
-    * sub-second) and raises on a NULL name. */
+    * 2, which raises on a NULL name; its vocabulary collapse runs
+    * sub-second at sf0.1, where the row-level form benched 77 s. */
   private val joinFuzzyBlocked: QFn = (s, d) =>
     GraftOps.fuzzyCanonicalize(Tables.part(s, d), col("p_partkey"), col("p_name"))
       .select(col("id").as("pk"), col("canon_id").as("canon_pk"), col("n_fuzzy"))

@@ -287,10 +287,11 @@ object LlmText extends QueryGroup {
 
   /** Quality scoring: token/char counts, stopword ratio, log-length
     * score — the standard pre-training quality gates. `quality` is
-    * [[graft.api.GraftOps.qualityScore]] (the score the pipeline_e2e gate also
-    * reads), computed from the UNROUNDED stop ratio; token counts and
-    * stop hits come from the pinned `tok_count` / `tok_hits` kernels;
-    * the reported stop_ratio column is rounded for display only. */
+    * [[graft.api.GraftOps.qualityScore]] (the score the pipeline_e2e
+    * gate also reads), computed from the UNROUNDED stop ratio; token
+    * counts and stop hits come from the pinned `tok_count` / `tok_hits`
+    * kernels; the reported stop_ratio column is rounded for display
+    * only. */
   private val textQuality: QFn = (s, d) => {
     val n = graft.functions.GraftFunctions.tokCount(col("text"))
     Tables.documents(s, d).select(
