@@ -252,7 +252,7 @@ class ApiSpec extends AnyFunSuite {
   test("pageRank runs no Spark job before the caller's first action") {
     val e = operators.Graph.tradeEdges(spark, sf)
     val v = Tables.nation(spark, sf)
-    val (out, ranJob) = jobAtCall("graft-pr") {
+    val (out, ranJob) = jobAtCall("graft-pagerank") {
       GraftOps.pageRank(e, col("src"), col("dst"), col("w"), v, col("n_nationkey"))
     }
     assert(!ranJob, "pageRank ran a job at call time")
