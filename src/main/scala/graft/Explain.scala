@@ -57,7 +57,8 @@ object Explain {
     "sample_stratified", "set_union_evolve", "sim_kmeans", "sink_sorted",
     "text_tfidf", "udaf_histogram", "win_drawdown",
     "agg_ttest", "win_streak", "text_quality",
-    "sample_weighted", "profile_columns")
+    "sample_weighted", "profile_columns",
+    "embed_norm", "embed_quantize", "multimodal_join", "ann_upsert")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
