@@ -11,8 +11,7 @@ import org.apache.spark.sql.types._
   * query CALLS the function (fixture columns → `GraftOps.f(...)` → the
   * query's total ORDER BY), so DuckDB parity checks the library body
   * itself; ApiSpec pins each query's binding (column renames, literal
-  * parameters, ordering) and every function that still stands beside an
-  * operator-side construction.
+  * parameters, ordering).
   *
   * Everything stays in codegen-friendly Column expressions (no UDFs) and
   * keeps the declared queries' scale shapes: digest-keyed dedup shuffles,
@@ -131,9 +130,12 @@ object GraftOps {
   def hashBucket(id: Column, buckets: Int): Column =
     graft.functions.GraftFunctions.md5Prefix48(id.cast(StringType)) % buckets
 
-  /** Exact double cosine via the zip_with/aggregate left fold — the
-    * SQL-expressible twin of the codegen'd `cosine_f32` expression
-    * (bit-identical numerics, asserted in VectorSpec). */
+  /** Exact double cosine via the zip_with/aggregate left fold, over
+    * any numeric arrays (float, double or one of each) — the reference
+    * the codegen'd `cosine_f32` kernel is pinned against (bit-identical
+    * on float vectors, asserted in VectorSpec and ApiSpec). A NULL
+    * element or unequal lengths give NULL; a zero-norm side raises
+    * DIVIDE_BY_ZERO under ANSI, where the kernel gives NULL. */
   def cosineSim(a: Column, b: Column): Column = {
     def dot(x: Column, y: Column) =
       aggregate(zip_with(x, y, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
@@ -321,12 +323,15 @@ object GraftOps {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Exact brute-force cosine top-k — sim_knn_batch's shape
-    * parameterized (the baseline every ANN recall number is measured
-    * against): broadcast the query batch across one corpus pass, score
-    * with the exact double cosine fold ([[cosineSim]] — bit-identical
-    * to the codegen'd cosine_f32, per VectorSpec), rank per query with
-    * a vec_id tie-break (total order → partitioning-exact results).
+  /** Exact brute-force cosine top-k — sim_knn_batch (k = 5) and
+    * sim_hybrid_rrf's vector leg (k = 10) call this with
+    * `excludeSelf`; it is the baseline every ANN recall number is
+    * measured against. Broadcast the query batch across one corpus
+    * pass, score with the codegen'd `cosine_f32` kernel (double
+    * accumulation, bit-identical to [[cosineSim]]; both vector columns
+    * must be `array<float>`, and a NULL score ranks last), rank per
+    * query with a vec_id tie-break (total order → partitioning-exact
+    * results).
     * Returns (qid, rank, vec_id, cos_sim) with cos_sim rounded to 6 dp
     * for engine portability. `excludeSelf` drops candidates whose id
     * equals the query id (self-retrieval, when queries come from the
@@ -345,7 +350,7 @@ object GraftOps {
     val cand = e.crossJoin(broadcast(q))
     (if (excludeSelf) cand.filter(col("vec_id") =!= col("qid")) else cand)
       .select(col("qid"), col("vec_id"),
-        cosineSim(col("embedding"), col("qe")).as("cos"))
+        graft.functions.GraftFunctions.cosineF32(col("embedding"), col("qe")).as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank").cast(LongType).as("rank"),
@@ -368,12 +373,14 @@ object GraftOps {
       queries.select(qid.as("qid"), term.as("term")))
 
   /** Reciprocal Rank Fusion (Cormack et al. 2009, k-constant 60) of
-    * two per-query rankings — sim_hybrid_rrf's fusion step over
-    * ARBITRARY legs (BM25 + vector, two vector indexes, anything that
-    * ranks): each input carries (qid, doc_id, rank) with rank ≥ 1; a
-    * doc missing from one leg contributes 0 for it. Returns the fused
-    * per-query top-`k` as (qid, rank, doc_id, rrf, n_legs), fused rank
-    * tie-broken on doc_id. Exact-integer ranks in → engine- and
+    * two per-query rankings — sim_hybrid_rrf is this over its BM25 leg
+    * and a [[knnCosine]] leg, but the legs are ARBITRARY (BM25 +
+    * vector, two vector indexes, anything that ranks): each input
+    * carries (qid, doc_id, rank) with rank ≥ 1; a doc missing from one
+    * leg contributes 0 for it, and the sum is legA's term + legB's
+    * term. Returns the fused per-query top-`k` as
+    * (qid, rank, doc_id, rrf, n_legs), totally ordered by
+    * (qid, rank), fused rank tie-broken on doc_id. Exact-integer ranks in → engine- and
     * partitioning-exact fusion out; the join touches only the two
     * ≤topN·|queries|-row legs, never a corpus. */
   def rrfFuse(legA: DataFrame, legB: DataFrame, k: Int = 10): DataFrame = {
@@ -507,17 +514,26 @@ object GraftOps {
         last(col("sum_v"), ignoreNulls = true).over(w).as("filled_sum"))
   }
 
-  /** L2 normalization — embed_norm's prep shape: scale the vector to
-    * unit length so cosine becomes a plain dot product downstream.
-    * Stays in one codegen stage; division by the unrounded norm.
-    * A zero-norm vector passes through as the zero vector (explicitly —
-    * Spark's divide-by-zero→NULL would otherwise silently null every
-    * element and corrupt downstream dot products). */
-  def l2Normalize(vec: Column): Column = {
-    val e = transform(vec, x => x.cast(DoubleType))
-    val nrm = sqrt(aggregate(transform(e, x => x * x), lit(0.0), (a, v) => a + v))
-    transform(e, x => when(nrm =!= 0.0, x / nrm).otherwise(lit(0.0)))
-  }
+  /** L2 normalization of an `array<float>` vector — embed_norm's
+    * unit-scaled dims: scale the vector to unit length so cosine
+    * becomes a plain dot product downstream. The norm is
+    * sqrt(`sumsq_f32`), computed once per row; each dim is divided by
+    * the unrounded norm in double. A zero-norm vector passes through
+    * as the zero vector (not DIVIDE_BY_ZERO, not NULLs that would
+    * corrupt downstream dot products); a NULL vector or a NULL element
+    * gives a NULL vector. */
+  def l2Normalize(vec: Column): Column =
+    perRow(sqrt(graft.functions.GraftFunctions.sumSqF32(vec))) { nrm =>
+      when(nrm === 0.0, transform(vec, _ => lit(0.0)))
+        .when(nrm.isNotNull, transform(vec, x => x.cast(DoubleType) / nrm))
+    }
+
+  /** `body` applied to `value` evaluated once per row: a Column used
+    * inside a higher-order function's lambda is re-evaluated for every
+    * element, a lambda variable is not. The finish lambda of an
+    * aggregate over an empty array runs once, on the zero value. */
+  private def perRow(value: Column)(body: Column => Column): Column =
+    aggregate(typedlit(Seq.empty[Int]), value, (acc, _) => acc, body)
 
   /** Argmax aggregate — agg_argmax's shape (the query aggregates with
     * this): use inside .agg(...) to get
@@ -603,19 +619,24 @@ object GraftOps {
       .select(col("doc_id").as("id"), col("band"), col("s0"), col("s1"))
 
   /** Per-vector int8 affine quantization — embed_quantize's storage
-    * shape: `struct(lo, hi, qscale, q: array<bigint>)` with
-    * qᵢ = clamp(floor((xᵢ − lo)/scale + 0.5), 0, 255). floor-form
-    * rounding for cross-engine IEEE parity. */
+    * shape (the query joins `q` into a string): `struct(lo, hi, qscale,
+    * q: array<bigint>)` with qᵢ = clamp(floor((xᵢ − lo)/scale + 0.5),
+    * 0, 255) and scale = (hi − lo)/255, all 0 when hi = lo. lo, hi and
+    * scale are computed once per row. floor-form rounding for
+    * cross-engine IEEE parity (Spark's round() is HALF_UP on the
+    * decimal string, DuckDB rounds the binary double). */
   def int8Quantize(vec: Column): Column = {
-    val e = transform(vec, x => x.cast(DoubleType))
-    val lo = array_min(e)
-    val hi = array_max(e)
-    val scale = (hi - lo) / 255.0
-    val q = transform(e, x =>
-      when(hi === lo, lit(0L)).otherwise(
-        least(lit(255L), greatest(lit(0L),
-          floor((x - lo) / scale + 0.5).cast(LongType)))))
-    struct(lo.as("lo"), hi.as("hi"), scale.as("qscale"), q.as("q"))
+    val e = vec.cast(ArrayType(DoubleType))
+    perRow(struct(array_min(e).as("lo"), array_max(e).as("hi"))) { m =>
+      val (lo, hi) = (m.getField("lo"), m.getField("hi"))
+      perRow((hi - lo) / 255.0) { scale =>
+        val q = transform(e, x =>
+          when(hi === lo, lit(0L)).otherwise(
+            least(lit(255L), greatest(lit(0L),
+              floor((x - lo) / scale + 0.5).cast(LongType)))))
+        struct(lo.as("lo"), hi.as("hi"), scale.as("qscale"), q.as("q"))
+      }
+    }
   }
 
   /** Two-sample grid Kolmogorov–Smirnov distance — agg_ks's
@@ -1356,18 +1377,21 @@ object GraftOps {
       .withColumn("copy_id", explode(expr("sequence(1, eo_copies)")))
       .drop("eo_u48", "eo_copies")
 
-  /** Maximal-Marginal-Relevance selection — sim_mmr's greedy loop
-    * generalized to any k over a caller-scored candidate pool: rows
+  /** Maximal-Marginal-Relevance selection — sim_mmr calls this at
+    * k = 3 over its 5-query × 100-candidate pool; it is the greedy loop
+    * for any k over a caller-scored candidate pool: rows
     * (qid, cid, rel, vec) where `rel` is the query-relevance score and
-    * `vec` the candidate embedding (at scale the pool is an ANN probe's
-    * top-N, never the corpus). Round 1 picks pure argmax rel; round
-    * i ≥ 2 picks argmax round(λ·rel − (1−λ)·pen, 9) where pen is the
-    * running max 9-dp-rounded cosine to everything already selected.
-    * Ties break on the smaller cid (max(struct(score, −cid)) fold), so
-    * the greedy path is partitioning-exact; each round is a |q|-row
-    * argmax + one small join over the localCheckpointed pool — no
-    * rescan of the source. λ must be a literal the caller also uses
-    * everywhere else (see sim_mmr's 0.7/0.3 note). Returns
+    * `vec` the candidate's `array<float>` embedding (at scale the pool
+    * is an ANN probe's top-N, never the corpus). Round 1 picks pure
+    * argmax rel; round i ≥ 2 picks argmax round(λ·rel − (1−λ)·pen, 9)
+    * where pen is the running max 9-dp-rounded `cosine_f32` to
+    * everything already selected. Ties break on the smaller cid
+    * (max(struct(score, −cid)) fold), so the greedy path is
+    * partitioning-exact; each round is a |q|-row argmax + one small
+    * join — no rescan of the source. A round's table is
+    * localCheckpointed (one Spark job at call time) only when a later
+    * round reads it: k − 1 jobs. λ must be a literal the caller also
+    * uses everywhere else (see sim_mmr's 0.7/0.3 note). Returns
     * (qid, rank, cid, score) for rank 1..k.
     *
     * SHORT-POOL CONTRACT: a qid whose candidate pool holds fewer than
@@ -1388,16 +1412,13 @@ object GraftOps {
         .agg(max(struct(col(score), (-col("mc")).as("nc"))).as("mx"))
         .select(col("mq"), (-col("mx.nc")).as("sel"),
           col("mx").getField(score).as("sc"))
-    def cos(a: Column, b: Column): Column = {
-      def dot(x: Column, y: Column) =
-        aggregate(zip_with(x, y, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
-          lit(0.0), (acc, v) => acc + v)
-      dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-    }
-    var remaining = pool
+    // round r's table feeds its argmax, the selected vector's lookup
+    // and round r + 1: materialize it once unless r is the last round
+    def forRound(r: Int, df: DataFrame) = if (r < k) df.localCheckpoint() else df
+    val pen = round(graft.functions.GraftFunctions.cosineF32(col("mv"), col("sv")), 9)
+    var remaining = forRound(1, pool
       .select(qid.as("mq"), cid.as("mc"), rel.as("mr"), vec.as("mv"))
-      .withColumn("score", col("mr"))
-      .localCheckpoint()
+      .withColumn("score", col("mr")))
     var out: DataFrame = null
     for (rank <- 1 to k) {
       val s = argmax(remaining, "score")
@@ -1409,16 +1430,13 @@ object GraftOps {
             col("mv").as("sv")),
           s("mq") === col("jq") && s("sel") === col("jc"))
           .select(col("jq"), col("sel"), col("sv"))
-        remaining = remaining
+        remaining = forRound(rank + 1, remaining
           .join(broadcast(se), remaining("mq") === se("jq"))
           .filter(col("mc") =!= col("sel"))
           .select(col("mq"), col("mc"), col("mr"), col("mv"),
-            (if (rank == 1) round(cos(col("mv"), col("sv")), 9)
-             else greatest(col("pen"), round(cos(col("mv"), col("sv")), 9)))
-              .as("pen"))
+            (if (rank == 1) pen else greatest(col("pen"), pen)).as("pen"))
           .withColumn("score", round(lit(lambda) * col("mr")
-            - lit(oneMinusLambda) * col("pen"), 9))
-          .localCheckpoint()
+            - lit(oneMinusLambda) * col("pen"), 9)))
       }
     }
     out
@@ -1447,33 +1465,28 @@ object GraftOps {
           .otherwise(lit(0.0)))
   }
 
-  /** 1-bit sign binarization of an embedding column — embed_binarize's
-    * construction over a caller vector: bit i set iff dim i is >= 0,
-    * packed into two 32-dim int64 halves (code_hi = dims 33-64,
-    * code_lo = dims 1-32; one 64-bit word would need the sign bit and
-    * engines disagree on signed overflow). Returns
-    * struct(code_hi, code_lo, n_pos). Unrolled literal sums, not
-    * aggregate() HOFs, so the packing stays inside whole-stage codegen
-    * and rides the scan: the 64x index-compression step costs nothing
-    * extra at 100 TB. Dims beyond 64 are ignored; vectors SHORTER than
-    * 64 dims degrade gracefully — missing dims contribute a 0 bit (as
-    * if negative), guarded with a size() check per bit so ANSI mode
-    * never raises INVALID_ARRAY_INDEX (round-13 advice fix; the guard
-    * is a constant-foldable comparison, still codegen'd). */
+  /** 1-bit sign binarization of an `array<float>` embedding column —
+    * embed_binarize, and the codes sim_knn_hamming, hamming_eval and
+    * sim_knn_rerank rank by: bit i set iff dim i is >= 0, packed by the
+    * codegen'd `sign_pack32` kernel into two 32-dim int64 halves
+    * (code_hi = dims 33-64, code_lo = dims 1-32; one 64-bit word would
+    * need the sign bit and engines disagree on signed overflow), with
+    * n_pos = bit_count(code_hi) + bit_count(code_lo). Returns
+    * struct(code_hi, code_lo, n_pos); the packing rides the scan, so
+    * the 64x index-compression step costs nothing extra at 100 TB.
+    * Dims beyond 64 are ignored; a dim past the end of a SHORTER
+    * vector, a NULL element and a NULL vector contribute 0 bits (as if
+    * negative), as in the DuckDB oracle. */
   def signBinarize(vec: Column): Column = {
-    def bit(i: Int): Column =
-      when(size(vec) > i && element_at(vec, i + 1) >= 0.0, lit(1L))
-        .otherwise(lit(0L))
-    def pack(off: Int): Column = (0 until 32)
-      .map(i => bit(i + off) * lit(1L << i))
-      .reduce(_ + _)
-    val nPos = (0 until 64).map(bit).reduce(_ + _)
-    struct(pack(32).as("code_hi"), pack(0).as("code_lo"), nPos.as("n_pos"))
+    val hi = graft.functions.GraftFunctions.signPack32(vec, 32)
+    val lo = graft.functions.GraftFunctions.signPack32(vec, 0)
+    struct(hi.as("code_hi"), lo.as("code_lo"),
+      (bit_count(hi) + bit_count(lo)).cast(LongType).as("n_pos"))
   }
 
   /** 64-bit Hamming distance between two packed sign codes (the
-    * signBinarize halves) — two XOR+POPCNT ops, the sim_knn_hamming /
-    * sim_knn_rerank first-pass distance. */
+    * signBinarize halves) — two XOR+POPCNT ops, the sim_knn_hamming,
+    * hamming_eval and sim_knn_rerank first-pass distance. */
   def hammingDistance(hiA: Column, loA: Column,
                       hiB: Column, loB: Column): Column =
     (bit_count(hiA.bitwiseXOR(hiB)) + bit_count(loA.bitwiseXOR(loB)))

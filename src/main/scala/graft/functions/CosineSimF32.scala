@@ -21,15 +21,17 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `sqrt(Σx²)·sqrt(Σy²)` and therefore to the DuckDB oracle recipe
   * (SURVEY.md §7.3.3). VectorSpec asserts the equivalence exactly.
   *
-  * Edge cases (deliberately NOT the HOF behavior, which null-propagates):
-  * unequal lengths truncate to the shorter array; null elements read as
-  * 0.0. Callers needing null-propagation should pre-filter — the fixture
-  * embeddings are fixed-width non-null, so oracled queries are unaffected.
+  * Edge cases follow the DuckDB formula: a NULL element on either side,
+  * arrays of unequal length and a zero-norm side each give NULL (the
+  * HOF gives NULL for the first two and raises DIVIDE_BY_ZERO under
+  * ANSI for the third).
   */
 case class CosineSimF32(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(FloatType, _), ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
@@ -40,32 +42,39 @@ case class CosineSimF32(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getFloat(i).toDouble
       val yi = y.getFloat(i).toDouble
       dot += xi * yi; nx += xi * xi; ny += yi * yi
       i += 1
     }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
+    val den = math.sqrt(nx) * math.sqrt(ny)
+    if (den == 0.0) null else dot / den
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i"); val n = ctx.freshName("n")
       val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
+      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi"); val den = ctx.freshName("den")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |${ev.isNull} = $n != $b.numElements();
          |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
+         |for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
          |  double $xi = (double) $a.getFloat($i);
          |  double $yi = (double) $b.getFloat($i);
          |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
          |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
+         |double $den = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
+         |if ($den == 0.0) { ${ev.isNull} = true; }
+         |else if (!${ev.isNull}) { ${ev.value} = $dot / $den; }
        """.stripMargin
     })
 
@@ -74,16 +83,17 @@ case class CosineSimF32(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Native Catalyst expression: fused Σx² over an `array<float>` column
-  * (round-18 opt). Accumulates in double, index order — bit-identical
-  * to the HOF formula `aggregate(transform(e, x -> double(x)*double(x)),
-  * 0D, (a,v) -> a+v)` (the cosine_f32 nx accumulator run alone;
-  * VectorSpec pins the equivalence). Null elements read as 0.0 like
-  * cosine_f32; fixture embeddings are non-null fixed-width. */
+/** Native Catalyst expression: fused Σx² over an `array<float>` column.
+  * Accumulates in double, index order — bit-identical to the HOF
+  * formula `aggregate(transform(e, x -> double(x)*double(x)), 0D,
+  * (a,v) -> a+v)` (the cosine_f32 nx accumulator run alone; TextSigSpec
+  * pins the equivalence), NULL for a NULL element like that fold. */
 case class SumSqF32(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
   override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
@@ -97,6 +107,7 @@ case class SumSqF32(child: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i)) return null
       val xi = x.getFloat(i).toDouble
       acc += xi * xi
       i += 1
@@ -112,6 +123,7 @@ case class SumSqF32(child: Expression)
          |int $n = $a.numElements();
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
          |  double $xi = (double) $a.getFloat($i);
          |  $acc += $xi * $xi;
          |}
@@ -260,6 +272,16 @@ object GraftFunctions {
   def signPack32(c: Column, off: Int): Column =
     GraftBridge.column(SignPack32(GraftBridge.expression(c),
       org.apache.spark.sql.catalyst.expressions.Literal(off)))
+
+  /** Column-API entry for the fused cosine over two `array<float>`
+    * columns — bit-identical to the HOF fold (pinned in VectorSpec). */
+  def cosineF32(a: Column, b: Column): Column =
+    GraftBridge.column(CosineSimF32(GraftBridge.expression(a), GraftBridge.expression(b)))
+
+  /** Column-API entry for the fused Σx² over an `array<float>` column
+    * (pinned in TextSigSpec). */
+  def sumSqF32(c: Column): Column =
+    GraftBridge.column(SumSqF32(GraftBridge.expression(c)))
 
   /** Column-API entry for the fused token count — value-identical to
     * size(split(c, " ")) cast to bigint (pinned in TextSigSpec). */

@@ -442,24 +442,19 @@ case class Md5Prefix48(child: Expression) extends TextSigExpr {
     copy(child = newChild)
 }
 
-/** Fused 32-bit sign pack (round-18 opt): bit i set iff
-  * `embedding[off + i] >= 0` — the value of the unrolled 32-term
-  * IF-sum (the reference copy in TextSigSpec's sign_pack32 test) as ONE
-  * loop instead of 32 branch expressions per row (and a fraction of
-  * the generated-code size). Bit-identical; pinned in TextSigSpec. */
+/** Fused 32-bit sign pack: bit i set iff `embedding[off + i] >= 0`,
+  * the value of the size-guarded unrolled 32-term IF-sum (the
+  * reference copy in TextSigSpec's sign_pack32 test) as ONE loop
+  * instead of 32 branch expressions per row. A dim that is NULL or
+  * past the end of the array leaves its bit CLEAR, and a NULL array
+  * packs to 0 — the DuckDB reading, where an out-of-range index or a
+  * NULL list gives NULL and `IF(NULL >= 0, b, 0)` is 0. */
 object SignPack32 {
-  /** round-19 hardening (ADVICE r18): match the unrolled SQL IF-sum on
-    * adversarial inputs too — a NULL element leaves its bit CLEAR
-    * (IF(NULL ≥ 0, b, 0) = 0), and an array shorter than off+32 raises
-    * a clear error exactly like the ANSI-mode embedding[i] lookup the
-    * expression replaces (reading past numElements() was undefined). */
   def pack(x: ArrayData, off: Int): Long = {
-    if (x.numElements() < off + 32)
-      throw new IllegalArgumentException(
-        s"sign_pack32: array has ${x.numElements()} elements, needs >= ${off + 32}")
+    val n = if (x == null) 0 else math.min(32, x.numElements() - off)
     var acc = 0L
     var i = 0
-    while (i < 32) {
+    while (i < n) {
       if (!x.isNullAt(off + i) && x.getFloat(off + i) >= 0f) acc |= (1L << i)
       i += 1
     }
@@ -472,6 +467,7 @@ case class SignPack32(first: Expression, second: Expression)
   override def left: Expression = first
   override def right: Expression = second
   override def dataType: DataType = LongType
+  override def nullable: Boolean = false
   override def prettyName: String = "sign_pack32"
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType) match {
@@ -480,14 +476,18 @@ case class SignPack32(first: Expression, second: Expression)
       case t => TypeCheckResult.TypeCheckFailure(
         s"sign_pack32 expects (array<float>, int literal offset), got $t")
     }
-  override def nullSafeEval(a: Any, o: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val off = o.asInstanceOf[Int]
-    SignPack32.pack(x, off)
+  @transient private lazy val off: Int = second.eval(null).asInstanceOf[Int]
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    SignPack32.pack(first.eval(input).asInstanceOf[ArrayData], off)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+    val a = first.genCode(ctx)
+    ev.copy(code = code"""
+      ${a.code}
+      long ${ev.value} = graft.functions.SignPack32.pack(${a.isNull} ? null : ${a.value}, $off);""",
+      isNull = FalseLiteral)
   }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, o) =>
-      s"${ev.value} = graft.functions.SignPack32.pack($a, $o);")
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(first = l, second = r)
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryGroup, Tables}
+import graft.api.GraftOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,21 +10,16 @@ import org.apache.spark.sql.types._
   * similarity search over the embedding column, embedding near-dup,
   * multimodal (opaque binary) columns.
   *
-  * Vector math is pure higher-order functions (`zip_with`/`aggregate`) —
-  * no UDFs, exact double arithmetic, identical left-fold order to the
-  * DuckDB oracle formula (probe-verified bit-exact, SURVEY.md §7.3.3).
+  * Vector math is the codegen'd float kernels (`cosine_f32`,
+  * `sumsq_f32`, `sign_pack32`, through the [[GraftOps]] vector family)
+  * and, for double or mixed vectors, [[GraftOps.cosineSim]]'s
+  * `zip_with`/`aggregate` fold — no UDFs, exact double arithmetic,
+  * identical left-fold order to the DuckDB oracle formula
+  * (probe-verified bit-exact, SURVEY.md §7.3.3).
   * Pair enumeration is always explicitly capped or LSH/IVF-bucketed —
   * the O(n²) step is the one that cannot survive 100 TB (SURVEY.md §4).
   */
 object LlmVector extends QueryGroup {
-
-  /** Exact double dot product via zip_with + aggregate left fold. */
-  private def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-
-  private def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   /** DuckDB-side cosine between two DOUBLE[] exprs — the §7.3.3-verified
     * explicit formula (never list_cosine_similarity, it computes f32). */
@@ -146,7 +142,7 @@ object LlmVector extends QueryGroup {
       .partitionBy(col("vec_id")).orderBy(col("c").desc, col("cell"))
     val assigned = batch.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"), col("cell"),
-        cosine(col("centroid"), col("embedding")).as("c"))
+        GraftOps.cosineSim(col("centroid"), col("embedding")).as("c"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("cell"), col("vec_id"), col("embedding"))
@@ -218,7 +214,7 @@ object LlmVector extends QueryGroup {
     val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
       .select(col("embedding").as("qe"))
     val probed = s.read.parquet(s"$path/centroids").crossJoin(broadcast(q))
-      .select(col("cell"), cosine(col("centroid"), col("qe")).as("ccos"))
+      .select(col("cell"), GraftOps.cosineSim(col("centroid"), col("qe")).as("ccos"))
       .orderBy(col("ccos").desc, col("cell")).limit(3)
       .select(col("cell"))
     s.read.parquet(s"$path/cells")
@@ -418,14 +414,15 @@ object LlmVector extends QueryGroup {
     * Goldstein 1998), the selection rule that keeps a retrieval/
     * curation batch from returning k near-copies of the same item:
     * greedily pick argmax λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s),
-    * here k = 3 unrolled rounds at λ = 0.7 over a bounded candidate
-    * pool per query (5 queries × 100 candidates — at scale the pool is
-    * the ANN index's top-N probe, never the corpus). Determinism: every
+    * here [[GraftOps.mmrSelect]] at k = 3 and λ = 0.7 over a bounded
+    * candidate pool per query (5 queries × 100 candidates — at scale
+    * the pool is the ANN index's top-N probe, never the corpus).
+    * Determinism: every
     * score is re-rounded to 9 dp BEFORE the argmax (the embed_pca
     * technique — bit-equal operands on both engines) and the argmax
     * breaks ties on the smaller vec_id via a max(struct(score, −id))
     * fold, so the greedy path is engine- and partitioning-exact; the
-    * oracle unrolls the identical three rounds as CTEs. Both weights
+    * oracle unrolls the same three rounds as CTEs. Both weights
     * are spelled as the literals 0.7 / 0.3 on both sides — computing
     * 1.0 − 0.7 in doubles yields 0.30000000000000004, a different
     * operand than the oracle's parsed 0.3. Shape: one
@@ -434,75 +431,33 @@ object LlmVector extends QueryGroup {
     * is a |q|-row argmax + one small equality join — no corpus
     * rescan. */
   private val simMmr: QFn = (s, d) => {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5L)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val cand = e.filter(col("vec_id") >= 20L && col("vec_id") < 120L)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    val rel = q.crossJoin(broadcast(cand))
+    val pool = q.crossJoin(broadcast(cand))
       .select(col("qid"), col("cid"), col("ce"),
-        round(expr("cosine_f32(qe, ce)"), 9).as("rel"))
-      .localCheckpoint()  // 3 rounds + the output re-read it
-    def argmax(df: org.apache.spark.sql.DataFrame, score: String) =
-      df.groupBy(col("qid"))
-        .agg(max(struct(col(score), (-col("cid")).as("nc"))).as("mx"))
-        .select(col("qid"), (-col("mx.nc")).as("sel"), col("mx").getField(score).as("sc"))
-    // round 1: pure relevance
-    val s1 = argmax(rel, "rel")
-    val s1e = s1.join(rel.select(col("qid"), col("cid"), col("ce")),
-      s1("qid") === rel("qid") && s1("sel") === rel("cid"))
-      .select(s1("qid").as("qid1"), col("sel").as("sid1"), col("ce").as("se1"), col("sc").as("sc1"))
-    // round 2: penalized by similarity to s1
-    val r2 = rel.join(broadcast(s1e), col("qid") === col("qid1"))
-      .filter(col("cid") =!= col("sid1"))
-      .select(col("qid"), col("cid"), col("ce"), col("rel"),
-        round(expr("cosine_f32(ce, se1)"), 9).as("sim1"))
-      .withColumn("mmr", round(lit(0.7) * col("rel") - lit(0.3) * col("sim1"), 9))
-      .localCheckpoint()  // the argmax and round 3 both re-read it
-    val s2 = argmax(r2, "mmr")
-    val s2e = s2.join(r2.select(col("qid"), col("cid"), col("ce")),
-      s2("qid") === r2("qid") && s2("sel") === r2("cid"))
-      .select(s2("qid").as("qid2"), col("sel").as("sid2"), col("ce").as("se2"), col("sc").as("sc2"))
-    // round 3: penalized by the max similarity to {s1, s2}
-    val r3 = r2.join(broadcast(s2e), col("qid") === col("qid2"))
-      .filter(col("cid") =!= col("sid2"))
-      .select(col("qid"), col("cid"), col("rel"), col("sim1"),
-        round(expr("cosine_f32(ce, se2)"), 9).as("sim2"))
-      .withColumn("mmr", round(lit(0.7) * col("rel")
-        - lit(0.3) * greatest(col("sim1"), col("sim2")), 9))
-    val s3 = argmax(r3, "mmr")
-    s1e.select(col("qid1").as("qid"), lit(1L).as("rank"),
-        col("sid1").as("vec_id"), (round(col("sc1"), 6) + lit(0.0)).as("score"))
-      .unionByName(s2e.select(col("qid2").as("qid"), lit(2L).as("rank"),
-        col("sid2").as("vec_id"), (round(col("sc2"), 6) + lit(0.0)).as("score")))
-      .unionByName(s3.select(col("qid"), lit(3L).as("rank"),
-        col("sel").as("vec_id"), (round(col("sc"), 6) + lit(0.0)).as("score")))
+        round(graft.functions.GraftFunctions.cosineF32(col("qe"), col("ce")), 9).as("rel"))
+    GraftOps.mmrSelect(pool, col("qid"), col("cid"), col("rel"), col("ce"), k = 3)
+      .select(col("qid"), col("rank"), col("cid").as("vec_id"), col("score"))
       .orderBy(col("qid"), col("rank"))
   }
 
   /** Batch kNN — the shape a pipeline actually runs (embed a batch,
     * retrieve for every query at once, e.g. dedup-against-index or
-    * RAG-style retrieval): ONE corpus pass against a broadcast query
-    * set, per-query top-5 via a rank window partitioned by query id.
+    * RAG-style retrieval): [[GraftOps.knnCosine]] at k = 5 for the
+    * first 10 vectors, ONE corpus pass against a broadcast query set,
+    * per-query top-5 via a rank window partitioned by query id.
     * Scale: corpus × |queries| stays a broadcast nested-loop over a
     * bounded query batch (never corpus × corpus); the window
     * partitions by query id, so no single-partition global sort. The
     * IVF variant composes the same way over the pruned cells scan. */
   private val simKnnBatch: QFn = (s, d) => {
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < 10L)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), expr("cosine_f32(embedding, qe)").as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("rank").cast(LongType).as("rank"),
-        col("vec_id"), (round(col("cos"), 6) + lit(0.0)).as("cos_sim"))
+    GraftOps.knnCosine(e, col("vec_id"), col("embedding"),
+        e.filter(col("vec_id") < 10L), col("vec_id"), col("embedding"),
+        k = 5, excludeSelf = true)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -738,7 +693,7 @@ object LlmVector extends QueryGroup {
       val wV = org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("gcos").desc, col("g_id"))
       val vg = e.crossJoin(broadcast(coarse))
-        .select(col("vec_id"), col("g_id"), cosine(col("embedding"), col("gv")).as("gcos"))
+        .select(col("vec_id"), col("g_id"), GraftOps.cosineSim(col("embedding"), col("gv")).as("gcos"))
         .withColumn("rn", row_number().over(wV)).filter(col("rn") <= probeCoarse)
         .select(col("vec_id"), col("g_id"))
       // probe only the anchors living in those coarse cells;
@@ -751,7 +706,7 @@ object LlmVector extends QueryGroup {
         .select(col("vec_id"), col("a_id")).distinct()
         .join(e, "vec_id")
         .join(broadcast(anchors), Seq("a_id"))
-        .select(col("vec_id"), col("a_id"), cosine(col("embedding"), col("av")).as("acos"))
+        .select(col("vec_id"), col("a_id"), GraftOps.cosineSim(col("embedding"), col("av")).as("acos"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= cellsPerVec)
         .select(col("vec_id"), col("a_id").as("cell"))
@@ -1031,7 +986,7 @@ object LlmVector extends QueryGroup {
     val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
       .select(col("embedding").as("qe"))
     val probed = s.read.parquet(s"$path/centroids").crossJoin(broadcast(q))
-      .select(col("cell"), cosine(col("centroid"), col("qe")).as("ccos"))
+      .select(col("cell"), GraftOps.cosineSim(col("centroid"), col("qe")).as("ccos"))
       .orderBy(col("ccos").desc, col("cell")).limit(3)
       .select(col("cell"))
     val cand = s.read.parquet(s"$path/cells")
@@ -1148,44 +1103,31 @@ object LlmVector extends QueryGroup {
 
   /** Int8-style affine quantization of the embedding column — the
     * 100 TB storage shape (4 bytes/dim f32 → 1 byte/dim + two scalars
-    * per vector). q_i = clamp(floor((x_i - lo)/scale + 0.5), 0, 255)
-    * with per-vector lo/hi; `floor(x + 0.5)` instead of `round` because
-    * Spark's round() goes through BigDecimal HALF_UP on the decimal
-    * string while DuckDB rounds the binary double — floor is identical
-    * IEEE on both. Quantized codes joined to one string (array-free
-    * checker contract); pure HOFs, single codegen stage. */
+    * per vector): [[GraftOps.int8Quantize]], the quantized codes joined
+    * to one string (array-free checker contract). No shuffle. */
   private val embedQuantize: QFn = (s, d) =>
     Tables.embeddings(s, d)
-      .withColumn("e", transform(col("embedding"), x => x.cast(DoubleType)))
-      .withColumn("lo", array_min(col("e")))
-      .withColumn("hi", array_max(col("e")))
-      .select(col("vec_id"), col("lo"), col("hi"),
-        ((col("hi") - col("lo")) / 255.0).as("qscale"),
-        expr("""concat_ws(',', transform(e, x ->
-            CAST(CASE WHEN hi = lo THEN 0L
-                 ELSE least(255L, greatest(0L, floor((x - lo) / ((hi - lo) / 255.0D) + 0.5D))) END
-               AS STRING)))""").as("q"))
+      .select(col("vec_id"), GraftOps.int8Quantize(col("embedding")).as("z"))
+      .select(col("vec_id"), col("z.lo").as("lo"), col("z.hi").as("hi"),
+        col("z.qscale").as("qscale"),
+        concat_ws(",", transform(col("z.q"), x => x.cast(StringType))).as("q"))
       .orderBy(col("vec_id"))
 
   /** L2 normalization — the prep step every cosine-based retrieval /
     * clustering stage wants done ONCE at ingest rather than per query
     * (normalized vectors turn cosine into a plain dot product, which is
-    * what the ANN index and dedup_embcos consume). Pure HOFs over the
-    * array column, one codegen stage, no shuffle; the unit-scaled head
-    * dims are emitted as %.6f strings (array-free checker contract) and
-    * the division uses the UNROUNDED norm so the text is a faithful
-    * sample of what a normalized sink would store. */
+    * what the ANN index and dedup_embcos consume). The norm is
+    * sqrt(`sumsq_f32`); the head dims of [[GraftOps.l2Normalize]] are
+    * emitted as %.6f strings (array-free checker contract), divided by
+    * the UNROUNDED norm so the text is a faithful sample of what a
+    * normalized sink would store. No shuffle. */
   private val embedNorm: QFn = (s, d) => {
-    graft.functions.GraftFunctions.ensureRegistered(s)
+    val e = col("embedding")
     Tables.embeddings(s, d)
-      // fused codegen Σx² (round-18 opt; bit-identical to the HOF
-      // fold, pinned in VectorSpec)
-      .withColumn("nrm", sqrt(expr("sumsq_f32(embedding)")))
       .select(col("vec_id"),
-        round(col("nrm"), 6).as("l2_norm"),
-        concat_ws(",", transform(slice(col("embedding"), 1, 4),
-          x => format_string("%.6f",
-            round(x.cast(DoubleType) / col("nrm"), 6) + lit(0.0))))
+        round(sqrt(graft.functions.GraftFunctions.sumSqF32(e)), 6).as("l2_norm"),
+        concat_ws(",", transform(slice(GraftOps.l2Normalize(e), 1, 4),
+          x => format_string("%.6f", round(x, 6) + lit(0.0))))
           .as("head4_unit"))
       .orderBy(col("vec_id"))
   }
@@ -1509,7 +1451,7 @@ object LlmVector extends QueryGroup {
     val e = Tables.embeddings(s, d)
     doc.join(e, doc("doc_id") === e("vec_id"))
       .select(col("label"), length(col("text")).cast(DoubleType).as("tlen"),
-              sqrt(dot(col("embedding"), col("embedding"))).as("l2"))
+              sqrt(graft.functions.GraftFunctions.sumSqF32(col("embedding"))).as("l2"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
            // + 0.0 folds DuckDB's -0.0 when corr rounds to zero from below
@@ -1620,41 +1562,36 @@ object LlmVector extends QueryGroup {
   // quantizers, binarization has no iterative fit).
   // ------------------------------------------------------------------
 
-  /** Unrolled 64-term popcount of positive dims (the ivf_eval sign
-    * convention: a dim counts iff its f32 value is >= 0). Plain
-    * conditionals, not an `aggregate` HOF, so the count stays inside
-    * whole-stage codegen (HOFs are eval-mode) and rides the scan. */
-  private val nPosExpr: String =
-    (0 until 64).map(i => s"IF(embedding[$i] >= 0, 1L, 0L)")
-      .mkString("(", " + ", ")")
-
-  /** vec_id + the two packed 32-bit sign halves (hi = dims 33-64,
-    * lo = dims 1-32). Two halves instead of one 64-bit word keep every
-    * intermediate a non-negative int64 (a single word would need the
-    * sign bit, and engines differ on signed overflow); they cost one
-    * extra XOR+POPCNT. Shared by every Hamming rung; one shuffle-free
-    * codegen projection over the scan — binarization at 100 TB is a
-    * free rider on whatever pass reads the vectors. */
-  private def binaryCodes(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.GraftFunctions.signPack32(col("embedding"), 32).as("code_hi"),
-      graft.functions.GraftFunctions.signPack32(col("embedding"), 0).as("code_lo"))
-
-  /** Spark-side 64-bit Hamming distance between (code_hi, code_lo) and
-    * the broadcast query halves (qhi, qlo). */
-  private val hammingExpr =
-    "CAST(bit_count(code_hi ^ qhi) + bit_count(code_lo ^ qlo) AS BIGINT)"
-
-  /** Declared binarization rung: the packed code plus the population
-    * count (a balance diagnostic — a healthy embedding distribution
-    * binarizes to ~half the bits set; heavy skew means the sign grid
-    * carries little information and Hamming recall will be poor). */
+  /** Declared binarization rung: [[GraftOps.signBinarize]] — the packed
+    * code plus the population count (a balance diagnostic — a healthy
+    * embedding distribution binarizes to ~half the bits set; heavy skew
+    * means the sign grid carries little information and Hamming recall
+    * will be poor). */
   private val embedBinarize: QFn = (s, d) =>
-    Tables.embeddings(s, d).select(col("vec_id"),
-      graft.functions.GraftFunctions.signPack32(col("embedding"), 32).as("code_hi"),
-      graft.functions.GraftFunctions.signPack32(col("embedding"), 0).as("code_lo"),
-      expr(nPosExpr).as("n_pos"))
+    Tables.embeddings(s, d)
+      .select(col("vec_id") +: codeFields("code_hi", "code_lo", "n_pos"): _*)
       .orderBy(col("vec_id"))
+
+  /** Fields of [[GraftOps.signBinarize]] over the embedding, each
+    * extracted in the projection that builds the struct: the optimizer
+    * then reduces every field to its own expression (a struct
+    * projected first and read by a later projection stays a struct). */
+  private def codeFields(names: String*): Seq[Column] = {
+    val b = GraftOps.signBinarize(col("embedding"))
+    names.map(n => b.getField(n).as(n))
+  }
+
+  /** The embeddings with their sign-code halves (code_hi, code_lo)
+    * beside them — one shuffle-free projection over the scan, shared
+    * by every Hamming rung. */
+  private def withCodes(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(Seq(col("vec_id"), col("embedding")) ++ codeFields("code_hi", "code_lo"): _*)
+
+  /** [[GraftOps.hammingDistance]] between (code_hi, code_lo) and the
+    * broadcast query halves (qhi, qlo). */
+  private val ham: Column = GraftOps.hammingDistance(
+    col("code_hi"), col("code_lo"), col("qhi"), col("qlo"))
 
   /** Hamming top-10 for 5 query codes over the binarized corpus — the
     * cheap first-pass retrieval: one corpus pass × a broadcast query
@@ -1665,7 +1602,7 @@ object LlmVector extends QueryGroup {
     * linear scan of 8-byte codes, no corpus shuffle. */
   private val simKnnHamming: QFn = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val c = binaryCodes(s, d)
+    val c = withCodes(s, d)
     val q = c.filter(col("vec_id") < 5L)
       .select(col("vec_id").as("qid"),
         col("code_hi").as("qhi"), col("code_lo").as("qlo"))
@@ -1673,7 +1610,7 @@ object LlmVector extends QueryGroup {
       .orderBy(col("ham").asc, col("vec_id").asc)
     c.filter(col("vec_id") >= 5L)
       .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), expr(hammingExpr).as("ham"))
+      .select(col("qid"), col("vec_id"), ham.as("ham"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 10)
       .select(col("qid"), col("rn").cast(LongType).as("rank"),
@@ -1689,23 +1626,17 @@ object LlmVector extends QueryGroup {
     * deployed by sim_knn_hamming/sim_knn_rerank. */
   private val hammingEval: QFn = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.signPack32(col("embedding"), 32).as("code_hi"), graft.functions.GraftFunctions.signPack32(col("embedding"), 0).as("code_lo"))
+    val e = withCodes(s, d)
     val q = e.filter(col("vec_id") < 20L)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("code_hi").as("qhi"), col("code_lo").as("qlo"))
-    // ONE candidate pass (round-18 opt, the ivf_eval device): both
-    // rankings off one crossJoin+cosine+hamming evaluation and one
-    // hashpartitioning(qid) exchange (two sorts — the orderings
-    // differ), instead of evaluating the crossJoin subtree twice and
-    // re-joining the branches. cosine_f32 replaces the interpreted HOF
-    // fold (bit-identical accumulation, pinned in VectorSpec).
+    // both rankings come off ONE crossJoin pass and one
+    // hashpartitioning(qid) exchange (two sorts — the orderings differ)
     val cand = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        expr("cosine_f32(embedding, qe)").as("cs"),
-        expr(hammingExpr).as("ham"))
+        graft.functions.GraftFunctions.cosineF32(col("embedding"), col("qe")).as("cs"),
+        ham.as("ham"))
     val wE = Window.partitionBy(col("qid")).orderBy(col("cs").desc, col("vec_id"))
     val wH = Window.partitionBy(col("qid")).orderBy(col("ham").asc, col("vec_id"))
     cand
@@ -1730,19 +1661,18 @@ object LlmVector extends QueryGroup {
     * the scan. The final order is on the rounded cosine with vec_id
     * tie-break (sim_knn's determinism recipe). */
   private val simKnnRerank: QFn = (s, d) => {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-      graft.functions.GraftFunctions.signPack32(col("embedding"), 32).as("code_hi"), graft.functions.GraftFunctions.signPack32(col("embedding"), 0).as("code_lo"))
+    val e = withCodes(s, d)
     val q = e.filter(col("vec_id") === 0L)
       .select(col("embedding").as("qe"),
         col("code_hi").as("qhi"), col("code_lo").as("qlo"))
     e.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(q))
-      .withColumn("ham", expr(hammingExpr))
+      .withColumn("ham", ham)
       .orderBy(col("ham").asc, col("vec_id").asc)
       .limit(50)
       .select(col("vec_id"), col("ham"),
-        (round(expr("cosine_f32(embedding, qe)"), 6) + lit(0.0)).as("cos_sim"))
+        (round(graft.functions.GraftFunctions.cosineF32(col("embedding"), col("qe")), 6)
+          + lit(0.0)).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
   }
@@ -1781,11 +1711,12 @@ object LlmVector extends QueryGroup {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** Hybrid retrieval fusion — Reciprocal Rank Fusion (Cormack,
-    * Clarke & Buettcher 2009; k = 60, the standard constant) over the
-    * two retrieval legs this engine already serves: the text_bm25
-    * lexical ranking and the exact-cosine semantic ranking, bridged by
-    * the fixture's doc_id == vec_id contract. This is the fusion step
+  /** Hybrid retrieval fusion — [[GraftOps.rrfFuse]] (Reciprocal Rank
+    * Fusion, Cormack, Clarke & Buettcher 2009; k = 60, the standard
+    * constant) over the two retrieval legs this engine already serves:
+    * the text_bm25 lexical ranking and the [[GraftOps.knnCosine]]
+    * top-10 of the first 5 vectors, bridged by the fixture's
+    * doc_id == vec_id contract. This is the fusion step
     * a production RAG stack runs between retrieval and rerank — BM25
     * catches exact-term matches embeddings miss, embeddings catch
     * paraphrases BM25 misses, and RRF folds the two WITHOUT score
@@ -1806,37 +1737,14 @@ object LlmVector extends QueryGroup {
     * posting-list join, broadcast query batch × one corpus pass); the
     * fusion itself joins two ≤10·|queries|-row tables — free. */
   private val simHybridRrf: QFn = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val bm = LlmText.bm25TopK(s, d)
-      .select(col("qid"), col("doc_id"), col("rank").as("rb"))
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val q = e.filter(col("vec_id") < 5L)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val wC = Window.partitionBy(col("qid"))
-      .orderBy(col("cs").desc, col("vec_id").asc)
-    val ct = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        // codegen cosine (bit-identical to the HOF fold, VectorSpec)
-        expr("cosine_f32(embedding, qe)").as("cs"))
-      .withColumn("rc", row_number().over(wC))
-      .filter(col("rc") <= 10)
-      .select(col("qid"), col("vec_id").as("doc_id"),
-        col("rc").cast(LongType).as("rc"))
-    val wF = Window.partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-    bm.join(ct, Seq("qid", "doc_id"), "full_outer")
-      .select(col("qid"), col("doc_id"),
-        (coalesce(lit(1.0) / (lit(60.0) + col("rb")), lit(0.0))
-          + coalesce(lit(1.0) / (lit(60.0) + col("rc")), lit(0.0))).as("rrf"),
-        (when(col("rb").isNotNull, 1L).otherwise(0L)
-          + when(col("rc").isNotNull, 1L).otherwise(0L)).as("n_legs"))
-      .withColumn("rank", row_number().over(wF))
-      .filter(col("rank") <= 10)
-      .select(col("qid"), col("rank").cast(LongType).as("rank"), col("doc_id"),
-        (round(col("rrf"), 6) + lit(0.0)).as("rrf"), col("n_legs"))
-      .orderBy(col("qid"), col("rank"))
+    val e = Tables.embeddings(s, d)
+    val cosLeg = GraftOps.knnCosine(e, col("vec_id"), col("embedding"),
+        e.filter(col("vec_id") < 5L), col("vec_id"), col("embedding"),
+        k = 10, excludeSelf = true)
+      .select(col("qid"), col("vec_id").as("doc_id"), col("rank"))
+    GraftOps.rrfFuse(
+      LlmText.bm25TopK(s, d).select(col("qid"), col("doc_id"), col("rank")),
+      cosLeg)
   }
 
   /** Voice-activity segmentation over the audio-stub frames — the step

@@ -90,11 +90,23 @@ class ApiSpec extends AnyFunSuite {
     val pairs = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
       .join(e.select(col("vec_id").as("ib"), col("embedding").as("eb")),
         col("ia") < col("ib"))
-    val diff = pairs.select(
+    // edge rows: a NULL element and unequal lengths give NULL on both
+    // sides (the DuckDB formula's answer too)
+    import spark.implicits._
+    val edge = Seq(
+        (Seq[java.lang.Float](1.0f, null, 2.0f), Seq[java.lang.Float](1.0f, 1.0f, 1.0f)),
+        (Seq[java.lang.Float](1.0f, 2.0f), Seq[java.lang.Float](1.0f, 2.0f, 3.0f)))
+      .toDF("ea", "eb")
+    val diff = pairs.select(col("ea"), col("eb")).union(edge).select(
         GraftOps.cosineSim(col("ea"), col("eb")).as("api"),
         expr("cosine_f32(ea, eb)").as("native"))
-      .filter(col("api") =!= col("native"))
-    assert(diff.count() == 0)
+      .filter(!(col("api") <=> col("native")))
+    assert(diff.count() == 0, diff.collect().mkString("\n"))
+    assert(edge.select(expr("cosine_f32(ea, eb)")).collect().forall(_.isNullAt(0)))
+    // a zero-norm side: NULL, where the HOF raises DIVIDE_BY_ZERO under ANSI
+    val zero = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f)), (Seq.empty[Float], Seq.empty[Float]))
+      .toDF("ea", "eb")
+    assert(zero.select(expr("cosine_f32(ea, eb)")).collect().forall(_.isNullAt(0)))
   }
 
   test("dedupExact matches dedup_exact") {
@@ -197,6 +209,12 @@ class ApiSpec extends AnyFunSuite {
       .collect().map(_.getSeq[Double](0))
     assert(out(0) == Seq(0.0, 0.0, 0.0)) // no divide-by-zero nulls
     assert(out(1).map(x => math.rint(x * 10) / 10) == Seq(0.6, 0.0, 0.8))
+    // a NULL element or a NULL vector has no norm: the vector is NULL,
+    // not the zero vector
+    val edge = Seq(Tuple1(Seq[java.lang.Float](3.0f, null, 4.0f)), Tuple1(null))
+      .toDF("v")
+      .select(GraftOps.l2Normalize(col("v")).as("u"))
+    assert(edge.collect().forall(_.isNullAt(0)), edge.collect().mkString(", "))
   }
 
   test("scd2History fails fast when the input already has history columns") {
@@ -977,6 +995,16 @@ class ApiSpec extends AnyFunSuite {
     val declared = SparkEntry.queries("sample_dsir")(spark, sf)
       .select(col("doc_id"), col("n_tokens"), col("w_nano"), col("imp_nano"))
     assert(rows(api) == rows(declared))
+  }
+
+  test("knnCosine on an array<double> column raises an analysis error naming array<float>") {
+    val e = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("ed"))
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      GraftOps.knnCosine(e, col("vec_id"), col("ed"),
+        e.filter(col("vec_id") < 3L), col("vec_id"), col("ed"), k = 2)
+    }
+    assert(err.getMessage.contains("array<float>"), err.getMessage)
   }
 
   test("knnCosine(excludeSelf, k=5) equals sim_knn_batch on the fixture queries") {

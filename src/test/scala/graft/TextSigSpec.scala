@@ -182,16 +182,32 @@ class TextSigSpec extends AnyFunSuite {
 
   test("sign_pack32 is bit-identical to the unrolled IF-sum pack") {
     graft.functions.GraftFunctions.ensureRegistered(spark)
+    import spark.implicits._
+    // size-guarded, so a dim past the end reads as a 0 bit (DuckDB's
+    // out-of-range NULL) instead of raising under ANSI
     def unrolled(off: Int): String =
-      (0 until 32).map(i => s"IF(embedding[${i + off}] >= 0, ${1L << i}L, 0L)")
+      (0 until 32).map(i =>
+          s"IF(size(embedding) > ${i + off} AND embedding[${i + off}] >= 0, ${1L << i}L, 0L)")
         .mkString("(", " + ", ")")
-    val both = Tables.embeddings(spark, TestSpark.sf).select(
-      expr("sign_pack32(embedding, 0)").as("lo"),
-      expr(unrolled(0)).as("lo_ref"),
-      expr("sign_pack32(embedding, 32)").as("hi"),
-      expr(unrolled(32)).as("hi_ref"))
-    assert(both.filter(col("lo") =!= col("lo_ref") || col("hi") =!= col("hi_ref"))
-      .count() == 0)
+    def f(xs: Float*): Seq[java.lang.Float] = xs.map(x => java.lang.Float.valueOf(x))
+    val edge = Seq(
+        Tuple1(f(1.0f, -2.0f, 3.0f)),                          // short
+        Tuple1(f((0 until 40).map(i => if (i % 3 == 0) -1.0f else 1.0f): _*)),
+        Tuple1(Seq.empty[java.lang.Float]),                    // empty
+        Tuple1(f(1.0f, 1.0f) ++ Seq(null) ++ f(Seq.fill(61)(0.5f): _*)),
+        Tuple1(null))                                          // NULL vector
+      .toDF("embedding")
+    val both = Tables.embeddings(spark, TestSpark.sf).select(col("embedding"))
+      .union(edge).select(
+        expr("sign_pack32(embedding, 0)").as("lo"),
+        expr(unrolled(0)).as("lo_ref"),
+        expr("sign_pack32(embedding, 32)").as("hi"),
+        expr(unrolled(32)).as("hi_ref"))
+    val diff = both.filter(!(col("lo") <=> col("lo_ref")) || !(col("hi") <=> col("hi_ref")))
+    assert(diff.count() == 0, diff.collect().mkString("\n"))
+    assert(edge.select(expr("sign_pack32(embedding, 0)")).collect().map(_.getLong(0))
+      .toSeq == Seq(5L, (0 until 32).filter(_ % 3 != 0).map(1L << _).sum, 0L,
+        (1L << 32) - 1 - 4L, 0L))
   }
 
   /** Round-19 fused token kernels: whitespace-adversarial corpus —
