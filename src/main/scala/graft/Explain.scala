@@ -58,7 +58,8 @@ object Explain {
     "text_tfidf", "udaf_histogram", "win_drawdown",
     "agg_ttest", "win_streak", "text_quality",
     "sample_weighted", "profile_columns",
-    "embed_norm", "embed_quantize", "multimodal_join", "ann_upsert")
+    "embed_norm", "embed_quantize", "multimodal_join", "ann_upsert",
+    "embed_pq", "sim_knn_pq")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
