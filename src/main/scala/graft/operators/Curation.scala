@@ -318,10 +318,9 @@ object Curation extends QueryGroup {
     * carrying 16-byte rows. Counts exact; one rounded division at
     * output. */
   private val textNgramNovelty: QFn = (s, d) => {
-    // gram hashes come from the SHARED gram base (one tokenize+md5
-    // pass per session+fixture — LlmText.gramsCached); this rung's gh
-    // was already the same 48-bit md5 prefix, so the value is
-    // bit-identical and the oracle is untouched
+    // gram hashes come from the gram base artifact (LlmText.gramsCached,
+    // one tokenize+md5 pass per fixture; this rung is its only reader);
+    // gh is the same 48-bit md5 prefix the oracle computes
     val sg = LlmText.gramsCached(s, d)
       .select(col("source"), col("gh"))
       .distinct()

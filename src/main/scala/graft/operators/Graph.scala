@@ -43,23 +43,17 @@ object Graph extends QueryGroup {
       .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
       .agg(count(lit(1)).as("w"))
 
-  private val edgeCache = new FingerprintCache
-
   /** The weighted edge table built ONCE per (fixture fingerprint,
-    * construction version) — a ScratchParquet artifact (round 17; was
-    * rebuilt per JVM, ~2 s of every process's warm-up): six consumers
+    * construction version) — a ScratchParquet artifact: six consumers
     * (degree, pagerank, triangles, jaccard, components, and components'
-    * law harness) read the same ≤|V|² parquet rows, and later JVMs skip
-    * the fact-fact aggregation entirely. The parquet scan leaf gives
-    * the same lineage truncation the old localCheckpoint gave. Keyed on
-    * the lineitem fingerprint so a regenerated fixture evicts and
-    * rebuilds. */
-  private[graft] def tradeEdgesCached(s: SparkSession, d: String): DataFrame = {
-    val fp = Tables.fingerprint(d, "lineitem")
-    edgeCache.getOrElseUpdate(s, s"$d#tradeEdges", fp)(
-      ScratchParquet.ensure(s, "trade_edges", d, fp)(tradeEdges(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+    * law harness) read the same ≤|V|² parquet rows, and later sessions
+    * and JVMs skip the fact-fact aggregation entirely. The parquet scan
+    * leaf truncates lineage and reads a stored schema, so the call
+    * starts no job. Keyed on the lineitem fingerprint so a regenerated
+    * fixture evicts and rebuilds. */
+  private[graft] def tradeEdgesCached(s: SparkSession, d: String): DataFrame =
+    ScratchParquet.ensure(s, "trade_edges", d, Tables.fingerprint(d, "lineitem"))(
+      tradeEdges(s, d))
 
   /** Degree/strength profile per nation: out/in distinct partners and
     * total edge weights — the graph-summary pass run before any

@@ -62,17 +62,16 @@ object LlmText extends QueryGroup {
       .groupBy(col("doc_id"))
       .agg(sort_array(array_distinct(flatten(collect_list(col("gs"))))).as("gs"))
 
-  /** The session-lifetime gram base over the fixture corpus — one
-    * persisted (doc_id, source, pos, gh) table per (session, sf dir,
-    * fixture fingerprint), feeding minhash signature building AND
-    * winnowing AND the n-gram novelty table. 32 bytes/gram, a fraction
-    * of the text it derives from; at 100 TB this is the shingle table
-    * a pipeline checkpoints to the cluster store once per ingest. */
-  private val gramCache = new FingerprintCache
+  /** The gram base over the fixture corpus — one (doc_id, source, pos,
+    * gh) ScratchParquet artifact per (fixture fingerprint, construction
+    * version), read by the n-gram novelty table (the MinHash and
+    * winnowing constructions hash grams inside the row instead). 32
+    * bytes/gram, a fraction of the text it derives from; at 100 TB this
+    * is the shingle table a pipeline writes to the cluster store once
+    * per ingest. */
   private[graft] def gramsCached(s: SparkSession, d: String): DataFrame =
-    gramCache.getOrElseUpdate(s, d, Tables.fingerprint(d, "documents"))(
-      gramsOf(Tables.documents(s, d), Seq("source"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    ScratchParquet.ensure(s, "gram_base", d, Tables.fingerprint(d, "documents"))(
+      gramsOf(Tables.documents(s, d), Seq("source")))
 
   /** lowercase, strip non-alnum, collapse whitespace
     * ([[graft.api.GraftOps.normalizeText]]: ASCII rows take the
@@ -337,20 +336,14 @@ object LlmText extends QueryGroup {
     * per-doc counts within [n_windows/W, n_windows], every window is
     * covered. */
   /** One persisted fingerprint table per (fixture fingerprint,
-    * construction version) — a ScratchParquet artifact (round 17; was
-    * session-cached and rebuilt per JVM, ~2 s of every process's
-    * warm-up): three rungs (text_winnowing, dedup_winnowing,
-    * dedup_eval_winnowing) consume the same fingerprints, and later
-    * JVMs read the finished 24-byte rows instead of re-running
-    * [[winnowFpsOf]] over the corpus. */
-  private val winnowCache = new FingerprintCache
-  private[graft] def winnowFps(s: SparkSession, d: String): DataFrame = {
-    val fp = Tables.fingerprint(d, "documents")
-    winnowCache.getOrElseUpdate(s, s"$d#wfp", fp)(
-      ScratchParquet.ensure(s, "winnow_fps", d, fp)(
-        winnowFpsOf(Tables.documents(s, d).select(col("doc_id"), col("text"))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+    * construction version) — a ScratchParquet artifact: three rungs
+    * (text_winnowing, dedup_winnowing, dedup_eval_winnowing) consume the
+    * same fingerprints, and later sessions and JVMs read the finished
+    * 24-byte rows instead of re-running [[winnowFpsOf]] over the
+    * corpus. */
+  private[graft] def winnowFps(s: SparkSession, d: String): DataFrame =
+    ScratchParquet.ensure(s, "winnow_fps", d, Tables.fingerprint(d, "documents"))(
+      winnowFpsOf(Tables.documents(s, d).select(col("doc_id"), col("text"))))
 
   /** The fingerprint construction over any (doc_id, text) frame —
     * the one construction behind text_winnowing, both incremental
@@ -801,40 +794,6 @@ object LlmText extends QueryGroup {
   private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
     minhashPairsOf(gramSetsOf(Tables.documents(s, d).select(col("doc_id"), col("text"))), 0.8)
 
-  /** One persisted DataFrame per derived pair graph / edge list per
-    * (session, sf dir, fixture fingerprint): the label-propagation loop
-    * references the edge set once per unrolled iteration, and without
-    * caching each reference would re-derive the whole minhash pipeline
-    * (the round-1 reuse-pessimization lesson). Key suffixes: `#mhp`
-    * minhash pairs, `#shp` simhash pairs, `#multi` = the tagged union
-    * cluster edge list (the one [[multiLabelProp]] input). */
-  private val pairCache =
-    new FingerprintCache
-
-  /** One CONVERGED label/cluster result per (session, sf dir, fixture
-    * fingerprint) — the pairCache convention applied one level up. Each
-    * clustering query (dedup_clusters / _all / _multimodal) used to
-    * re-run its own 4-round unrolled label propagation over its (already
-    * cached) edge graph on every evaluation, making the three of them
-    * the suite's slowest steady-state queries — and even after per-query
-    * memoization they were three separate propagation passes over graphs
-    * that share most of their edges (~22 s combined at sf0.1). Round 15
-    * consolidated them: ONE [[multiLabelProp]] pass over the tagged
-    * union graph under key `#multi#lab`; per-slice cluster aggregates
-    * under `#{mh,all,mm}#clusters`. The converged labels are
-    * localCheckpoint()ed — materialized once AND lineage-truncated to a
-    * LogicalRDD — because persist() alone is not enough: every sink
-    * action wraps the DataFrame in a fresh QueryExecution, so the
-    * 4-round unrolled tree was re-ANALYZED per evaluation, and for the
-    * three-detector multimodal graph that driver-side planning cost
-    * ~2 s/eval, dwarfing the actual cached read. After truncation each
-    * evaluation plans a 4-node tree. (On a real cluster:
-    * checkpoint(reliable) instead, the labelPropUntilFixed note.)
-    * Labels are a pure function of the edge graph, so the cache shares
-    * the graph's staleness key. */
-  private val labelCache =
-    new FingerprintCache
-
   /** Combined staleness key for everything derived from the tagged
     * union pair graph: the graph folds in the embedding-cosine detector,
     * so even the minhash-only label slice is rebuilt (identically) when
@@ -906,31 +865,29 @@ object LlmText extends QueryGroup {
     lab
   }
 
-  /** The one converged multi-label table per (session, sf, fixtures):
-    * 4 unrolled [[multiLabelProp]] rounds over the cached tagged union
-    * graph, localCheckpoint()ed (materialize + lineage-truncate — see
-    * the labelCache note). Every dedup_clusters* rung and the survivor
-    * policy query project their slice out of THIS table. */
+  /** The one converged multi-label table per (fixture fingerprints,
+    * construction version): 4 unrolled [[multiLabelProp]] rounds over
+    * the tagged union graph, written as a ScratchParquet artifact. Every
+    * dedup_clusters* rung and the survivor policy query project their
+    * slice out of THIS table. The parquet scan leaf matters beyond
+    * reuse: every sink action wraps its DataFrame in a fresh
+    * QueryExecution, so an in-memory copy of the unrolled tree was
+    * re-analyzed per evaluation (~2 s/eval for the multimodal graph),
+    * where the scan plans a 4-node tree. The 4-round propagation over
+    * the union graph (15.9 s at sf0.1) runs once per fixture generation,
+    * not once per process. Labels are a pure function of the edge
+    * graph, so they share the graph's staleness key. The edge list is
+    * checkpointed inside the build because the rounds' copies of its
+    * aggregate differ in pushed-down filters, so exchange reuse does
+    * not share them (measured at sf0.01: 2.3 s inline vs 1.6 s). */
   private def multiLabelsCached(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrElseUpdate(s, s"$d#multi#lab", unionFp(d))(
-      // Round 17: converged labels are a ScratchParquet artifact. The
-      // parquet read gives the SAME lineage truncation the old
-      // localCheckpoint gave (a leaf scan node — each consumer plans a
-      // 4-node tree), plus cross-JVM reuse: the 4-round propagation over
-      // the union graph (15.9 s at sf0.1) runs once per fixture
-      // generation, not once per process.
-      ScratchParquet.ensure(s, "multilab", d, unionFp(d))(
-        multiLabelProp(
-          pairCache.getOrElseUpdate(s, s"$d#multi", unionFp(d))(
-            taggedUnionEdges(s, d)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-          iters = 4))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    ScratchParquet.ensure(s, "multilab", d, unionFp(d))(
+      multiLabelProp(taggedUnionEdges(s, d).localCheckpoint(eager = false), iters = 4))
 
   /** Per-subgraph node labels, projected from the multi-label table:
     * `mh` = minhash graph (lm non-null), `all` = minhash ∪ simhash
     * (la non-null), `mm` = the full cross-modal union. Cheap select
-    * over a checkpointed LogicalRDD — label prop itself never re-runs
+    * over the label artifact's scan — label prop itself never re-runs
     * per consumer. */
   private def unionNodeLabels(s: SparkSession, d: String, which: String): DataFrame = {
     val c = multiLabelsCached(s, d)
@@ -941,41 +898,26 @@ object LlmText extends QueryGroup {
     }
   }
 
-  /** Survivor/size clusters for one subgraph slice, final aggregate
-    * memoized per (session, sf, fixtures, slice). */
+  /** Survivor/size clusters for one subgraph slice. */
   private def unionClusters(s: SparkSession, d: String, which: String): DataFrame =
-    labelCache.getOrElseUpdate(s, s"$d#$which#clusters", unionFp(d))(
-      unionNodeLabels(s, d, which)
-        .groupBy(col("lab").as("survivor"))
-        .agg(count(lit(1)).as("n_members"))
-        .orderBy(col("survivor")))
-
-  /** Test hook (CacheSpec): live fingerprints for one pair-cache name. */
-  private[graft] def pairCacheFingerprints(s: SparkSession, name: String): Set[String] =
-    pairCache.fingerprintsFor(s, name)
+    unionNodeLabels(s, d, which)
+      .groupBy(col("lab").as("survivor"))
+      .agg(count(lit(1)).as("n_members"))
+      .orderBy(col("survivor"))
 
   /** THE minhash pair graph — every consumer (pair listing, single- and
-    * cross-source clustering) reads this one persisted lineage, so per
-    * (session, sf, fingerprint) the banding + verify pipeline runs once,
-    * not once per consumer. Round 17: the graph itself is a
-    * [[ScratchParquet]] artifact — built once per (fixture fingerprint,
-    * construction version) and re-read as a parquet scan by every later
-    * JVM, the ensureWinnowIndex posture applied to the heaviest session
-    * builds (6.6 s rebuilt vs a sub-100 ms warm read). */
-  private[graft] def minhashPairsCached(s: SparkSession, d: String): DataFrame = {
-    val fp = Tables.fingerprint(d, "documents")
-    pairCache.getOrElseUpdate(s, s"$d#mhp", fp)(
-      ScratchParquet.ensure(s, "mhp_pairs", d, fp)(minhashPairs(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+    * cross-source clustering) reads this one [[ScratchParquet]] artifact,
+    * so per (fixture fingerprint, construction version) the banding +
+    * verify pipeline runs once, not once per consumer, session or JVM
+    * (6.6 s rebuilt vs a sub-100 ms warm read). */
+  private[graft] def minhashPairsCached(s: SparkSession, d: String): DataFrame =
+    ScratchParquet.ensure(s, "mhp_pairs", d, Tables.fingerprint(d, "documents"))(
+      minhashPairs(s, d))
 
   /** THE simhash pair graph (see [[minhashPairsCached]]). */
-  private[graft] def simhashPairsCached(s: SparkSession, d: String): DataFrame = {
-    val fp = Tables.fingerprint(d, "documents")
-    pairCache.getOrElseUpdate(s, s"$d#shp", fp)(
-      ScratchParquet.ensure(s, "shp_pairs", d, fp)(simhashPairs(s, d))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  private[graft] def simhashPairsCached(s: SparkSession, d: String): DataFrame =
+    ScratchParquet.ensure(s, "shp_pairs", d, Tables.fingerprint(d, "documents"))(
+      simhashPairs(s, d))
 
   private val dedupNearMinhash: QFn = (s, d) =>
     minhashPairsCached(s, d)
@@ -1174,7 +1116,7 @@ object LlmText extends QueryGroup {
     * slice (doc_id % 5 ≠ 0), hive-partitioned by band — the layout an
     * incremental ingest keeps between runs so each new batch is deduped
     * against the corpus WITHOUT re-reading or re-shingling corpus text.
-    * Fingerprint-keyed like the ANN index; built once per session+sf. */
+    * Fingerprint-keyed like the ANN index; built once per fixture generation. */
   private[graft] def ensureMinhashIndex(s: SparkSession, d: String): String =
     // Construction-version salt via ScratchParquet — see
     // [[ensureWinnowIndex]].
@@ -1758,40 +1700,29 @@ object LlmText extends QueryGroup {
     (rows.toSeq, cur)
   }
 
-  /** Session-lifetime memo of the trained merge list per (session,
-    * fixture fingerprint) — the model is driver-held KB-sized metadata
-    * (the k-means centroid posture), so train ONCE per fixture and let
-    * both the declared training rung (text_bpe) and the encode rung
-    * (text_bpe_apply) read the same fit; retraining per consumer would
-    * double the one iterative-trainer cost in the bench. The final
-    * corpus checkpoint is released immediately — only the collected
-    * merge rows outlive training. */
-  private val bpeFitCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String),
-      Seq[(Long, String, String, Long, Long)]]()
+  /** The trained merge list per (fixture fingerprint, construction
+    * version), a ScratchParquet artifact: the model is KB-sized
+    * metadata (the k-means centroid posture), so train ONCE per fixture
+    * and let both the declared training rung (text_bpe) and the encode
+    * rung (text_bpe_apply) read the same fit; retraining per consumer
+    * would double the one iterative-trainer cost in the bench. The
+    * final corpus checkpoint is released right after training — only
+    * the ≤ 6 merge rows are written, and each call collects them. */
   private[graft] def bpeFit(s: SparkSession, d: String)
       : Seq[(Long, String, String, Long, Long)] = {
-    val fp = Tables.fingerprint(d, "documents")
-    // the FingerprintCache round-9 eviction policy, replicated for this
-    // driver-held (non-DataFrame) memo: a changed fingerprint drops the
-    // superseded fit for the SAME fixture dir (the name slot) instead of
-    // accumulating one entry per regeneration — and only that slot, so
-    // alternating scale factors in one session never thrash each other
-    bpeFitCache.keysIterator
-      .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-      .foreach(bpeFitCache.remove)
-    bpeFitCache.getOrElseUpdate((s, d, fp), {
+    val fit = ScratchParquet.ensure(s, "bpe_fit", d, Tables.fingerprint(d, "documents")) {
       val (rows, fin) = bpeTrain(
         Tables.documents(s, d)
           .select(col("doc_id"), split(col("text"), " ").as("tk")), 6)
       fin.unpersist()
-      rows
-    })
+      val sp = s
+      import sp.implicits._
+      rows.toDF("step", "merge_x", "merge_y", "pair_count", "tokens_after")
+    }
+    fit.collect().toSeq.map(r =>
+      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
+      .sortBy(_._1)
   }
-
-  /** Test hook (CacheSpec): live fit fingerprints for one fixture dir. */
-  private[graft] def bpeFitFingerprints(s: SparkSession, d: String): Set[String] =
-    bpeFitCache.keysIterator.collect { case (`s`, `d`, fp) => fp }.toSet
 
   private val textBpe: QFn = (s, d) => {
     val rows = bpeFit(s, d)

@@ -635,14 +635,6 @@ object LlmVector extends QueryGroup {
     * angle in 64-dim) sign-random-projection banding cannot separate
     * true pairs from background, so cell partitioning, not bit-LSH, is
     * the honest bucketing. */
-  private val embPairCache =
-    new FingerprintCache
-
-  /** THE embedding near-dup pair graph (SemDeDup anchor cells + exact
-    * cosine verify > 0.4) — one persisted lineage per (session, sf,
-    * fingerprint), the eb3d12b pair-graph convention applied to the
-    * vector detector; consumers: dedup_embcos and the cross-modal
-    * clustering in LlmText. Returns (ia, ib, cos), ia < ib. */
   /** Probe widths for the hierarchical anchor assignment. Tuned on the
     * sf0.01 fixture by the round-9 recall sweep ([[dedupEvalEmbcos]] is
     * the measuring rung): the round-8 setting (coarse probe 3, anchor
@@ -657,21 +649,19 @@ object LlmVector extends QueryGroup {
   private[graft] val AnchorMapWidth = 3   // coarse cells each anchor is reachable from
   private[graft] val CellsPerVector = 4   // anchor cells a vector is assigned to
 
-  private[graft] def embcosPairsCached(s: SparkSession, d: String): DataFrame = {
-    // Round 17: ScratchParquet artifact — the anchor-cell fit + probe +
-    // exact verify (12.0 s at sf0.1, the heaviest session build) runs
-    // once per (fixture fingerprint, construction version); later JVMs
-    // read the finished (ia, ib, cos) parquet.
-    val fp = Tables.fingerprint(d, "embeddings")
-    embPairCache.getOrElseUpdate(s, s"$d#emb", fp)(
-      ScratchParquet.ensure(s, "emb_pairs", d, fp)(
-        embcosPairsBuild(s, d, ProbeCoarseCells, AnchorMapWidth, CellsPerVector))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  /** THE embedding near-dup pair graph (SemDeDup anchor cells + exact
+    * cosine verify > 0.4), a ScratchParquet artifact: the fit, probe and
+    * exact verify (12.0 s at sf0.1, the heaviest build) run once per
+    * (fixture fingerprint, construction version). Consumers:
+    * dedup_embcos and the cross-modal clustering in LlmText. Returns
+    * (ia, ib, cos), ia < ib. */
+  private[graft] def embcosPairsCached(s: SparkSession, d: String): DataFrame =
+    ScratchParquet.ensure(s, "emb_pairs", d, Tables.fingerprint(d, "embeddings"))(
+      embcosPairsBuild(s, d, ProbeCoarseCells, AnchorMapWidth, CellsPerVector))
 
   /** The un-cached pair construction, probe widths as parameters so the
     * recall sweep (VectorSpec) can measure alternative settings without
-    * touching the session cache. */
+    * touching the pair-graph artifact. */
   private[graft] def embcosPairsBuild(s: SparkSession, d: String,
       probeCoarse: Int, mapWidth: Int, cellsPerVec: Int): DataFrame = {
       graft.functions.GraftFunctions.ensureRegistered(s)
@@ -884,16 +874,14 @@ object LlmVector extends QueryGroup {
     * not m sequential fits); driver materialization is the m·k×16
     * codebook matrix per iteration (the kmeansFit posture). Returns
     * (vec_id, j, vj, cid, d2). */
-  /** One persisted PQ fit per (session, sf, fingerprint) — embed_pq and
-    * sim_knn_pq both read it, so the iterative fit runs once per
-    * evaluation context (the pairCache convention). */
-  private val pqCache =
-    new FingerprintCache
-
+  /** One PQ fit per (fixture fingerprint, construction version), a
+    * ScratchParquet artifact — embed_pq, sim_knn_pq and sim_knn_ivfpq
+    * all read it, so the iterative fit (and its per-iteration centroid
+    * collects) runs once per fixture, not once per consumer or
+    * session. */
   private[graft] def pqFit(s: SparkSession, d: String): DataFrame =
-    pqCache.getOrElseUpdate(s, d, graft.Tables.fingerprint(d, "embeddings"))(
-      pqFitUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    ScratchParquet.ensure(s, "pq_fit", d, Tables.fingerprint(d, "embeddings"))(
+      pqFitUncached(s, d))
 
   private def pqFitUncached(s: SparkSession, d: String): DataFrame = {
     val m = 4; val sub = 16; val k = 16; val iters = 2
@@ -1354,19 +1342,16 @@ object LlmVector extends QueryGroup {
     * signature — shared by the cross-doc frame dedup and the
     * scene-change detector (one construction, two consumers, both
     * oracles mirror it CTE-for-CTE). */
-  /** The corpus frame-sig table has THREE consumers per session
-    * (frame dedup, scene detection, and their shared plan audits) and
-    * is bounded — one row per 64-byte frame, int64 sig, never char-
-    * sized — so materialize it once per fixture fingerprint (§7.4's
+  /** The corpus frame-sig table has THREE consumers (frame dedup,
+    * scene detection, and their shared plan audits) and is bounded —
+    * one row per 64-byte frame, int64 sig, never char-sized — so it is
+    * a ScratchParquet artifact per fixture fingerprint (§7.4's
     * multi-consumer-lineage recipe: re-deriving from the char explode
     * re-scans the corpus per consumer, bench-visible at ~1.7 s per
     * re-derivation at sf0.1). */
-  private[operators] val frameSigCache: FingerprintCache = new FingerprintCache
   private def frameSigs(s: SparkSession, d: String): DataFrame =
-    frameSigCache.getOrElseUpdate(s, s"$d#framesigs",
-      Tables.fingerprint(d, "documents"))(
-      frameSigs(Tables.documents(s, d).select(col("doc_id"), col("text")))
-        .localCheckpoint())
+    ScratchParquet.ensure(s, "frame_sigs", d, Tables.fingerprint(d, "documents"))(
+      frameSigs(Tables.documents(s, d).select(col("doc_id"), col("text"))))
 
   /** The same construction over any (doc_id, text) payload set —
     * shared with pipeline_multimodal_e2e's scene-sampling stage

@@ -277,6 +277,30 @@ class ApiSpec extends AnyFunSuite {
     assert(out.count() == v.count())
   }
 
+  test("warm scratch artifacts start no Spark job at call time in a new session") {
+    // publish the artifacts first; a new session then shares only the
+    // scratch dir, so any per-session memo in front of an artifact would
+    // miss and rebuild (the PQ fit's centroid collects, an eager
+    // frame-sig checkpoint) at call time
+    operators.LlmVector.pqFit(spark, sf)
+    operators.Graph.tradeEdgesCached(spark, sf)
+    SparkEntry.queries("multimodal_frame_dedup")(spark, sf)
+    val fresh = spark.newSession()
+    val (pq, pqJob) = jobAtCall("graft-pqfit") { operators.LlmVector.pqFit(fresh, sf) }
+    assert(!pqJob, "pqFit ran a job at call time")
+    val (fd, fdJob) = jobAtCall("graft-framededup") {
+      SparkEntry.queries("multimodal_frame_dedup")(fresh, sf)
+    }
+    assert(!fdJob, "multimodal_frame_dedup ran a job at call time")
+    val (te, teJob) = jobAtCall("graft-tradeedges") {
+      operators.Graph.tradeEdgesCached(fresh, sf)
+    }
+    assert(!teJob, "tradeEdgesCached ran a job at call time")
+    assert(pq.count() == operators.LlmVector.pqFit(spark, sf).count())
+    assert(rows(fd) == rows(SparkEntry.queries("multimodal_frame_dedup")(spark, sf)))
+    assert(rows(te) == rows(operators.Graph.tradeEdges(spark, sf)))
+  }
+
   test("gapFillForward matches events_gap_fill") {
     val api = GraftOps.gapFillForward(
         Tables.events(spark, sf).filter(col("user_id") < 10L)

@@ -1,53 +1,23 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** The round-9 fingerprint-cache eviction policy: a lookup that misses
-  * because the fixture fingerprint changed must EVICT the superseded
-  * (session, name) entry — unpersisting its blocks — instead of
-  * accumulating stale persisted state for the life of the JVM (the
-  * driver regenerated a fixture mid-session in round 7; at 100 TB
-  * artifact sizes a leaked pair graph pins executor storage). */
+/** The scratch-artifact layer, the one memo for derived tables: a
+  * lookup whose fixture fingerprint changed must rebuild the artifact
+  * AND delete the superseded generation, instead of serving stale rows
+  * or accumulating one generation per regeneration (the driver
+  * regenerated a fixture mid-session in round 7; at 100 TB artifact
+  * sizes a leaked pair graph pins the scratch store). */
 class CacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("FingerprintCache evicts persisted entries on fingerprint change") {
-    val c = new operators.FingerprintCache
-    val df1 = spark.range(100).toDF("v").persist(StorageLevel.MEMORY_AND_DISK)
-    df1.count()
-    assert(c.getOrElseUpdate(spark, "k", "fp1")(df1) eq df1)
-    assert(df1.storageLevel != StorageLevel.NONE)
-    val df2 = spark.range(200).toDF("v").persist(StorageLevel.MEMORY_AND_DISK)
-    assert(c.getOrElseUpdate(spark, "k", "fp2")(df2) eq df2)
-    assert(c.fingerprintsFor(spark, "k") == Set("fp2"),
-      "stale fingerprint must be dropped from the map")
-    assert(df1.storageLevel == StorageLevel.NONE,
-      "superseded entry's persisted blocks must be unpersisted")
-    // an unrelated name is untouched
-    val other = spark.range(5).toDF("v").persist(StorageLevel.MEMORY_AND_DISK)
-    c.getOrElseUpdate(spark, "other", "fpX")(other)
-    c.getOrElseUpdate(spark, "k", "fp2")(fail("cached — builder must not run"))
-    assert(c.fingerprintsFor(spark, "other") == Set("fpX"))
-    df2.unpersist(); other.unpersist()
-  }
-
-  test("FingerprintCache frees localCheckpoint blocks too") {
-    val c = new operators.FingerprintCache
-    val df1 = spark.range(50).toDF("v").localCheckpoint()
-    val rddIds = df1.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }
-    assert(rddIds.nonEmpty, "localCheckpoint must leave a LogicalRDD leaf")
-    assert(rddIds.forall(spark.sparkContext.getPersistentRDDs.contains),
-      "checkpoint blocks should be persistent before eviction")
-    c.getOrElseUpdate(spark, "lc", "fp1")(df1)
-    val df2 = spark.range(60).toDF("v").localCheckpoint()
-    c.getOrElseUpdate(spark, "lc", "fp2")(df2)
-    assert(rddIds.forall(id => !spark.sparkContext.getPersistentRDDs.contains(id)),
-      "superseded localCheckpoint RDD must be unpersisted")
-  }
+  /** Published generation dirs of artifact `name` for fixture dir `d`. */
+  private def generations(name: String, d: String): Set[String] =
+    Option(new java.io.File(Tables.scratchDir).listFiles())
+      .getOrElse(Array.empty).map(_.getName)
+      .filter(_.startsWith(s"$name=${new java.io.File(d).getName}="))
+      .toSet
 
   test("regenerated fixture evicts the stale minhash pair graph") {
     val base = s"${Tables.scratchDir}/cache_spec_fixture"
@@ -55,9 +25,9 @@ class CacheSpec extends AnyFunSuite {
       val sp = spark
       import sp.implicits._
       val tmp = s"$base/_tmp"
-      // source column: the shared gram base (LlmText.gramsCached)
-      // carries it for the novelty consumer, so the synthetic fixture
-      // needs the real table's shape
+      // source column: the gram base (LlmText.gramsCached) carries it
+      // for the novelty consumer, so the synthetic fixture keeps the
+      // real table's shape
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t, s"src${i % 3}") }
         .toDF("doc_id", "text", "source").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
@@ -73,30 +43,25 @@ class CacheSpec extends AnyFunSuite {
     writeDocs(Seq.fill(12)("alpha beta gamma delta epsilon zeta eta theta"))
     val p1 = operators.LlmText.minhashPairsCached(spark, base)
     assert(p1.count() == 12L * 11L / 2L)
-    assert(p1.storageLevel != StorageLevel.NONE)
-    val fps1 = operators.LlmText.pairCacheFingerprints(spark, s"$base#mhp")
-    assert(fps1.size == 1)
+    val gens1 = generations("mhp_pairs", base)
+    assert(gens1.size == 1, s"one published generation expected: $gens1")
     // generation 2, SAME path: pairwise-disjoint token sets → zero pairs.
-    // Both generations share one canonicalized plan (same parquet file),
-    // so without eviction p2.persist() would no-op against the stale
-    // entry ("already cached") and serve generation-1 blocks — the
-    // content assertion below is the actual staleness gate, storage
-    // levels can't see it.
+    // The content assertion is the actual staleness gate; the
+    // generation check pins that the superseded artifact is deleted.
     writeDocs(Seq.tabulate(15)(i =>
       (0 to 7).map(j => s"tok_${i}_$j").mkString(" ")))
     val p2 = operators.LlmText.minhashPairsCached(spark, base)
-    val fps2 = operators.LlmText.pairCacheFingerprints(spark, s"$base#mhp")
-    assert(fps2.size == 1, s"stale entry survived: $fps2")
-    assert(fps2 != fps1, "regenerated fixture must key a fresh entry")
     assert(p2.count() == 0L,
-      "pair graph served stale generation-1 cached blocks")
-    assert(p2.storageLevel != StorageLevel.NONE)
+      "pair graph served the stale generation-1 artifact")
+    val gens2 = generations("mhp_pairs", base)
+    assert(gens2.size == 1, s"stale generation survived: $gens2")
+    assert(gens2 != gens1, "regenerated fixture must publish a fresh generation")
   }
 
   test("regenerated fixture evicts the stale BPE fit (driver-held memo)") {
-    // the bpeFit memo holds a driver-side Seq, not a DataFrame, but the
-    // round-9 eviction policy applies the same: a changed fingerprint
-    // must drop the superseded entry, not accumulate one per generation
+    // the merge list is collected to the driver, but its artifact
+    // follows the same rule: a changed fingerprint retrains and drops
+    // the superseded generation, never one per regeneration
     val base = s"${Tables.scratchDir}/cache_spec_bpe"
     def writeDocs(texts: Seq[String]): Unit = {
       val sp = spark
@@ -111,28 +76,56 @@ class CacheSpec extends AnyFunSuite {
       dst.delete()
       java.nio.file.Files.move(part.toPath, dst.toPath)
     }
+    // another fixture dir's fit, published before this test's rebuilds
+    operators.LlmText.bpeFit(spark, TestSpark.sf)
+    val otherGens = generations("bpe_fit", TestSpark.sf)
+    assert(otherGens.size == 1)
     writeDocs(Seq.fill(8)("a b a b a b c d a b"))
     val fit1 = operators.LlmText.bpeFit(spark, base)
     assert(fit1.nonEmpty)
     assert(fit1.exists(r => r._2 == "a" && r._3 == "b"))
-    val fps1 = operators.LlmText.bpeFitFingerprints(spark, base)
-    assert(fps1.size == 1)
+    val gens1 = generations("bpe_fit", base)
+    assert(gens1.size == 1, s"one published generation expected: $gens1")
     writeDocs(Seq.fill(8)("x y x y x y z w x y"))
     val fit2 = operators.LlmText.bpeFit(spark, base)
-    val fps2 = operators.LlmText.bpeFitFingerprints(spark, base)
     assert(fit2.exists(r => r._2 == "x" && r._3 == "y"),
       "fit must reflect the regenerated corpus, not the stale one")
-    assert(fps2.size == 1, s"stale fit entry survived: $fps2")
-    assert(fps2 != fps1, "regenerated fixture must key a fresh entry")
-    // a DIFFERENT fixture dir's slot is untouched by this eviction
-    // (the keying regression the dir slot exists to prevent) — the
-    // test-SF fit, if the suite already built one, must still be live
-    val otherFps = operators.LlmText.bpeFitFingerprints(spark, TestSpark.sf)
-    operators.LlmText.bpeFit(spark, TestSpark.sf)
-    assert(operators.LlmText.bpeFitFingerprints(spark, TestSpark.sf).size == 1)
-    if (otherFps.nonEmpty)
-      assert(operators.LlmText.bpeFitFingerprints(spark, TestSpark.sf) == otherFps,
-        "evicting one fixture's fit must not thrash another fixture's slot")
+    val gens2 = generations("bpe_fit", base)
+    assert(gens2.size == 1, s"stale fit generation survived: $gens2")
+    assert(gens2 != gens1, "regenerated fixture must publish a fresh generation")
+    // a DIFFERENT fixture dir's generation is untouched by these
+    // evictions (the keying regression the dir segment exists to prevent)
+    assert(generations("bpe_fit", TestSpark.sf) == otherGens,
+      "one fixture's fit must not evict another fixture's artifact")
+  }
+
+  test("derived tables leave no session copy in executor storage") {
+    // a memo in front of an artifact (persist, localCheckpoint) pins a
+    // cached relation or a persistent RDD for the life of the JVM; a
+    // warm artifact's scan pins nothing
+    val sf = TestSpark.sf
+    val reads: Seq[(String, SparkSession => DataFrame)] = Seq(
+      "trade_edges" -> (s => operators.Graph.tradeEdgesCached(s, sf)),
+      "gram_base" -> (s => operators.LlmText.gramsCached(s, sf)),
+      "winnow_fps" -> (s => operators.LlmText.winnowFps(s, sf)),
+      "mhp_pairs" -> (s => operators.LlmText.minhashPairsCached(s, sf)),
+      "shp_pairs" -> (s => operators.LlmText.simhashPairsCached(s, sf)),
+      "emb_pairs" -> (s => operators.LlmVector.embcosPairsCached(s, sf)),
+      "pq_fit" -> (s => operators.LlmVector.pqFit(s, sf)),
+      "multilab" -> (s => SparkEntry.queries("dedup_clusters_multimodal")(s, sf)),
+      "frame_sigs" -> (s => SparkEntry.queries("multimodal_frame_dedup")(s, sf)))
+    reads.foreach { case (_, read) => read(spark).count() } // publish
+    val fresh = spark.newSession()
+    reads.foreach { case (name, read) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val df = read(fresh)
+      df.count()
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(pinned.isEmpty, s"$name left persistent RDDs $pinned")
+      val cached = df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }
+      assert(cached.isEmpty, s"$name reads a cached relation")
+    }
   }
 
   test("ScratchParquet: build-once, warm read, version/fp invalidation") {
