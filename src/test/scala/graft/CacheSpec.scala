@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The scratch-artifact layer, the one memo for derived tables: a
   * lookup whose fixture fingerprint changed must rebuild the artifact
   * AND delete the superseded generation, instead of serving stale rows
-  * or accumulating one generation per regeneration (the driver
-  * regenerated a fixture mid-session in round 7; at 100 TB artifact
-  * sizes a leaked pair graph pins the scratch store). */
+  * or accumulating one generation per regeneration (fixtures do get
+  * regenerated mid-session; at 100 TB artifact sizes a leaked pair
+  * graph pins the scratch store). */
 class CacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
