@@ -677,6 +677,13 @@ object GraftOps {
           + lit(0.0)).as("ks_stat"))
   }
 
+  /** Exact, order-free double sum of the SQL expression `e`: each row
+    * contributes ⌊e·10⁶ + ½⌋ as int64 micros, so any partitioning sums
+    * the same integers, and the total is divided back in decimal(26,0). */
+  private[graft] def microSum(e: String): Column =
+    (sum(expr(s"CAST(floor(($e) * 1e6 + 0.5) AS BIGINT)"))
+      .cast(DecimalType(26, 0)) / lit(1000000)).cast(DoubleType)
+
   /** Welch two-sample t-test — agg_ttest's construction (the query
     * calls this with click vs purchase values; the A/B / drift
     * significance screen): per-class Σx and Σx² accumulate int64 micros
@@ -688,9 +695,6 @@ object GraftOps {
     * raises. */
   def welchT(df: DataFrame, group: Column, value: Column,
              a: String, b: String): DataFrame = {
-    def microSum(e: String) =
-      (sum(expr(s"CAST(floor(($e) * 1e6 + 0.5) AS BIGINT)"))
-        .cast(DecimalType(26, 0)) / lit(1000000)).cast(DoubleType)
     val m = df.filter(group.isin(a, b))
       .select(group.as("g"), value.cast(DoubleType).as("x"))
       .groupBy(col("g"))

@@ -118,71 +118,47 @@ object LlmVector extends QueryGroup {
         .write.mode("overwrite").parquet(s"$tmp/centroids")
     }
 
+  /** The ANN upsert delta: a new batch (synthesized deterministically —
+    * the first 50 corpus vectors, dim 0 shifted +0.25, re-keyed
+    * +1_000_000) assigned to its nearest EXISTING persisted centroid via
+    * a broadcast of the bounded k×d fit, written as a delta cell store.
+    * A sibling artifact of the index, keyed on the same embeddings
+    * fingerprint: the batch and the deterministic fit are both pure
+    * functions of that fixture. */
+  private[graft] def ensureAnnDelta(s: SparkSession, d: String): String =
+    ScratchParquet.ensureDir("ann_delta", d,
+        graft.Tables.fingerprint(d, "embeddings")) { tmp =>
+      val batch = Tables.embeddings(s, d).filter(col("vec_id") < 50L)
+        .select((col("vec_id") + lit(1000000L)).as("vec_id"),
+          expr("transform(embedding, (x, i) -> IF(i = 0, CAST(x + 0.25 AS FLOAT), x))")
+            .as("embedding"))
+      val cents = s.read.parquet(s"${ensureAnnIndex(s, d)}/centroids")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id")).orderBy(col("c").desc, col("cell"))
+      batch.crossJoin(broadcast(cents))
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          GraftOps.cosineSim(col("centroid"), col("embedding")).as("c"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("cell"), col("vec_id"), col("embedding"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/cells")
+    }
+
   /** Incremental ANN index maintenance — the dedup_incremental posture
     * applied to the vector index (the production ingest shape: vectors
-    * keep arriving, the index must absorb them WITHOUT a refit): a new
-    * batch (synthesized deterministically — the first 50 corpus
-    * vectors, dim 0 shifted +0.25, re-keyed +1_000_000) is assigned to
-    * its nearest EXISTING persisted centroid via a broadcast of the
-    * bounded k×d fit, and appended as a delta cell store beside the
-    * base cells. Cost scales with the batch; the corpus is never
-    * re-read. Declared output: per-cell base/delta posting counts
-    * (full outer — an empty base or delta cell must still show).
+    * keep arriving, the index must absorb them WITHOUT a refit): the
+    * [[ensureAnnDelta]] batch lands beside the base cells. Cost scales
+    * with the batch; the corpus is never re-read. Declared output:
+    * per-cell base/delta posting counts (full outer — an empty base or
+    * delta cell must still show).
     * No oracle (depends on the iterative k-means fit); VectorSpec
     * laws: an upserted vector is its own exact top-1 in the combined
     * base∪delta index, and delta postings conserve the batch size. */
   private val annUpsert: QFn = (s, d) => {
-    val path = ensureAnnIndex(s, d)
-    val batch = Tables.embeddings(s, d).filter(col("vec_id") < 50L)
-      .select((col("vec_id") + lit(1000000L)).as("vec_id"),
-        expr("transform(embedding, (x, i) -> IF(i = 0, CAST(x + 0.25 AS FLOAT), x))")
-          .as("embedding"))
-    val cents = s.read.parquet(s"$path/centroids")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("c").desc, col("cell"))
-    val assigned = batch.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        GraftOps.cosineSim(col("centroid"), col("embedding")).as("c"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("cell"), col("vec_id"), col("embedding"))
-    // Idempotent, atomic delta publish: the batch is a pure function of
-    // the embeddings fixture and `path` already carries that fixture's
-    // fingerprint, so a completed delta (_DONE present) is simply
-    // reused; otherwise the delta is built in a scratch dir and RENAMED
-    // into place — a concurrent reader of the combined base∪delta index
-    // sees a complete directory or none, never a half-written overwrite
-    // (round-6 advice). Spark's scan ignores underscore-prefixed files,
-    // so the marker rides inside the directory it certifies.
-    // The tmp dir is PROCESS-UNIQUE and the publish runs under the
-    // SAME cross-process lock discipline as every other round-18
-    // artifact: a fixed tmp path would let two JVMs racing this build
-    // interleave writes into one directory and seal the mix with
-    // _DONE, and an unlocked delete-then-rename would let the loser
-    // delete the winner's just-published complete delta while a reader
-    // holds it. Inside the lock the _DONE re-check makes the stale-dir
-    // delete reachable only for true crash debris.
-    val deltaDir = new java.io.File(s"$path/delta_cells")
-    ScratchParquet.onceLocked(new java.io.File(path).getName + "+delta")(
-        !new java.io.File(deltaDir, "_DONE").exists()) {
-      // crash debris first (safe under the lock — any builder of this
-      // delta holds it): per-attempt-unique tmps nothing ever reuses
-      Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(".delta_cells_tmp_"))
-        .foreach(Tables.deleteRecursively)
-      val tmp = new java.io.File(
-        s"$path/.delta_cells_tmp_${ProcessHandle.current().pid()}_" +
-          java.util.UUID.randomUUID().toString.take(8))
-      assigned.write.mode("overwrite").partitionBy("cell")
-        .parquet(tmp.getPath)
-      new java.io.File(tmp, "_DONE").createNewFile()
-      if (deltaDir.exists()) Tables.deleteRecursively(deltaDir) // crash-stale partial dir
-      ScratchParquet.publishTmp(tmp, deltaDir)
-    }
-    val base = s.read.parquet(s"$path/cells")
+    val base = s.read.parquet(s"${ensureAnnIndex(s, d)}/cells")
       .groupBy(col("cell").cast(IntegerType).as("cell"))
       .agg(count(lit(1)).as("n_base"))
-    val delta = s.read.parquet(s"$path/delta_cells")
+    val delta = s.read.parquet(s"${ensureAnnDelta(s, d)}/cells")
       .groupBy(col("cell").cast(IntegerType).as("cell"))
       .agg(count(lit(1)).as("n_new"))
     base.join(delta, Seq("cell"), "full_outer")

@@ -139,7 +139,7 @@ object Scans extends QueryGroup {
     s.read.parquet(out)
       .groupBy((col("l_orderkey") % 10L).as("bucket"))
       .agg(count(lit(1)).as("n"),
-           round((sum(expr("CAST(floor((l_extendedprice) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
+           round(GraftOps.microSum("l_extendedprice"), 4)
              .as("sum_price"))
       .orderBy(col("bucket"))
   }
@@ -230,7 +230,7 @@ object Scans extends QueryGroup {
               col("l_shipdate") <  lit("1996-01-01").cast(TimestampNTZType))
       .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("month"))
       .agg(count(lit(1)).as("n"),
-           round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
+           round(GraftOps.microSum("l_quantity"), 4)
              .as("sum_qty"))
       .orderBy(col("month"))
   }
@@ -265,7 +265,7 @@ object Scans extends QueryGroup {
     merged.groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_customers"),
            sum(when(col("gen") === 1, 1L).otherwise(0L)).as("n_updated"),
-           round((sum(expr("CAST(floor((c_acctbal) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
+           round(GraftOps.microSum("c_acctbal"), 4)
              .as("total_bal"))
       .orderBy(col("c_nationkey"))
   }
@@ -321,28 +321,21 @@ object Scans extends QueryGroup {
     * for the compaction job itself, never for re-manufacturing the mess
     * it cleans up. Bench warms this untimed (compact_fragments). */
   private[graft] def ensureCompactFragments(s: org.apache.spark.sql.SparkSession,
-                                            d: String): String = {
-    val frag = s"${Tables.scratchDir}/sink_compact/fragmented_" +
-      s"${new java.io.File(d).getName}_${Tables.fingerprint(d, "lineitem")}"
-    // torn-scratch guard (the ingest_avro round-11 bug class): a marker
-    // that outlived some of its 64 shards would silently compact a
-    // subset — validate the shard count behind the marker and rebuild,
-    // not trust, a torn layout
-    def shards(): Int =
-      Option(new java.io.File(frag).listFiles()).getOrElse(Array.empty)
-        .count(_.getName.endsWith(".parquet"))
-    // in-place + locked (the marker lives beside a shard-count check,
-    // and sink_compact reads the fragmented dir by path)
-    ScratchParquet.onceLocked(new java.io.File(frag).getName)(
-        !new java.io.File(s"$frag/_FRAG_DONE").exists() || shards() != 64) {
+                                            d: String): String =
+    ScratchParquet.ensureDir("compact_fragments", d,
+        Tables.fingerprint(d, "lineitem")) { tmp =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
         .repartition(64)
-        .write.mode("overwrite").parquet(frag)
-      new java.io.File(s"$frag/_FRAG_DONE").createNewFile(); ()
+        .write.mode("overwrite").parquet(tmp.getPath)
+      // sweep this fixture's layouts from before the artifact format
+      // (sink_compact/fragmented_<sf>_<fp>, built in place)
+      Option(new java.io.File(s"${Tables.scratchDir}/sink_compact").listFiles())
+        .getOrElse(Array.empty)
+        .filter(_.getName.matches(
+          s"fragmented_${java.util.regex.Pattern.quote(new java.io.File(d).getName)}_[0-9a-f]+"))
+        .foreach(Tables.deleteRecursively)
     }
-    frag
-  }
 
   private val sinkCompact: QFn = (s, d) => {
     val frag = ensureCompactFragments(s, d)
@@ -352,7 +345,7 @@ object Scans extends QueryGroup {
     s.read.parquet(compact)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
-           round((sum(expr("CAST(floor((l_extendedprice) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
+           round(GraftOps.microSum("l_extendedprice"), 4)
              .as("sum_price"))
       .orderBy(col("l_returnflag"))
   }
@@ -631,102 +624,118 @@ object Scans extends QueryGroup {
       .filter(col("l_partkey") < 1024L && col("l_suppkey") < 64L)
       .groupBy(expr("zval div 16777216").as("zbucket"))
       .agg(count(lit(1)).as("n"),
-           round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
+           round(GraftOps.microSum("l_quantity"), 4)
              .as("sum_qty"))
       .orderBy(col("zbucket"))
   }
+
+  /** The file-stats manifest of a layout: one row (path, lo, hi,
+    * n_rows) per parquet file under each of `root`'s sub-dirs `subs`,
+    * written to `root/out` in one pass at layout time. `path` is the
+    * sub-dir plus the file name, relative to `root`, so the manifest
+    * stays valid when ensureDir renames the artifact into place (a
+    * Delta log stores each `add.path` relative to the table root for
+    * the same reason). */
+  private def writeManifest(s: org.apache.spark.sql.SparkSession,
+                            root: java.io.File, out: String, subs: String*): Unit =
+    subs.map(sub => s.read.parquet(s"$root/$sub")
+        .select(concat(lit(s"$sub/"), col("_metadata.file_name")).as("path"),
+                col("l_orderkey")))
+      .reduce(_ unionByName _)
+      .groupBy(col("path"))
+      .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"),
+           count(lit(1)).as("n_rows"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/$out")
+
+  /** The data files that a set of manifests, each an (artifact root,
+    * manifest sub-dir) pair, select for the key range [loK, hiK] (every
+    * file by default), each resolved against its own root. One collect
+    * of the metadata plane: bounded by file count (what a
+    * catalog/driver always holds), never data-sized. */
+  private def manifestFiles(s: org.apache.spark.sql.SparkSession,
+                            mans: Seq[(String, String)],
+                            loK: Long = Long.MinValue,
+                            hiK: Long = Long.MaxValue): Seq[String] =
+    mans.map { case (root, m) =>
+        s.read.parquet(s"$root/$m")
+          .select(concat(lit(s"$root/"), col("path")).as("path"), col("lo"), col("hi"))
+      }
+      .reduce(_ unionByName _)
+      .filter(col("lo") <= hiK && col("hi") >= loK)
+      .select(col("path")).collect().map(_.getString(0)).toSeq
+
+  /** The manifest-pruned read of the key range [1000, 5000] that every
+    * manifest rung (and its oracle) reads: only the files whose [lo, hi]
+    * overlaps the range reach the reader, and parquet row-group stats
+    * prune a second level inside each one (the layouts are sorted). */
+  private def prunedSlice(s: org.apache.spark.sql.SparkSession,
+                          mans: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
+    val (loK, hiK) = (1000L, 5000L)
+    val files = manifestFiles(s, mans, loK, hiK)
+    val pruned =
+      if (files.isEmpty) s.read.parquet(s"${mans.head._1}/data").limit(0)
+      else s.read.parquet(files: _*)
+    pruned.filter(col("l_orderkey") >= loK && col("l_orderkey") <= hiK)
+  }
+
+  /** The one aggregate of the manifest and VACUUM rungs. */
+  private def qtyStats(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.agg(count(lit(1)).as("n"),
+           countDistinct(col("l_orderkey")).as("n_orders"),
+           round(GraftOps.microSum("l_quantity"), 4).as("sum_qty"))
 
   /** Range layout + min/max file-stats manifest — the table-format
     * METADATA PLANE (Delta/Iceberg per-file add stats) rebuilt on plain
     * parquet: built once per (fixture, fingerprint) like the DPP
     * layout. The data sits range-partitioned and sorted on the key
     * (sink_sorted's zone-map shape); the manifest is one tiny parquet
-    * of (path, lo, hi, n_rows) derived in a single pass at layout
-    * time — at 100 TB the writer emits these stats per file and the
-    * manifest IS the table format's file index. */
+    * of (path, lo, hi, n_rows) — at 100 TB the writer emits these stats
+    * per file and the manifest IS the table format's file index. */
   private[graft] def ensureManifestLayout(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val base = s"${Tables.scratchDir}/manifest_${new java.io.File(d).getName}" +
-      s"_${Tables.fingerprint(d, "lineitem")}"
-    // In-place build, never tmp+rename: the manifest embeds ABSOLUTE
-    // file paths (input_file_name at layout time — the table-format
-    // file index this rung models), which a rename would invalidate;
-    // and the delta/delete generations land INSIDE this dir later.
-    // The cross-process lock still prevents interleaved double-builds;
-    // _DONE handles the crash-half-write case as before.
-    ScratchParquet.onceLocked(new java.io.File(base).getName)(
-        !new java.io.File(s"$base/_DONE").exists()) {
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ScratchParquet.ensureDir("manifest", d, Tables.fingerprint(d, "lineitem")) { tmp =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
         .repartitionByRange(16, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
-        .write.mode("overwrite").parquet(s"$base/data")
-      s.read.parquet(s"$base/data")
-        .groupBy(input_file_name().as("path"))
-        .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"),
-             count(lit(1)).as("n_rows"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
-      new java.io.File(s"$base/_DONE").createNewFile(); ()
+        .write.mode("overwrite").parquet(s"$tmp/data")
+      writeManifest(s, tmp, "manifest", "data")
     }
-    base
-  }
 
   /** Manifest-pruned scan — explicit file skipping via the stats
     * manifest, the read half of every modern table format: the
     * predicate's key range is intersected with the manifest's per-file
     * [lo, hi] intervals and ONLY overlapping files are handed to the
-    * reader. The manifest collect() is the metadata plane — bounded by
-    * file count (what a catalog/driver always holds), never data-sized.
-    * Equality with the whole-table oracle proves the pruning lossless;
-    * PlanSpec asserts files were actually skipped and the pruned read
-    * equals the full-scan filter. Parquet row-group stats give a second
-    * pruning level INSIDE each selected file for free (the layout is
-    * sorted). */
-  private val scanManifest: QFn = (s, d) => {
-    val base = ensureManifestLayout(s, d)
-    val (loK, hiK) = (1000L, 5000L)
-    val files = s.read.parquet(s"$base/manifest")
-      .filter(col("lo") <= hiK && col("hi") >= loK)
-      .select(col("path")).collect().map(_.getString(0))
-    val pruned =
-      if (files.isEmpty) s.read.parquet(s"$base/data").limit(0)
-      else s.read.parquet(files.toIndexedSeq: _*)
-    pruned.filter(col("l_orderkey") >= loK && col("l_orderkey") <= hiK)
-      .agg(count(lit(1)).as("n"),
-           countDistinct(col("l_orderkey")).as("n_orders"),
-           round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
-             .as("sum_qty"))
-  }
+    * reader. Equality with the whole-table oracle proves the pruning
+    * lossless; PlanSpec asserts files were actually skipped and the
+    * pruned read equals the full-scan filter. */
+  private val scanManifest: QFn = (s, d) =>
+    qtyStats(prunedSlice(s, Seq(ensureManifestLayout(s, d) -> "manifest")))
 
   /** Incremental manifest maintenance — dedup_incremental / ann_upsert's
     * posture applied to the METADATA PLANE: an append batch lands as
     * NEW data files plus new manifest rows; nothing existing is
     * rewritten (the base layout and its manifest stay byte-identical —
-    * PlanSpec pins the mtimes). Built once per fixture fingerprint
-    * under the base layout's keyed scratch dir. */
+    * PlanSpec pins the mtimes). Its own artifact, keyed on the same
+    * fixture fingerprint as the base layout. */
   private[graft] def ensureManifestDelta(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val layout = ensureManifestLayout(s, d)
-    val dd = s"$layout/delta"
-    // in-place + locked, same reasons as the base layout (absolute
-    // paths in the delta manifest)
-    ScratchParquet.onceLocked(new java.io.File(layout).getName + "+delta")(
-        !new java.io.File(s"$dd/_DONE").exists()) {
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ScratchParquet.ensureDir("manifest_delta", d,
+        Tables.fingerprint(d, "lineitem")) { tmp =>
       Tables.lineitem(s, d)
         .filter(col("l_orderkey") % 97L === 0L)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
         .repartitionByRange(2, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
-        .write.mode("overwrite").parquet(s"$dd/data")
-      s.read.parquet(s"$dd/data")
-        .groupBy(input_file_name().as("path"))
-        .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"),
-             count(lit(1)).as("n_rows"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dd/manifest")
-      new java.io.File(s"$dd/_DONE").createNewFile(); ()
+        .write.mode("overwrite").parquet(s"$tmp/data")
+      writeManifest(s, tmp, "manifest", "data")
     }
-    dd
-  }
+
+  /** The base layout and its appended delta, in generation order. */
+  private def manifestGenerations(s: org.apache.spark.sql.SparkSession,
+                                  d: String): Seq[(String, String)] =
+    Seq(ensureManifestLayout(s, d) -> "manifest",
+        ensureManifestDelta(s, d) -> "manifest")
 
   /** Manifest-pruned scan over base + appended batch — the read half of
     * incremental metadata maintenance: the combined manifest is the
@@ -735,43 +744,23 @@ object Scans extends QueryGroup {
     * and pruning + the data read work unchanged across both
     * generations. Equality with the base ∪ delta oracle derivation
     * proves the append lossless and the combined pruning correct. */
-  private val sinkManifestAppend: QFn = (s, d) => {
-    val base = ensureManifestLayout(s, d)
-    val dd = ensureManifestDelta(s, d)
-    val (loK, hiK) = (1000L, 5000L)
-    val man = s.read.parquet(s"$base/manifest")
-      .unionByName(s.read.parquet(s"$dd/manifest"))
-    val files = man.filter(col("lo") <= hiK && col("hi") >= loK)
-      .select(col("path")).collect().map(_.getString(0))
-    val pruned =
-      if (files.isEmpty) s.read.parquet(s"$base/data").limit(0)
-      else s.read.parquet(files.toIndexedSeq: _*)
-    pruned.filter(col("l_orderkey") >= loK && col("l_orderkey") <= hiK)
-      .agg(count(lit(1)).as("n"),
-           countDistinct(col("l_orderkey")).as("n_orders"),
-           round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
-             .as("sum_qty"))
-  }
+  private val sinkManifestAppend: QFn = (s, d) =>
+    qtyStats(prunedSlice(s, manifestGenerations(s, d)))
 
   /** Equality-delete file for the merge-on-read rung — generation 3 of
     * the manifest-plane story: a DELETE lands as a small file of KEYS
     * (Iceberg equality deletes / Delta deletion-vector posture), no
-    * data file rewritten. Built once per fixture fingerprint under the
-    * base layout's keyed scratch dir. */
+    * data file rewritten. Its own artifact, keyed on the same fixture
+    * fingerprint as the base layout. */
   private[graft] def ensureManifestDelete(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val layout = ensureManifestLayout(s, d)
-    val dl = s"$layout/delete"
-    ScratchParquet.onceLocked(new java.io.File(layout).getName + "+delete")(
-        !new java.io.File(s"$dl/_DONE").exists()) {
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ScratchParquet.ensureDir("manifest_delete", d,
+        Tables.fingerprint(d, "lineitem")) { tmp =>
       Tables.lineitem(s, d)
         .filter(col("l_orderkey") % 101L === 0L)
         .select(col("l_orderkey")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$dl/keys")
-      new java.io.File(s"$dl/_DONE").createNewFile(); ()
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/keys")
     }
-    dl
-  }
 
   /** Merge-on-read DELETE — the third metadata-plane verb (add:
     * sink_manifest_append; read-at-version: scan_time_travel; now
@@ -786,25 +775,10 @@ object Scans extends QueryGroup {
     * KBs (keys, not rows) so the anti join broadcasts; at compaction
     * time the same anti join feeds sink_compact's rewrite. */
   private val scanDeleteMerge: QFn = (s, d) => {
-    val base = ensureManifestLayout(s, d)
-    val dd = ensureManifestDelta(s, d)
-    val dl = ensureManifestDelete(s, d)
-    val (loK, hiK) = (1000L, 5000L)
-    val man = s.read.parquet(s"$base/manifest")
-      .unionByName(s.read.parquet(s"$dd/manifest"))
-    val files = man.filter(col("lo") <= hiK && col("hi") >= loK)
-      .select(col("path")).collect().map(_.getString(0))
-    val pruned =
-      if (files.isEmpty) s.read.parquet(s"$base/data").limit(0)
-      else s.read.parquet(files.toIndexedSeq: _*)
-    val slice = pruned
-      .filter(col("l_orderkey") >= loK && col("l_orderkey") <= hiK)
-    val deletes = s.read.parquet(s"$dl/keys")
+    val slice = prunedSlice(s, manifestGenerations(s, d))
+    val deletes = s.read.parquet(s"${ensureManifestDelete(s, d)}/keys")
     def agg(df: org.apache.spark.sql.DataFrame, snap: Long) =
-      df.agg(count(lit(1)).as("n"),
-             countDistinct(col("l_orderkey")).as("n_orders"),
-             round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
-               .as("sum_qty"))
+      qtyStats(df)
         .select(lit(snap).as("snapshot"), col("n"), col("n_orders"), col("sum_qty"))
     agg(slice, 1L)
       .unionByName(agg(slice.join(broadcast(deletes), Seq("l_orderkey"),
@@ -828,27 +802,11 @@ object Scans extends QueryGroup {
     * exact prefix-union is how the reader binds any historical
     * version. */
   private val scanTimeTravel: QFn = (s, d) => {
-    val base = ensureManifestLayout(s, d)
-    val dd = ensureManifestDelta(s, d)
-    val (loK, hiK) = (1000L, 5000L)
-    def snapshot(gen: Int): org.apache.spark.sql.DataFrame = {
-      val man =
-        if (gen == 0) s.read.parquet(s"$base/manifest")
-        else s.read.parquet(s"$base/manifest")
-          .unionByName(s.read.parquet(s"$dd/manifest"))
-      val files = man.filter(col("lo") <= hiK && col("hi") >= loK)
-        .select(col("path")).collect().map(_.getString(0))
-      val pruned =
-        if (files.isEmpty) s.read.parquet(s"$base/data").limit(0)
-        else s.read.parquet(files.toIndexedSeq: _*)
-      pruned.filter(col("l_orderkey") >= loK && col("l_orderkey") <= hiK)
-        .agg(count(lit(1)).as("n"),
-             countDistinct(col("l_orderkey")).as("n_orders"),
-             round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
-               .as("sum_qty"))
+    val gens = manifestGenerations(s, d)
+    def snapshot(gen: Int): org.apache.spark.sql.DataFrame =
+      qtyStats(prunedSlice(s, gens.take(gen + 1)))
         .select(lit(gen.toLong).as("snapshot"), col("n"), col("n_orders"),
                 col("sum_qty"))
-    }
     snapshot(0).unionByName(snapshot(1)).orderBy(col("snapshot"))
   }
 
@@ -892,7 +850,7 @@ object Scans extends QueryGroup {
   }
 
   /** Self-contained three-generation layout for the VACUUM rung — its
-    * OWN scratch table (never the shared manifest layout: scan_manifest
+    * OWN artifact (never the shared manifest layout: scan_manifest
     * / scan_time_travel pin that layout's files and mtimes, and VACUUM
     * physically deletes files): gen0 = 4 base data files, gen1 = 2
     * delta files (append), gen2 = a COMPACTION rewriting gen0 ∪ gen1
@@ -902,50 +860,21 @@ object Scans extends QueryGroup {
     * exactly what gives a retention VACUUM something to reclaim. Built
     * once per fixture fingerprint. */
   private[graft] def ensureVacuumLayout(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val base = s"${Tables.scratchDir}/vacuum_${new java.io.File(d).getName}" +
-      s"_${Tables.fingerprint(d, "lineitem")}"
-    // In-place build, never tmp+rename: the v0/v1/v2 manifests embed
-    // ABSOLUTE file paths (the reference set the vacuum reclaims from),
-    // and the rung itself mutates the layout post-publish. The lock
-    // still keeps two JVMs from interleaving one build (_DONE handles
-    // the crash-half-write case as before).
-    ScratchParquet.onceLocked(new java.io.File(base).getName)(
-        !new java.io.File(s"$base/_DONE").exists()) {
-      buildVacuumLayout(s, d, base)
-    }
-    base
-  }
-
-  private def buildVacuumLayout(
-      s: org.apache.spark.sql.SparkSession, d: String, base: String): Unit = {
-    if (!new java.io.File(s"$base/_DONE").exists()) {
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    ScratchParquet.ensureDir("vacuum", d, Tables.fingerprint(d, "lineitem")) { tmp =>
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
       li.filter(col("l_orderkey") % 7L === 0L)
-        .repartition(4).write.mode("overwrite").parquet(s"$base/data/gen0")
+        .repartition(4).write.mode("overwrite").parquet(s"$tmp/data/gen0")
       li.filter(col("l_orderkey") % 7L === 3L)
-        .repartition(2).write.mode("overwrite").parquet(s"$base/data/gen1")
+        .repartition(2).write.mode("overwrite").parquet(s"$tmp/data/gen1")
       // compaction: the new snapshot's files carry the SAME rows
-      s.read.parquet(s"$base/data/gen0", s"$base/data/gen1")
-        .repartition(2).write.mode("overwrite").parquet(s"$base/data/gen2")
-      def stats(dirs: String*) =
-        s.read.parquet(dirs: _*)
-          .groupBy(input_file_name().as("path"))
-          .agg(min(col("l_orderkey")).as("lo"), max(col("l_orderkey")).as("hi"),
-               count(lit(1)).as("n_rows"))
-      stats(s"$base/data/gen0")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest/v0")
-      stats(s"$base/data/gen0", s"$base/data/gen1")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest/v1")
-      stats(s"$base/data/gen2")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest/v2")
-      new java.io.File(s"$base/_DONE").createNewFile()
+      s.read.parquet(s"$tmp/data/gen0", s"$tmp/data/gen1")
+        .repartition(2).write.mode("overwrite").parquet(s"$tmp/data/gen2")
+      writeManifest(s, tmp, "manifest/v0", "data/gen0")
+      writeManifest(s, tmp, "manifest/v1", "data/gen0", "data/gen1")
+      writeManifest(s, tmp, "manifest/v2", "data/gen2")
     }
-  }
-
-  private[graft] def stripFileScheme(p: String): String =
-    p.replaceFirst("^file:(//)?", "")
 
   /** VACUUM — the retention verb completing the manifest-plane story
     * (add: sink_manifest_append; read-at-version: scan_time_travel;
@@ -965,18 +894,18 @@ object Scans extends QueryGroup {
     * read-only. */
   private[graft] def vacuumRetainLatest(
       s: org.apache.spark.sql.SparkSession, base: String): Unit = {
-    // serialized across JVMs like the layout build: two concurrent
-    // vacuums would race each other's Files.delete calls
-    ScratchParquet.onceLocked(new java.io.File(base).getName + "+vacuum")(
-        !new java.io.File(s"$base/_VACUUMED").exists()) {
-      vacuumRetainLatestLocked(s, base)
-    }
+    // the one mutation of a published artifact, serialized across JVMs:
+    // two concurrent vacuums would race each other's Files.delete calls
+    val vacuumed = new java.io.File(s"$base/_VACUUMED")
+    if (!vacuumed.exists())
+      ScratchParquet.withLock(new java.io.File(base).getName + "+vacuum") {
+        if (!vacuumed.exists()) vacuumRetainLatestLocked(s, base)
+      }
   }
 
   private def vacuumRetainLatestLocked(
       s: org.apache.spark.sql.SparkSession, base: String): Unit = {
-    val kept = s.read.parquet(s"$base/manifest/v2")
-      .select(col("path")).collect().map(r => stripFileScheme(r.getString(0))).toSet
+    val kept = manifestFiles(s, Seq(base -> "manifest/v2")).toSet
     val dataRoot = java.nio.file.Paths.get(s"$base/data")
     val walk = java.nio.file.Files.walk(dataRoot)
     val all = try {
@@ -985,11 +914,8 @@ object Scans extends QueryGroup {
     } finally walk.close()
     // dir-level survival is for SIDECARS ONLY (_SUCCESS, .crc,
     // _-prefixed markers — committer metadata that lives or dies with
-    // its directory). Round-11 advice: the prior spelling kept ANY
-    // file sharing a dir with a referenced one, so a layout that ever
-    // mixed referenced and unreferenced DATA files in one generation
-    // dir would silently under-reclaim with no audit entry. Now an
-    // unreferenced data file is doomed (and logged) wherever it sits.
+    // its directory): an unreferenced DATA file is doomed (and logged)
+    // wherever it sits, even beside a referenced one
     def isSidecar(p: java.nio.file.Path): Boolean = {
       val n = p.getFileName.toString
       n == "_SUCCESS" || n.endsWith(".crc") || n.startsWith("_") || n.startsWith(".")
@@ -1000,26 +926,9 @@ object Scans extends QueryGroup {
         (isSidecar(p) && kept.exists(_.startsWith(dir + "/")))
     }
     require(keepF.nonEmpty, s"graft.vacuum: retained manifest references no live file under $base")
-    // the audit log lands BEFORE any delete (round-11 review finding):
-    // a crash mid-delete re-runs with the already-deleted files absent
-    // from the recomputed doomed set, so the re-run UNIONS the prior
-    // log — the audit trail never loses a deletion it performed
-    val logPath = java.nio.file.Paths.get(s"$base/_VACUUM_LOG")
-    val prior =
-      if (java.nio.file.Files.exists(logPath))
-        new String(java.nio.file.Files.readAllBytes(logPath),
-          java.nio.charset.StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty).toSeq
-      else Seq.empty[String]
-    // tmp + ATOMIC_MOVE (the _CURRENT-pointer recipe): a plain
-    // truncate-in-place rewrite could itself die half-flushed on the
-    // resume path and destroy the prior entries it just read
-    val logTmp = java.nio.file.Paths.get(s"$base/_VACUUM_LOG.tmp")
-    java.nio.file.Files.write(logTmp,
-      (prior ++ doomed.map(_.toString)).distinct.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(logTmp, logPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // the audit log lands BEFORE any delete, so a crash mid-delete
+    // never loses a deletion it performed
+    ScratchParquet.writeAuditLog(base, doomed.map(_.toString))
     doomed.foreach(java.nio.file.Files.delete)
     // drop now-empty generation dirs and the expired manifests
     all.map(_.getParent).distinct.foreach { dir =>
@@ -1046,15 +955,8 @@ object Scans extends QueryGroup {
     * action-in-constructor posture, documented there). */
   private val sinkVacuum: QFn = (s, d) => {
     val base = ensureVacuumLayout(s, d)
-    def latest(): org.apache.spark.sql.DataFrame = {
-      val files = s.read.parquet(s"$base/manifest/v2")
-        .select(col("path")).collect().map(_.getString(0))
-      s.read.parquet(files.toIndexedSeq: _*)
-        .agg(count(lit(1)).as("n"),
-             countDistinct(col("l_orderkey")).as("n_orders"),
-             round((sum(expr("CAST(floor((l_quantity) * 1e6 + 0.5) AS BIGINT)")).cast("decimal(26,0)") / lit(1000000)).cast("double"), 4)
-               .as("sum_qty"))
-    }
+    def latest(): org.apache.spark.sql.DataFrame =
+      qtyStats(s.read.parquet(manifestFiles(s, Seq(base -> "manifest/v2")): _*))
     val b = latest().collect()(0)
     vacuumRetainLatest(s, base)
     val sp = s

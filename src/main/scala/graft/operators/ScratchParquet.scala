@@ -111,11 +111,8 @@ private[graft] object ScratchParquet {
   /** Cross-process critical section for one artifact: a per-JVM monitor
     * (FileLock throws OverlappingFileLockException if one process locks
     * twice) around an OS file lock in the scratch dir. Exposed for the
-    * layout builders whose publishes must stay IN PLACE (manifests that
-    * embed absolute file paths, the vacuum layout the rung itself
-    * mutates post-publish) — they can't use the tmp+rename protocol,
-    * but the lock still keeps two JVMs from interleaving writes into
-    * one build. */
+    * one mutation of a published artifact, VACUUM's delete inside its
+    * layout: two JVMs must not race each other's deletes. */
   private[graft] def withLock[T](key: String)(body: => T): T = {
     require(key.nonEmpty && !key.contains("/"),
       s"lock key names one lock file in the scratch dir: '$key'")
@@ -133,15 +130,6 @@ private[graft] object ScratchParquet {
       } finally ch.close()
     }
   }
-
-  /** The locked double-checked once-per-layout build idiom, ONE
-    * spelling for every in-place builder (manifest layout/delta/delete,
-    * vacuum, compaction input): cheap unlocked probe, then re-probe
-    * under the cross-process lock so the previous holder's publish is
-    * seen. `needsBuild` is re-evaluated inside the lock. */
-  private[graft] def onceLocked(key: String)(needsBuild: => Boolean)
-                               (build: => Unit): Unit =
-    if (needsBuild) withLock(key) { if (needsBuild) build }
 
   /** Atomically publish a finished tmp dir at `dir`. On Linux a rename
     * onto an existing non-empty directory surfaces as a GENERIC
@@ -165,9 +153,11 @@ private[graft] object ScratchParquet {
     * IVF index with cells + centroids, a hive-partitioned fingerprint
     * table...). `build` receives the temp dir to populate; the temp dir
     * is atomically renamed to the published path, `_DONE` inside.
-    * Returns the published dir path. Contents may be APPENDED to after
-    * publish only via the same tmp+rename protocol per sub-dir (the
-    * ann-index delta cells do this). */
+    * Returns the published dir path. A path stored inside the artifact
+    * (a stats manifest's file list) must be relative to the artifact
+    * root, since the rename moves every file. The contents are never
+    * changed after publish, with one exception: VACUUM deletes the
+    * unreferenced files inside its own layout, under [[withLock]]. */
   def ensureDir(name: String, d: String, fp: String)
                (build: java.io.File => Unit): String = {
     val base = new java.io.File(d).getName
@@ -204,6 +194,28 @@ private[graft] object ScratchParquet {
       }
     }
     dir.getPath
+  }
+
+  /** Write-ahead audit log for a reclaim: `entries` are unioned with
+    * the log already at `dir/_VACUUM_LOG` and written to a temp file
+    * that is ATOMIC_MOVEd into place. Call it before any delete: a run
+    * that dies mid-delete re-runs with the deleted entries gone from its
+    * own list, and the union keeps them; a plain rewrite in place could
+    * die half-flushed and lose the entries it just read. */
+  private[graft] def writeAuditLog(dir: String, entries: Seq[String]): Unit = {
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val log = java.nio.file.Paths.get(s"$dir/_VACUUM_LOG")
+    val prior =
+      if (java.nio.file.Files.exists(log))
+        new String(java.nio.file.Files.readAllBytes(log), utf8)
+          .split("\n").filter(_.nonEmpty).toSeq
+      else Seq.empty[String]
+    val tmp = java.nio.file.Paths.get(s"$dir/_VACUUM_LOG.tmp")
+    java.nio.file.Files.write(tmp,
+      (prior ++ entries).distinct.sorted.mkString("\n").getBytes(utf8))
+    java.nio.file.Files.move(tmp, log,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Build-or-read a single-DataFrame artifact: returns a DataFrame

@@ -670,21 +670,8 @@ object StreamingOps {
         (key(f.getName)._1 < curKey._1 ||
           (key(f.getName)._1 == curKey._1 && key(f.getName)._2 < curKey._2)))
       .sortBy(_.getName)
-    // audit log lands BEFORE any delete; union with a prior log so a
-    // crashed-and-rerun vacuum never loses a deletion it performed
-    val logPath = java.nio.file.Paths.get(s"$stateDir/_VACUUM_LOG")
-    val prior =
-      if (java.nio.file.Files.exists(logPath))
-        new String(java.nio.file.Files.readAllBytes(logPath), utf8)
-          .split("\n").filter(_.nonEmpty).toSeq
-      else Seq.empty[String]
-    val logTmp = java.nio.file.Paths.get(s"$stateDir/_VACUUM_LOG.tmp")
-    java.nio.file.Files.write(logTmp,
-      (prior ++ doomed.map(_.getName)).distinct.sorted.mkString("\n")
-        .getBytes(utf8))
-    java.nio.file.Files.move(logTmp, logPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // audit log lands BEFORE any delete
+    graft.operators.ScratchParquet.writeAuditLog(stateDir, doomed.map(_.getName).toSeq)
     doomed.foreach(d => graft.Tables.deleteRecursively(d))
     doomed.map(_.getName).toSeq
   }

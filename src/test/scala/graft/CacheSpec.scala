@@ -99,6 +99,75 @@ class CacheSpec extends AnyFunSuite {
       "one fixture's fit must not evict another fixture's artifact")
   }
 
+  test("regenerated lineitem leaves one generation of each table-format layout") {
+    // the manifest, delta, delete, VACUUM and compaction layouts are
+    // artifacts like the rest: a rewritten fixture publishes a fresh
+    // generation of each and evicts the superseded one, instead of
+    // leaving every old layout behind in scratch
+    val d = java.nio.file.Files.createTempDirectory("graft_layout_regen")
+    val names = Seq("manifest", "manifest_delta", "manifest_delete", "vacuum",
+      "compact_fragments")
+    def buildAll(): Unit = Seq[(SparkSession, String) => String](
+        operators.Scans.ensureManifestLayout, operators.Scans.ensureManifestDelta,
+        operators.Scans.ensureManifestDelete, operators.Scans.ensureVacuumLayout,
+        operators.Scans.ensureCompactFragments)
+      .foreach(_(spark, d.toString))
+    val li = d.resolve("lineitem.parquet")
+    try {
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"${TestSpark.sf}/lineitem.parquet"), li)
+      buildAll()
+      val gens1 = names.map(generations(_, d.toString))
+      names.zip(gens1).foreach { case (n, g) =>
+        assert(g.size == 1, s"one published $n generation expected: $g")
+      }
+      // rewrite the fixture in place: half the orders, one file
+      spark.read.parquet(s"${TestSpark.sf}/lineitem.parquet")
+        .filter(org.apache.spark.sql.functions.col("l_orderkey") % 2L === 0L)
+        .coalesce(1).write.parquet(d.resolve("_tmp").toString)
+      val part = d.resolve("_tmp").toFile.listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, li,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      buildAll()
+      names.zip(gens1).foreach { case (n, g1) =>
+        val g2 = generations(n, d.toString)
+        assert(g2.size == 1, s"stale $n generation survived: $g2")
+        assert(g2 != g1, s"regenerated fixture must publish a fresh $n generation")
+      }
+    } finally {
+      // this fixture copy's artifacts and lock files
+      Option(new java.io.File(Tables.scratchDir).listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.split("=").contains(d.getFileName.toString))
+        .foreach(Tables.deleteRecursively)
+      Tables.deleteRecursively(d.toFile)
+    }
+  }
+
+  test("every manifest path is relative and resolves inside its artifact") {
+    // a manifest that stored absolute paths would dangle once ensureDir
+    // renames the artifact from its temp dir into place
+    val sf = TestSpark.sf
+    val vac = operators.Scans.ensureVacuumLayout(spark, sf)
+    val manifests =
+      Seq(operators.Scans.ensureManifestLayout(spark, sf) -> "manifest",
+          operators.Scans.ensureManifestDelta(spark, sf) -> "manifest") ++
+        Seq("v0", "v1", "v2").map(v => vac -> s"manifest/$v")
+          .filter { case (root, m) => new java.io.File(root, m).exists() }
+    assert(manifests.exists(_._2 == "manifest/v2"))
+    manifests.foreach { case (root, m) =>
+      val paths = spark.read.parquet(s"$root/$m").select("path").collect()
+        .map(_.getString(0))
+      assert(paths.nonEmpty, s"$root/$m lists no file")
+      paths.foreach { p =>
+        assert(!p.startsWith("/") && !p.contains(":"),
+          s"$root/$m holds a path that is not relative: $p")
+        assert(new java.io.File(root, p).isFile,
+          s"$root/$m: $p does not resolve to a file under its artifact")
+      }
+    }
+  }
+
   test("derived tables leave no session copy in executor storage") {
     // a memo in front of an artifact (persist, localCheckpoint) pins a
     // cached relation or a persistent RDD for the life of the JVM; a

@@ -222,9 +222,7 @@ class PlanSpec extends AnyFunSuite {
     def parquetFiles(p: String): Int =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(_.getName.endsWith(".parquet"))
-    val fragDir = s"${Tables.scratchDir}/sink_compact/fragmented_" +
-      s"${new java.io.File(TestSpark.sf).getName}_" +
-      Tables.fingerprint(TestSpark.sf, "lineitem")
+    val fragDir = operators.Scans.ensureCompactFragments(spark, TestSpark.sf)
     val frag = parquetFiles(fragDir)
     val comp = parquetFiles(s"${Tables.scratchDir}/sink_compact/compacted")
     assert(frag == 64, s"expected 64 fragmented files, got $frag")
@@ -304,15 +302,16 @@ class PlanSpec extends AnyFunSuite {
     assert(mtimes(s"$base/data") == beforeData, "append rewrote base data")
     assert(mtimes(s"$base/manifest") == beforeMan, "append rewrote base manifest")
     // the composed manifest still skips files
+    val dd = operators.Scans.ensureManifestDelta(spark, TestSpark.sf)
     val man = spark.read.parquet(s"$base/manifest")
-      .unionByName(spark.read.parquet(s"$base/delta/manifest"))
+      .unionByName(spark.read.parquet(s"$dd/manifest"))
     val total = man.count()
     val sel = man.filter(col("lo") <= 5000L && col("hi") >= 1000L).count()
     assert(sel < total, s"composed manifest pruned nothing: $sel of $total")
     // appended result = base-generation result + delta rows in range
     val baseN = SparkEntry.queries("scan_manifest")(spark, TestSpark.sf)
       .collect()(0).getAs[Long]("n")
-    val deltaN = spark.read.parquet(s"$base/delta/data")
+    val deltaN = spark.read.parquet(s"$dd/data")
       .filter(col("l_orderkey") >= 1000L && col("l_orderkey") <= 5000L).count()
     assert(out.getAs[Long]("n") == baseN + deltaN)
   }
@@ -680,10 +679,9 @@ class PlanSpec extends AnyFunSuite {
     assert(out(0).toSeq.drop(1) == out(1).toSeq.drop(1),
       s"retained read changed across vacuum: ${out.toSeq}")
     val base = graft.operators.Scans.ensureVacuumLayout(spark, TestSpark.sf)
-    def strip(p: String) = graft.operators.Scans.stripFileScheme(p)
     // every file the retained manifest references is still on disk
     val kept = spark.read.parquet(s"$base/manifest/v2")
-      .select(col("path")).collect().map(r => strip(r.getString(0)))
+      .select(col("path")).collect().map(r => s"$base/${r.getString(0)}")
     assert(kept.nonEmpty)
     kept.foreach(p => assert(new java.io.File(p).exists(), s"referenced file vacuumed: $p"))
     // the expired manifests are gone
@@ -768,7 +766,7 @@ class PlanSpec extends AnyFunSuite {
       // retained snapshot still fully readable
       val files = spark.read.parquet(s"$base/manifest/v2")
         .select(col("path")).collect()
-        .map(r => graft.operators.Scans.stripFileScheme(r.getString(0)))
+        .map(r => s"$base/${r.getString(0)}")
       files.foreach(p => assert(new java.io.File(p).exists()))
     } finally {
       Tables.deleteRecursively(tmp.toFile)

@@ -184,14 +184,15 @@ class VectorSpec extends AnyFunSuite {
     // one delta cell
     assert(counts.map(_.getLong(2)).sum == 50L, counts.mkString(","))
     val path = operators.LlmVector.ensureAnnIndex(spark, sf)
+    val delta = operators.LlmVector.ensureAnnDelta(spark, sf)
     val all = spark.read.parquet(s"$path/cells")
       .select(col("vec_id"), col("embedding"))
-      .union(spark.read.parquet(s"$path/delta_cells")
+      .union(spark.read.parquet(s"$delta/cells")
         .select(col("vec_id"), col("embedding")))
     // an upserted vector queried against the COMBINED index must return
     // itself as exact top-1 (cos = 1 with itself; the +0.25 dim-0 shift
     // breaks parallelism with its source vector)
-    val q = spark.read.parquet(s"$path/delta_cells")
+    val q = spark.read.parquet(s"$delta/cells")
       .filter(col("vec_id") === 1000007L).select(col("embedding").as("qe"))
     val top = all.crossJoin(broadcast(q))
       .select(col("vec_id"), expr("cosine_f32(embedding, qe)").as("c"))
@@ -204,15 +205,15 @@ class VectorSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val sf = TestSpark.sf
     val first = SparkEntry.queries("ann_upsert")(spark, sf).collect().toSeq
-    val path = operators.LlmVector.ensureAnnIndex(spark, sf)
-    val marker = new java.io.File(s"$path/delta_cells/_DONE")
+    val delta = operators.LlmVector.ensureAnnDelta(spark, sf)
+    val marker = new java.io.File(s"$delta/_DONE")
     assert(marker.exists(), "atomic publish must leave the _DONE marker")
     val stamp = marker.lastModified()
     val second = SparkEntry.queries("ann_upsert")(spark, sf).collect().toSeq
     assert(second == first, "re-invocation changed the declared output")
-    // the published delta was REUSED, not rebuilt — the round-6 advice:
-    // a query evaluation must not overwrite shared state as a side
-    // effect, or a concurrent reader can observe partial directories
+    // the published delta was REUSED, not rebuilt: a query evaluation
+    // must not overwrite shared state as a side effect, or a concurrent
+    // reader can observe partial directories
     assert(marker.lastModified() == stamp,
       "re-invocation rewrote the delta instead of reusing it")
   }
